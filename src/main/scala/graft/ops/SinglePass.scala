@@ -36,6 +36,25 @@ import graft.plans.SinglePassAggNode
   */
 object SinglePass {
 
+  private val MaxEntriesVar = "SPARK_GRAFT_SINGLEPASS_MAX_ENTRIES"
+
+  /** Parse the per-task entry cap: unset → 1<<26; anything but a positive
+    * integer fails with an error that names the variable. */
+  private[graft] def parseMaxEntries(raw: Option[String]): Int = raw match {
+    case None => 1 << 26
+    case Some(s) => s.trim.toIntOption match {
+      case Some(v) if v > 0 => v
+      case _ => throw new IllegalArgumentException(
+        s"$MaxEntriesVar must be a positive integer, got '$s'")
+    }
+  }
+
+  /** Read on first use (each executor reads its own env), never inside an
+    * object initialiser, so a bad value fails as a plain
+    * IllegalArgumentException instead of an ExceptionInInitializerError. */
+  private lazy val envMaxEntries: Int = parseMaxEntries(sys.env.get(MaxEntriesVar))
+  private var maxEntriesOverride: Option[Int] = None
+
   /** Loud per-task entry cap (VERDICT r15 #3 — spill safety). The
     * two-phase HashAggregate these kernels replace would SORT-SPILL when a
     * partition's per-task state outgrew execution memory; the kernels hold
@@ -46,92 +65,60 @@ object SinglePass {
     * — ~50× the largest per-task load any timed tier produces (q16 k=1000:
     * ~450M distinct keys over a 32-wide pinned exchange ≈ 14M/task).
     * Deployments with coarser partitioning raise it via
-    * SPARK_GRAFT_SINGLEPASS_MAX_ENTRIES (each executor reads its own env).
-    * `var` so the cap-trip unit test can force it low in local mode. */
-  private[graft] var maxEntries: Int =
-    sys.env.get("SPARK_GRAFT_SINGLEPASS_MAX_ENTRIES").map(_.toInt)
-      .getOrElse(1 << 26)
-
-  @inline private def checkCap(n: Int, kernel: String): Unit =
-    if (n >= maxEntries) throw new IllegalStateException(
-      s"$kernel: per-task distinct-entry count reached $n >= cap $maxEntries " +
-        "— partition too large for in-memory single-pass aggregation; raise " +
-        "the exchange's partition count (AQE advisory size / pinned width) " +
-        "or raise SPARK_GRAFT_SINGLEPASS_MAX_ENTRIES")
+    * SPARK_GRAFT_SINGLEPASS_MAX_ENTRIES. Assignable so the cap-trip unit
+    * test can force it low in local mode. */
+  private[graft] def maxEntries: Int = maxEntriesOverride.getOrElse(envMaxEntries)
+  private[graft] def maxEntries_=(v: Int): Unit = maxEntriesOverride = Some(v)
 
   /** splitmix64 finalizer — q16's packed keys are highly structured
     * (gid*1e12 + suppkey); a raw mask would collide entire key ranges. */
-  @inline private def mix(x0: Long): Int = {
+  @inline private[graft] def mix(x0: Long): Int = {
     var x = x0
     x ^= x >>> 30; x *= 0xbf58476d1ce4e5b9L
     x ^= x >>> 27; x *= 0x94d049bb133111ebL
     (x ^ (x >>> 31)).toInt
   }
 
+  /** Decode a [[SlotTable.slot]] result: the slot index, fresh or not. */
+  @inline private def idx(r: Int): Int = r ^ (r >> 31)
+
+  private def row(vs: Any*): InternalRow = new GenericInternalRow(vs.toArray)
+
   private def attr(name: String, dt: DataType) =
     AttributeReference(name, dt, nullable = false)()
 
-  /** Minimal open-address long→long accumulator map (0 = empty-slot
-    * sentinel; callers shift 0-based keys +1). r15 shipped the per-key
-    * stats legs of distinctPairCountByKey / q95OrderStats /
-    * q21CulpritCounts as boxed `java.util.HashMap` — one `java.lang.Long`
-    * allocation (often two) per distinct key, pure GC pressure on the
-    * heavies (best_cust touches one entry per distinct (part, order)
-    * pair). Entry counts are bounded by the kernel's capped pair set, so
-    * no separate cap is needed here. */
-  private final class LongLongMap(initialCap: Int) {
-    private var cap = initialCap
-    private var mask = cap - 1
-    private var ks = new Array[Long](cap)
-    private var vs = new Array[Long](cap)
-    private var n = 0
-    private def grow(): Unit = {
-      val ok = ks; val ov = vs
-      cap <<= 2; mask = cap - 1
-      require(cap > 0, "LongLongMap.grow: hash table capacity overflow")
-      ks = new Array[Long](cap); vs = new Array[Long](cap)
-      var j = 0
-      while (j < ok.length) {
-        val k = ok(j)
-        if (k != 0L) {
-          var i = mix(k) & mask
-          while (ks(i) != 0L) i = (i + 1) & mask
-          ks(i) = k; vs(i) = ov(j)
-        }
-        j += 1
-      }
+  private def node(df: DataFrame, kernelName: String, out: Seq[(String, DataType)],
+      width: Option[Int] = None, keyPreserving: Boolean = false)(
+      kernel: Iterator[InternalRow] => Iterator[InternalRow]): DataFrame = {
+    val plan = Bridge.analyzedPlan(df)
+    Bridge.ofRows(df.sparkSession, SinglePassAggNode(
+      plan, Seq(plan.output.head), width, out.map { case (n, t) => attr(n, t) },
+      kernelName, kernel, keyPreserving))
+  }
+
+  /** Loud null / key-domain guards shared by the kernels. */
+  private def checkNulls(r: InternalRow, n: Int, kernel: String, what: String): Unit = {
+    var c = 0
+    while (c < n) {
+      if (r.isNullAt(c)) throw new IllegalStateException(s"$kernel: $what")
+      c += 1
     }
-    /** vs(k) += delta, inserting on first touch. k must be != 0. */
-    def add(k: Long, delta: Long): Unit = {
-      var i = mix(k) & mask
-      var done = false
-      while (!done) {
-        val s = ks(i)
-        if (s == k) { vs(i) += delta; done = true }
-        else if (s == 0L) {
-          ks(i) = k; vs(i) = delta; n += 1
-          if (n * 10L >= cap * 7L) grow()
-          done = true
-        } else i = (i + 1) & mask
-      }
-    }
-    def get(k: Long, absent: Long): Long = {
-      var i = mix(k) & mask
-      while (true) {
-        val s = ks(i)
-        if (s == k) return vs(i)
-        if (s == 0L) return absent
-        i = (i + 1) & mask
-      }
-      absent
-    }
-    def size: Int = n
-    /** Iterate occupied entries (unordered — downstream consumers are
-      * order-free aggregates/joins, same as HashMap iteration was). */
-    def entryIterator: Iterator[(Long, Long)] = {
-      val capF = cap; val ksF = ks; val vsF = vs
-      (0 until capF).iterator.filter(ksF(_) != 0L).map(i => (ksF(i), vsF(i)))
-    }
+  }
+
+  /** 0-based key shifted +1 (0 is the empty-slot sentinel); keys < 0 fail. */
+  private def shifted(k0: Long, kernel: String): Long = {
+    if (k0 < 0L) throw new IllegalStateException(s"$kernel: key $k0 — keys must be >= 0")
+    k0 + 1L
+  }
+
+  /** `(key+1) << 12 | yr` with yr ∈ [1, 4094]: always > 0, and the
+    * previous year's key is literally `packed − 1`. */
+  private def packYear(k0: Long, yr: Int, kernel: String, what: String): Long = {
+    if (k0 < 0L || k0 >= (1L << 51) - 1L) throw new IllegalStateException(
+      s"$kernel: $what $k0 outside packable domain [0, 2^51-1)")
+    if (yr < 1 || yr > 4094) throw new IllegalStateException(
+      s"$kernel: year $yr outside [1, 4094] — pack invariant violated")
+    (k0 + 1L) << 12 | yr.toLong
   }
 
   /** q16's dedup+rollup collapsed to one pass: distinct packed keys
@@ -150,52 +137,19 @@ object SinglePass {
     require(packed.schema.length == 1 &&
       packed.schema.head.dataType == LongType,
       s"distinctCountByGid expects one LongType column, got ${packed.schema}")
-    val plan = Bridge.analyzedPlan(packed)
-    val kernel = (it: Iterator[InternalRow]) => {
-      var cap = 1 << 17 // ~1 MB; grows x4 toward the ~600k-entry steady size
-      var mask = cap - 1
-      var slots = new Array[Long](cap)
-      var n = 0
-      def grow(): Unit = {
-        val old = slots
-        cap <<= 2; mask = cap - 1
-        require(cap > 0, "SinglePass.grow: hash table capacity overflow")
-        slots = new Array[Long](cap)
-        var j = 0
-        while (j < old.length) {
-          val key = old(j)
-          if (key != 0L) {
-            var i = mix(key) & mask
-            while (slots(i) != 0L) i = (i + 1) & mask
-            slots(i) = key
-          }
-          j += 1
-        }
-      }
+    val name = "distinctCountByGid"
+    node(packed, name, Seq("gid" -> IntegerType, "cnt" -> LongType), Some(width)) { it =>
+      // ~1 MB; grows x4 toward the ~600k-entry steady size
+      val seen = new SlotTable(name, 1 << 17)
       var counts = new Array[Long](1024)
       var maxGid = -1
       while (it.hasNext) {
-        val row = it.next()
-        if (row.isNullAt(0)) throw new IllegalStateException(
-          "distinctCountByGid: null packed key — pack invariant violated")
-        val gk = row.getLong(0)
+        val r = it.next()
+        checkNulls(r, 1, name, "null packed key — pack invariant violated")
+        val gk = r.getLong(0)
         if (gk <= 0L) throw new IllegalStateException(
-          s"distinctCountByGid: key $gk — pack invariant requires keys > 0")
-        // open-addressing add; 0 = empty sentinel (keys are > 0)
-        var i = mix(gk) & mask
-        var fresh = false
-        var done = false
-        while (!done) {
-          val s = slots(i)
-          if (s == gk) done = true
-          else if (s == 0L) {
-            slots(i) = gk; n += 1; fresh = true
-            checkCap(n, "distinctCountByGid")
-            if (n * 10L >= cap * 7L) grow() // 0.7 load factor
-            done = true
-          } else i = (i + 1) & mask
-        }
-        if (fresh) {
+          s"$name: key $gk — pack invariant requires keys > 0")
+        if (seen.slot(gk) < 0) {
           val gid = (gk / packBase).toInt
           if (gid >= counts.length) {
             val bigger = new Array[Long](java.lang.Integer.highestOneBit(gid) << 1)
@@ -206,15 +160,9 @@ object SinglePass {
           if (gid > maxGid) maxGid = gid
         }
       }
-      val cF = counts; val mG = maxGid
-      (0 to mG).iterator.filter(cF(_) > 0L).map { gid =>
-        new GenericInternalRow(Array[Any](gid, cF(gid))): InternalRow
-      }
+      val cF = counts
+      (0 to maxGid).iterator.filter(cF(_) > 0L).map(gid => row(gid, cF(gid)))
     }
-    Bridge.ofRows(packed.sparkSession, SinglePassAggNode(
-      plan, Seq(plan.output.head), Some(width),
-      Seq(attr("gid", IntegerType), attr("cnt", LongType)),
-      "distinctCountByGid", kernel))
   }
 
   /** q18's per-key rollup collapsed to one pass: sum an integer value per
@@ -230,63 +178,18 @@ object SinglePass {
     require(df.schema.length == 2 &&
       df.schema(0).dataType == LongType && df.schema(1).dataType == IntegerType,
       s"sumIntByKeyFiltered expects (LongType, IntegerType), got ${df.schema}")
-    val plan = Bridge.analyzedPlan(df)
-    val kernel = (it: Iterator[InternalRow]) => {
-      var cap = 1 << 17
-      var mask = cap - 1
-      var keys = new Array[Long](cap)
-      var sums = new Array[Long](cap)
-      var n = 0
-      def grow(): Unit = {
-        val ok = keys; val os = sums
-        cap <<= 2; mask = cap - 1
-        require(cap > 0, "SinglePass.grow: hash table capacity overflow")
-        keys = new Array[Long](cap); sums = new Array[Long](cap)
-        var j = 0
-        while (j < ok.length) {
-          val k = ok(j)
-          if (k != 0L) {
-            var i = mix(k) & mask
-            while (keys(i) != 0L) i = (i + 1) & mask
-            keys(i) = k; sums(i) = os(j)
-          }
-          j += 1
-        }
-      }
+    val name = "sumIntByKeyFiltered"
+    node(df, name, Seq(keyName -> LongType, totalName -> DoubleType)) { it =>
+      val t = new SlotTable(name, 1 << 17, longCols = 1)
       while (it.hasNext) {
-        val row = it.next()
-        if (row.isNullAt(0) || row.isNullAt(1)) throw new IllegalStateException(
-          "sumIntByKeyFiltered: null key/value — fixture contract violated")
-        val k0 = row.getLong(0)
-        if (k0 < 0L) throw new IllegalStateException(
-          s"sumIntByKeyFiltered: key $k0 — keys must be >= 0")
-        val k = k0 + 1L // slot sentinel is 0; fixture keys are 0-based
-        val v = row.getInt(1).toLong
-        var i = mix(k) & mask
-        var done = false
-        while (!done) {
-          val s = keys(i)
-          if (s == k) { sums(i) += v; done = true }
-          else if (s == 0L) {
-            keys(i) = k; sums(i) = v; n += 1
-            checkCap(n, "sumIntByKeyFiltered")
-            if (n * 10L >= cap * 7L) grow()
-            done = true
-          } else i = (i + 1) & mask
-        }
+        val r = it.next()
+        checkNulls(r, 2, name, "null key/value — fixture contract violated")
+        val i = idx(t.slot(shifted(r.getLong(0), name)))
+        t.longs(0)(i) += r.getInt(1).toLong
       }
-      val capF = cap; val keysF = keys; val sumsF = sums; val t = minTotal
-      (0 until capF).iterator
-        .filter(i => keysF(i) != 0L && sumsF(i) > t)
-        .map { i =>
-          new GenericInternalRow(
-            Array[Any](keysF(i) - 1L, sumsF(i).toDouble)): InternalRow
-        }
+      t.slots.filter(t.longs(0)(_) > minTotal)
+        .map(i => row(t.key(i) - 1L, t.longs(0)(i).toDouble))
     }
-    Bridge.ofRows(df.sparkSession, SinglePassAggNode(
-      plan, Seq(plan.output.head), None,
-      Seq(attr(keyName, LongType), attr(totalName, DoubleType)),
-      "sumIntByKeyFiltered", kernel))
   }
 
   /** Generic per-key double sum in one pass: `(key long, val double)` →
@@ -304,62 +207,17 @@ object SinglePass {
     require(df.schema.length == 2 &&
       df.schema(0).dataType == LongType && df.schema(1).dataType == DoubleType,
       s"sumDoubleByKey expects (LongType, DoubleType), got ${df.schema}")
-    val plan = Bridge.analyzedPlan(df)
-    val kernel = (it: Iterator[InternalRow]) => {
-      var cap = 1 << 17
-      var mask = cap - 1
-      var keys = new Array[Long](cap)
-      var sums = new Array[Double](cap)
-      var n = 0
-      def grow(): Unit = {
-        val ok = keys; val os = sums
-        cap <<= 2; mask = cap - 1
-        require(cap > 0, "SinglePass.grow: hash table capacity overflow")
-        keys = new Array[Long](cap); sums = new Array[Double](cap)
-        var j = 0
-        while (j < ok.length) {
-          val k = ok(j)
-          if (k != 0L) {
-            var i = mix(k) & mask
-            while (keys(i) != 0L) i = (i + 1) & mask
-            keys(i) = k; sums(i) = os(j)
-          }
-          j += 1
-        }
-      }
+    val name = "sumDoubleByKey"
+    node(df, name, Seq(keyName -> LongType, sumName -> DoubleType)) { it =>
+      val t = new SlotTable(name, 1 << 17, doubleCols = 1)
       while (it.hasNext) {
-        val row = it.next()
-        if (row.isNullAt(0) || row.isNullAt(1)) throw new IllegalStateException(
-          "sumDoubleByKey: null key/value — caller contract violated")
-        val k0 = row.getLong(0)
-        if (k0 < 0L) throw new IllegalStateException(
-          s"sumDoubleByKey: key $k0 — keys must be >= 0")
-        val k = k0 + 1L // slot sentinel is 0; keys may be 0-based
-        val v = row.getDouble(1)
-        var i = mix(k) & mask
-        var done = false
-        while (!done) {
-          val s = keys(i)
-          if (s == k) { sums(i) += v; done = true }
-          else if (s == 0L) {
-            keys(i) = k; sums(i) = v; n += 1
-            checkCap(n, "sumDoubleByKey")
-            if (n * 10L >= cap * 7L) grow()
-            done = true
-          } else i = (i + 1) & mask
-        }
+        val r = it.next()
+        checkNulls(r, 2, name, "null key/value — caller contract violated")
+        val i = idx(t.slot(shifted(r.getLong(0), name)))
+        t.doubles(0)(i) += r.getDouble(1)
       }
-      val capF = cap; val keysF = keys; val sumsF = sums
-      (0 until capF).iterator
-        .filter(i => keysF(i) != 0L)
-        .map { i =>
-          new GenericInternalRow(Array[Any](keysF(i) - 1L, sumsF(i))): InternalRow
-        }
+      t.slots.map(i => row(t.key(i) - 1L, t.doubles(0)(i)))
     }
-    Bridge.ofRows(df.sparkSession, SinglePassAggNode(
-      plan, Seq(plan.output.head), None,
-      Seq(attr(keyName, LongType), attr(sumName, DoubleType)),
-      "sumDoubleByKey", kernel))
   }
 
   /** Distinct (k1, k2) pairs counted per k1 in one pass, clustered by k1
@@ -370,72 +228,30 @@ object SinglePass {
     * yet wraps every row in a per-key set object, and past the sort-based
     * fallback threshold every map task silently becomes a SORT of its
     * whole input. This kernel exchanges raw 16-byte pairs instead and
-    * counts first-seen pairs per k1 with two primitive open-address maps
-    * — no objects, no sort, one pass. Emits `(keyName long, cntName
-    * long)` — one row per distinct k1 per task (k1-clustered, so globally
-    * one row per k1). Keys must be ≥ 0 (0-based fixture keys; stored
-    * shifted). */
+    * counts first-seen pairs per k1 with two primitive slot tables — no
+    * objects, no sort, one pass. Emits `(keyName long, cntName long)` —
+    * one row per distinct k1 per task (k1-clustered, so globally one row
+    * per k1). Keys must be ≥ 0 (0-based fixture keys; stored shifted). */
   def distinctPairCountByKey(df: DataFrame,
       keyName: String, cntName: String): DataFrame = {
     require(df.schema.length == 2 &&
       df.schema(0).dataType == LongType && df.schema(1).dataType == LongType,
       s"distinctPairCountByKey expects (LongType, LongType), got ${df.schema}")
-    val plan = Bridge.analyzedPlan(df)
-    val kernel = (it: Iterator[InternalRow]) => {
-      // pair set (k1+1, k2) — parallel arrays, 0-in-first = empty slot
-      var cap = 1 << 17
-      var mask = cap - 1
-      var a1 = new Array[Long](cap)
-      var a2 = new Array[Long](cap)
-      var n = 0
-      def grow(): Unit = {
-        val o1 = a1; val o2 = a2
-        cap <<= 2; mask = cap - 1
-        require(cap > 0, "SinglePass.grow: hash table capacity overflow")
-        a1 = new Array[Long](cap); a2 = new Array[Long](cap)
-        var j = 0
-        while (j < o1.length) {
-          if (o1(j) != 0L) {
-            var i = mix(o1(j) * 0x9e3779b97f4a7c15L + o2(j)) & mask
-            while (a1(i) != 0L) i = (i + 1) & mask
-            a1(i) = o1(j); a2(i) = o2(j)
-          }
-          j += 1
-        }
-      }
-      // k1 -> distinct-pair count (primitive map — r16, VERDICT r15 #5:
-      // the boxed HashMap allocated a Long per distinct pair)
-      val counts = new LongLongMap(1 << 16)
+    val name = "distinctPairCountByKey"
+    node(df, name, Seq(keyName -> LongType, cntName -> LongType)) { it =>
+      val pairs = new SlotTable(name, 1 << 17, pairKeys = true)
+      val counts = new SlotTable(name, 1 << 16, longCols = 1)
       while (it.hasNext) {
-        val row = it.next()
-        if (row.isNullAt(0) || row.isNullAt(1)) throw new IllegalStateException(
-          "distinctPairCountByKey: null key — caller contract violated")
-        val k0 = row.getLong(0)
-        if (k0 < 0L) throw new IllegalStateException(
-          s"distinctPairCountByKey: key $k0 — keys must be >= 0")
-        val k1 = k0 + 1L
-        val k2 = row.getLong(1)
-        var i = mix(k1 * 0x9e3779b97f4a7c15L + k2) & mask
-        var done = false
-        while (!done) {
-          if (a1(i) == k1 && a2(i) == k2) done = true
-          else if (a1(i) == 0L) {
-            a1(i) = k1; a2(i) = k2; n += 1
-            checkCap(n, "distinctPairCountByKey")
-            if (n * 10L >= cap * 7L) grow()
-            counts.add(k1, 1L)
-            done = true
-          } else i = (i + 1) & mask
+        val r = it.next()
+        checkNulls(r, 2, name, "null key — caller contract violated")
+        val k1 = shifted(r.getLong(0), name)
+        if (pairs.slot(k1, r.getLong(1)) < 0) {
+          val ci = idx(counts.slot(k1))
+          counts.longs(0)(ci) += 1L
         }
       }
-      counts.entryIterator.map { case (k, c) =>
-        new GenericInternalRow(Array[Any](k - 1L, c)): InternalRow
-      }
+      counts.slots.map(i => row(counts.key(i) - 1L, counts.longs(0)(i)))
     }
-    Bridge.ofRows(df.sparkSession, SinglePassAggNode(
-      plan, Seq(plan.output.head), None,
-      Seq(attr(keyName, LongType), attr(cntName, LongType)),
-      "distinctPairCountByKey", kernel))
   }
 
   /** multi_supp's per-order rollup in one pass: for rows
@@ -454,112 +270,25 @@ object SinglePass {
       df.schema(0).dataType == LongType && df.schema(1).dataType == LongType &&
       df.schema(2).dataType == IntegerType && df.schema(3).dataType == LongType,
       s"q95OrderStats expects (Long, Long, Int, Long), got ${df.schema}")
-    val plan = Bridge.analyzedPlan(df)
-    val kernel = (it: Iterator[InternalRow]) => {
-      // pair set (lk+1, ls): distinct suppliers per order
-      var cap = 1 << 17
-      var mask = cap - 1
-      var a1 = new Array[Long](cap)
-      var a2 = new Array[Long](cap)
-      var n = 0
-      def grow(): Unit = {
-        val o1 = a1; val o2 = a2
-        cap <<= 2; mask = cap - 1
-        require(cap > 0, "SinglePass.grow: hash table capacity overflow")
-        a1 = new Array[Long](cap); a2 = new Array[Long](cap)
-        var j = 0
-        while (j < o1.length) {
-          if (o1(j) != 0L) {
-            var i = mix(o1(j) * 0x9e3779b97f4a7c15L + o2(j)) & mask
-            while (a1(i) != 0L) i = (i + 1) & mask
-            a1(i) = o1(j); a2(i) = o2(j)
-          }
-          j += 1
-        }
-      }
-      // lk -> (ns, hr, rev) — parallel primitive arrays (r16, VERDICT r15
-      // #5: was a boxed HashMap holding a fresh Array[Long](3) per order)
-      var sCap = 1 << 16
-      var sMask = sCap - 1
-      var sk = new Array[Long](sCap)
-      var sNs = new Array[Long](sCap)
-      var sHr = new Array[Long](sCap)
-      var sRev = new Array[Long](sCap)
-      var sN = 0
-      def sGrow(): Unit = {
-        val ok = sk; val oNs = sNs; val oHr = sHr; val oRev = sRev
-        sCap <<= 2; sMask = sCap - 1
-        require(sCap > 0, "q95OrderStats.sGrow: hash table capacity overflow")
-        sk = new Array[Long](sCap); sNs = new Array[Long](sCap)
-        sHr = new Array[Long](sCap); sRev = new Array[Long](sCap)
-        var j = 0
-        while (j < ok.length) {
-          val k = ok(j)
-          if (k != 0L) {
-            var i = mix(k) & sMask
-            while (sk(i) != 0L) i = (i + 1) & sMask
-            sk(i) = k; sNs(i) = oNs(j); sHr(i) = oHr(j); sRev(i) = oRev(j)
-          }
-          j += 1
-        }
-      }
-      // slot index for key k (nonzero), inserting an empty entry on first
-      // touch; grows BEFORE insertion so the returned index stays valid
-      def sIdx(k: Long): Int = {
-        var i = mix(k) & sMask
-        while (true) {
-          val s = sk(i)
-          if (s == k) return i
-          if (s == 0L) {
-            if ((sN + 1) * 10L >= sCap * 7L) { sGrow(); return sIdx(k) }
-            sk(i) = k; sN += 1
-            return i
-          }
-          i = (i + 1) & sMask
-        }
-        -1
-      }
+    val name = "q95OrderStats"
+    node(df, name, Seq(keyName -> LongType, revName -> LongType)) { it =>
+      // (lk+1, ls) pair set: distinct suppliers per order
+      val pairs = new SlotTable(name, 1 << 17, pairKeys = true)
+      // lk+1 -> (distinct suppliers, any-returned flag, revenue)
+      val stats = new SlotTable(name, 1 << 16, longCols = 3)
       while (it.hasNext) {
-        val row = it.next()
-        if (row.isNullAt(0) || row.isNullAt(1) || row.isNullAt(2) || row.isNullAt(3))
-          throw new IllegalStateException(
-            "q95OrderStats: null input — caller contract violated")
-        val lk0 = row.getLong(0)
-        if (lk0 < 0L) throw new IllegalStateException(
-          s"q95OrderStats: key $lk0 — keys must be >= 0")
-        val lk = lk0 + 1L
-        val ls = row.getLong(1)
-        val isR = row.getInt(2)
-        val rev = row.getLong(3)
-        val si = sIdx(lk)
-        sHr(si) |= isR.toLong
-        sRev(si) += rev
-        var i = mix(lk * 0x9e3779b97f4a7c15L + ls) & mask
-        var done = false
-        while (!done) {
-          if (a1(i) == lk && a2(i) == ls) done = true
-          else if (a1(i) == 0L) {
-            a1(i) = lk; a2(i) = ls; n += 1
-            checkCap(n, "q95OrderStats")
-            if (n * 10L >= cap * 7L) grow()
-            sNs(si) += 1L
-            done = true
-          } else i = (i + 1) & mask
-        }
+        val r = it.next()
+        checkNulls(r, 4, name, "null input — caller contract violated")
+        val lk = shifted(r.getLong(0), name)
+        val si = idx(stats.slot(lk))
+        stats.longs(1)(si) |= r.getInt(2).toLong
+        stats.longs(2)(si) += r.getLong(3)
+        if (pairs.slot(lk, r.getLong(1)) < 0) stats.longs(0)(si) += 1L
       }
-      val md = minDistinct.toLong
-      val sCapF = sCap; val skF = sk
-      val sNsF = sNs; val sHrF = sHr; val sRevF = sRev
-      (0 until sCapF).iterator
-        .filter(i => skF(i) != 0L && sNsF(i) >= md && sHrF(i) == 1L)
-        .map { i =>
-          new GenericInternalRow(Array[Any](skF(i) - 1L, sRevF(i))): InternalRow
-        }
+      stats.slots
+        .filter(i => stats.longs(0)(i) >= minDistinct && stats.longs(1)(i) == 1L)
+        .map(i => row(stats.key(i) - 1L, stats.longs(2)(i)))
     }
-    Bridge.ofRows(df.sparkSession, SinglePassAggNode(
-      plan, Seq(plan.output.head), None,
-      Seq(attr(keyName, LongType), attr(revName, LongType)),
-      "q95OrderStats", kernel))
   }
 
   /** q21's pair-rollup + per-order window + culprit filter collapsed to
@@ -578,7 +307,7 @@ object SinglePass {
     * — folds into per-supplier partial counts `(ls, cnt)`, so each task
     * emits ≤|its culprit suppliers| rows instead of every culprit pair.
     * Downstream: `groupBy(ls).sum(cnt)` = numwait, then the supplier
-    * join. Per-task state is two open maps over the partition's pairs —
+    * join. Per-task state is slot tables over the partition's pairs —
     * same order of footprint as the hash-aggregate + sort buffers it
     * replaces, sized by AQE's advisory partitioning. */
   def q21CulpritCounts(df: DataFrame): DataFrame = {
@@ -586,86 +315,36 @@ object SinglePass {
       df.schema(0).dataType == LongType && df.schema(1).dataType == LongType &&
       df.schema(2).dataType == IntegerType,
       s"q21CulpritCounts expects (LongType, LongType, IntegerType), got ${df.schema}")
-    val plan = Bridge.analyzedPlan(df)
-    val kernel = (it: Iterator[InternalRow]) => {
-      // (lk, ls) -> flags (bit0 = some line late, bit1 = some line
-      // on time); lk = 0 marks an empty slot (0-based fixture keys are
-      // stored shifted +1, matching the lk0 + 1 below)
-      var cap = 1 << 17
-      var mask = cap - 1
-      var kLk = new Array[Long](cap)
-      var kLs = new Array[Long](cap)
-      var fl = new Array[Byte](cap)
-      var n = 0
-      def grow(): Unit = {
-        val oLk = kLk; val oLs = kLs; val oF = fl
-        cap <<= 2; mask = cap - 1
-        require(cap > 0, "SinglePass.grow: hash table capacity overflow")
-        kLk = new Array[Long](cap); kLs = new Array[Long](cap)
-        fl = new Array[Byte](cap)
-        var j = 0
-        while (j < oLk.length) {
-          if (oLk(j) != 0L) {
-            var i = mix(oLk(j) * 0x9e3779b97f4a7c15L + oLs(j)) & mask
-            while (kLk(i) != 0L) i = (i + 1) & mask
-            kLk(i) = oLk(j); kLs(i) = oLs(j); fl(i) = oF(j)
-          }
-          j += 1
-        }
-      }
+    val name = "q21CulpritCounts"
+    node(df, name, Seq("ls" -> LongType, "cnt" -> LongType)) { it =>
+      // (lk+1, ls) -> flags (bit0 = some line late, bit1 = some line on time)
+      val pairs = new SlotTable(name, 1 << 17, pairKeys = true, byteCols = 1)
       while (it.hasNext) {
-        val row = it.next()
-        if (row.isNullAt(0) || row.isNullAt(1) || row.isNullAt(2))
-          throw new IllegalStateException(
-            "q21CulpritCounts: null key/flag — join output contract violated")
-        val lk0 = row.getLong(0)
-        if (lk0 < 0L) throw new IllegalStateException(
-          s"q21CulpritCounts: key $lk0 — keys must be >= 0")
-        val lk = lk0 + 1L // slot sentinel is 0; fixture keys are 0-based
-        val ls = row.getLong(1)
-        val bit = if (row.getInt(2) == 1) 1 else 2 // late : on time
-        var i = mix(lk * 0x9e3779b97f4a7c15L + ls) & mask
-        var done = false
-        while (!done) {
-          if (kLk(i) == lk && kLs(i) == ls) {
-            fl(i) = (fl(i) | bit).toByte; done = true
-          } else if (kLk(i) == 0L) {
-            kLk(i) = lk; kLs(i) = ls; fl(i) = bit.toByte; n += 1
-            checkCap(n, "q21CulpritCounts")
-            if (n * 10L >= cap * 7L) grow()
-            done = true
-          } else i = (i + 1) & mask
+        val r = it.next()
+        checkNulls(r, 3, name, "null key/flag — join output contract violated")
+        val i = idx(pairs.slot(shifted(r.getLong(0), name), r.getLong(1)))
+        pairs.bytes(0)(i) = (pairs.bytes(0)(i) | (if (r.getInt(2) == 1) 1 else 2)).toByte
+      }
+      val flags = pairs.bytes(0)
+      // per-lk on-time supplier count over the DEDUPED pairs
+      val ontime = new SlotTable(name, 1 << 16, longCols = 1)
+      pairs.slots.filter(j => (flags(j) & 2) != 0).foreach { j =>
+        val oi = idx(ontime.slot(pairs.key(j)))
+        ontime.longs(0)(oi) += 1L
+      }
+      // culprit pairs folded to per-supplier partial counts (ls stored +1)
+      val bySupp = new SlotTable(name, 1 << 12, longCols = 1)
+      pairs.slots.filter(j => (flags(j) & 1) != 0).foreach { j =>
+        val o = ontime.find(pairs.key(j))
+        val tot = if (o < 0) 0L else ontime.longs(0)(o)
+        val others = tot - (if ((flags(j) & 2) != 0) 1L else 0L)
+        if (others > 0) {
+          val si = idx(bySupp.slot(pairs.key2(j) + 1L))
+          bySupp.longs(0)(si) += 1L
         }
       }
-      // per-lk on-time supplier count over the DEDUPED pairs (primitive
-      // maps — r16, VERDICT r15 #5: were boxed HashMaps; lk is already
-      // stored shifted +1 so nonzero, ls shifts +1 here)
-      val ontime = new LongLongMap(1 << 16)
-      var j = 0
-      while (j < cap) {
-        if (kLk(j) != 0L && (fl(j) & 2) != 0)
-          ontime.add(kLk(j), 1L)
-        j += 1
-      }
-      // culprit pairs folded to per-supplier partial counts
-      val bySupp = new LongLongMap(1 << 12)
-      j = 0
-      while (j < cap) {
-        if (kLk(j) != 0L && (fl(j) & 1) != 0) {
-          val tot = ontime.get(kLk(j), 0L)
-          val others = tot - (if ((fl(j) & 2) != 0) 1L else 0L)
-          if (others > 0) bySupp.add(kLs(j) + 1L, 1L)
-        }
-        j += 1
-      }
-      bySupp.entryIterator.map { case (k, c) =>
-        new GenericInternalRow(Array[Any](k - 1L, c)): InternalRow
-      }
+      bySupp.slots.map(i => row(bySupp.key(i) - 1L, bySupp.longs(0)(i)))
     }
-    Bridge.ofRows(df.sparkSession, SinglePassAggNode(
-      plan, Seq(plan.output.head), None,
-      Seq(attr("ls", LongType), attr("cnt", LongType)),
-      "q21CulpritCounts", kernel))
   }
 
   /** priceChain's per-(part, year) unit-price rollup + consecutive-year
@@ -698,95 +377,28 @@ object SinglePass {
       df.schema(0).dataType == LongType && df.schema(1).dataType == IntegerType &&
       df.schema(2).dataType == IntegerType && df.schema(3).dataType == IntegerType,
       s"priceDropPairs expects (Long, Int, Int, Int), got ${df.schema}")
-    val plan = Bridge.analyzedPlan(df)
-    val ratio = dropRatio
-    val kernel = (it: Iterator[InternalRow]) => {
-      var cap = 1 << 17
-      var mask = cap - 1
-      var keys = new Array[Long](cap)   // (pk+1)<<12 | yr; 0 = empty
-      var ps = new Array[Long](cap)     // exact cents sum
-      var qs = new Array[Long](cap)     // exact integral quantity sum
-      var n = 0
-      def grow(): Unit = {
-        val ok = keys; val op = ps; val oq = qs
-        cap <<= 2; mask = cap - 1
-        require(cap > 0, "SinglePass.grow: hash table capacity overflow")
-        keys = new Array[Long](cap); ps = new Array[Long](cap)
-        qs = new Array[Long](cap)
-        var j = 0
-        while (j < ok.length) {
-          val k = ok(j)
-          if (k != 0L) {
-            var i = mix(k) & mask
-            while (keys(i) != 0L) i = (i + 1) & mask
-            keys(i) = k; ps(i) = op(j); qs(i) = oq(j)
-          }
-          j += 1
-        }
-      }
+    val name = "priceDropPairs"
+    node(df, name, Seq("l_partkey" -> LongType, "yr" -> IntegerType),
+        keyPreserving = true) { it =>
+      // (pk+1)<<12 | yr -> (exact cents sum, exact integral quantity sum)
+      val t = new SlotTable(name, 1 << 17, longCols = 2)
       while (it.hasNext) {
-        val row = it.next()
-        if (row.isNullAt(0) || row.isNullAt(1) || row.isNullAt(2) || row.isNullAt(3))
-          throw new IllegalStateException(
-            "priceDropPairs: null input — caller contract violated")
-        val pk0 = row.getLong(0)
-        if (pk0 < 0L || pk0 >= (1L << 51) - 1L) throw new IllegalStateException(
-          s"priceDropPairs: partkey $pk0 outside packable domain [0, 2^51-1)")
-        val yr = row.getInt(1)
-        if (yr < 1 || yr > 4094) throw new IllegalStateException(
-          s"priceDropPairs: year $yr outside [1, 4094] — pack invariant violated")
-        val k = (pk0 + 1L) << 12 | yr.toLong
-        val p = row.getInt(2).toLong
-        val q = row.getInt(3).toLong
-        var i = mix(k) & mask
-        var done = false
-        while (!done) {
-          val s = keys(i)
-          if (s == k) { ps(i) += p; qs(i) += q; done = true }
-          else if (s == 0L) {
-            keys(i) = k; ps(i) = p; qs(i) = q; n += 1
-            checkCap(n, "priceDropPairs")
-            if (n * 10L >= cap * 7L) grow()
-            done = true
-          } else i = (i + 1) & mask
-        }
+        val r = it.next()
+        checkNulls(r, 4, name, "null input — caller contract violated")
+        val i = idx(t.slot(packYear(r.getLong(0), r.getInt(1), name, "partkey")))
+        t.longs(0)(i) += r.getInt(2).toLong
+        t.longs(1)(i) += r.getInt(3).toLong
       }
       // drop pass: for each (pk, yr) entry the previous year's slot is
       // key-1; a yr=1 probe targets yr=0 which is never inserted (guard),
       // so it misses — exactly the inner self-join's semantics
-      val capF = cap; val maskF = mask
-      val keysF = keys; val psF = ps; val qsF = qs
-      def probe(k: Long): Int = {
-        var i = mix(k) & maskF
-        while (true) {
-          val s = keysF(i)
-          if (s == k) return i
-          if (s == 0L) return -1
-          i = (i + 1) & maskF
-        }
-        -1
-      }
-      (0 until capF).iterator.flatMap { j =>
-        val k = keysF(j)
-        if (k == 0L) Iterator.empty
-        else {
-          val pi = probe(k - 1L)
-          if (pi < 0) Iterator.empty
-          else {
-            val cur = (psF(j).toDouble / 100.0) / qsF(j).toDouble
-            val prev = (psF(pi).toDouble / 100.0) / qsF(pi).toDouble
-            if (cur < prev * ratio)
-              Iterator.single(new GenericInternalRow(
-                Array[Any]((k >> 12) - 1L, (k & 0xfffL).toInt)): InternalRow)
-            else Iterator.empty
-          }
-        }
-      }
+      val ps = t.longs(0); val qs = t.longs(1)
+      def price(i: Int) = (ps(i).toDouble / 100.0) / qs(i).toDouble
+      t.slots.filter { j =>
+        val pi = t.find(t.key(j) - 1L)
+        pi >= 0 && price(j) < price(pi) * dropRatio
+      }.map(j => row((t.key(j) >> 12) - 1L, (t.key(j) & 0xfffL).toInt))
     }
-    Bridge.ofRows(df.sparkSession, SinglePassAggNode(
-      plan, Seq(plan.output.head), None,
-      Seq(attr("l_partkey", LongType), attr("yr", IntegerType)),
-      "priceDropPairs", kernel, keyPreserving = true))
   }
 
   /** Per-key exact long sum in one pass: `(key long ≥ 0, v long)` →
@@ -805,62 +417,18 @@ object SinglePass {
     require(df.schema.length == 2 &&
       df.schema(0).dataType == LongType && df.schema(1).dataType == LongType,
       s"sumLongByKey expects (LongType, LongType), got ${df.schema}")
-    val plan = Bridge.analyzedPlan(df)
-    val kernel = (it: Iterator[InternalRow]) => {
-      var cap = 1 << 17
-      var mask = cap - 1
-      var keys = new Array[Long](cap)
-      var sums = new Array[Long](cap)
-      var n = 0
-      def grow(): Unit = {
-        val ok = keys; val os = sums
-        cap <<= 2; mask = cap - 1
-        require(cap > 0, "SinglePass.grow: hash table capacity overflow")
-        keys = new Array[Long](cap); sums = new Array[Long](cap)
-        var j = 0
-        while (j < ok.length) {
-          val k = ok(j)
-          if (k != 0L) {
-            var i = mix(k) & mask
-            while (keys(i) != 0L) i = (i + 1) & mask
-            keys(i) = k; sums(i) = os(j)
-          }
-          j += 1
-        }
-      }
+    val name = "sumLongByKey"
+    node(df, name, Seq(keyName -> LongType, sumName -> LongType),
+        keyPreserving = true) { it =>
+      val t = new SlotTable(name, 1 << 17, longCols = 1)
       while (it.hasNext) {
-        val row = it.next()
-        if (row.isNullAt(0) || row.isNullAt(1)) throw new IllegalStateException(
-          "sumLongByKey: null key/value — caller contract violated")
-        val k0 = row.getLong(0)
-        if (k0 < 0L) throw new IllegalStateException(
-          s"sumLongByKey: key $k0 — keys must be >= 0")
-        val k = k0 + 1L // slot sentinel is 0; fixture keys are 0-based
-        val v = row.getLong(1)
-        var i = mix(k) & mask
-        var done = false
-        while (!done) {
-          val s = keys(i)
-          if (s == k) { sums(i) += v; done = true }
-          else if (s == 0L) {
-            keys(i) = k; sums(i) = v; n += 1
-            checkCap(n, "sumLongByKey")
-            if (n * 10L >= cap * 7L) grow()
-            done = true
-          } else i = (i + 1) & mask
-        }
+        val r = it.next()
+        checkNulls(r, 2, name, "null key/value — caller contract violated")
+        val i = idx(t.slot(shifted(r.getLong(0), name)))
+        t.longs(0)(i) += r.getLong(1)
       }
-      val capF = cap; val keysF = keys; val sumsF = sums
-      (0 until capF).iterator
-        .filter(i => keysF(i) != 0L)
-        .map { i =>
-          new GenericInternalRow(Array[Any](keysF(i) - 1L, sumsF(i))): InternalRow
-        }
+      t.slots.map(i => row(t.key(i) - 1L, t.longs(0)(i)))
     }
-    Bridge.ofRows(df.sparkSession, SinglePassAggNode(
-      plan, Seq(plan.output.head), None,
-      Seq(attr(keyName, LongType), attr(sumName, LongType)),
-      "sumLongByKey", kernel, keyPreserving = true))
   }
 
   /** threeChannelYoy's (custkey, year) channel merge + consecutive-year
@@ -872,9 +440,9 @@ object SinglePass {
     * per-customer boxed struct arrays, sort-based fallback under
     * pressure) + sort_array + explode + filter. One hash(ck) exchange of
     * the same raw rows feeds this kernel instead: per-(ck, yr) exact long
-    * sums in an open-address map (packed `(ck+1) << 12 | yr`, previous
-    * year = key−1, same invariants as [[priceDropPairs]]), then a local
-    * grower test per entry — `money4(net) > money4(pnet) * growth` and
+    * sums in a slot table (packed `(ck+1) << 12 | yr`, previous year =
+    * key−1, same invariants as [[priceDropPairs]]), then a local grower
+    * test per entry — `money4(net) > money4(pnet) * growth` and
     * `money4(pnet) > 0` with the identical IEEE op sequence — folded into
     * per-year partial accumulators. Emits `(yr int, n long, nets long,
     * osums long)` — ≤ |year domain| rows per task; downstream sums the
@@ -885,101 +453,146 @@ object SinglePass {
       df.schema(0).dataType == LongType && df.schema(1).dataType == IntegerType &&
       df.schema(2).dataType == LongType && df.schema(3).dataType == LongType,
       s"yoyGrowerStats expects (Long, Int, Long, Long), got ${df.schema}")
-    val plan = Bridge.analyzedPlan(df)
-    val g = growth
-    val kernel = (it: Iterator[InternalRow]) => {
-      var cap = 1 << 17
-      var mask = cap - 1
-      var keys = new Array[Long](cap)   // (ck+1)<<12 | yr; 0 = empty
-      var nets = new Array[Long](cap)   // exact scale-1e4 long sum
-      var osums = new Array[Long](cap)  // exact scale-1e2 long sum
-      var n = 0
-      def grow(): Unit = {
-        val ok = keys; val on = nets; val oo = osums
-        cap <<= 2; mask = cap - 1
-        require(cap > 0, "SinglePass.grow: hash table capacity overflow")
-        keys = new Array[Long](cap); nets = new Array[Long](cap)
-        osums = new Array[Long](cap)
-        var j = 0
-        while (j < ok.length) {
-          val k = ok(j)
-          if (k != 0L) {
-            var i = mix(k) & mask
-            while (keys(i) != 0L) i = (i + 1) & mask
-            keys(i) = k; nets(i) = on(j); osums(i) = oo(j)
-          }
-          j += 1
-        }
-      }
+    val name = "yoyGrowerStats"
+    node(df, name, Seq("yr" -> IntegerType, "n" -> LongType,
+        "nets" -> LongType, "osums" -> LongType)) { it =>
+      // (ck+1)<<12 | yr -> (exact scale-1e4 net sum, exact scale-1e2 osum)
+      val t = new SlotTable(name, 1 << 17, longCols = 2)
       while (it.hasNext) {
-        val row = it.next()
-        if (row.isNullAt(0) || row.isNullAt(1) || row.isNullAt(2) || row.isNullAt(3))
-          throw new IllegalStateException(
-            "yoyGrowerStats: null input — caller contract violated")
-        val ck0 = row.getLong(0)
-        if (ck0 < 0L || ck0 >= (1L << 51) - 1L) throw new IllegalStateException(
-          s"yoyGrowerStats: custkey $ck0 outside packable domain [0, 2^51-1)")
-        val yr = row.getInt(1)
-        if (yr < 1 || yr > 4094) throw new IllegalStateException(
-          s"yoyGrowerStats: year $yr outside [1, 4094] — pack invariant violated")
-        val k = (ck0 + 1L) << 12 | yr.toLong
-        val net = row.getLong(2)
-        val o = row.getLong(3)
-        var i = mix(k) & mask
-        var done = false
-        while (!done) {
-          val s = keys(i)
-          if (s == k) { nets(i) += net; osums(i) += o; done = true }
-          else if (s == 0L) {
-            keys(i) = k; nets(i) = net; osums(i) = o; n += 1
-            checkCap(n, "yoyGrowerStats")
-            if (n * 10L >= cap * 7L) grow()
-            done = true
-          } else i = (i + 1) & mask
-        }
+        val r = it.next()
+        checkNulls(r, 4, name, "null input — caller contract violated")
+        val i = idx(t.slot(packYear(r.getLong(0), r.getInt(1), name, "custkey")))
+        t.longs(0)(i) += r.getLong(2)
+        t.longs(1)(i) += r.getLong(3)
       }
       // grower pass: probe each entry's previous year (key-1) locally and
       // fold qualifying (ck, yr) rows into per-year partials
-      val capF = cap; val maskF = mask
-      val keysF = keys; val netsF = nets; val osumsF = osums
-      def probe(k: Long): Int = {
-        var i = mix(k) & maskF
-        while (true) {
-          val s = keysF(i)
-          if (s == k) return i
-          if (s == 0L) return -1
-          i = (i + 1) & maskF
-        }
-        -1
-      }
+      val nets = t.longs(0); val osums = t.longs(1)
       val ng = new Array[Long](4096)
       val netS = new Array[Long](4096)
       val osumS = new Array[Long](4096)
-      var j = 0
-      while (j < capF) {
-        val k = keysF(j)
-        if (k != 0L) {
-          val pi = probe(k - 1L)
-          if (pi >= 0) {
-            val netD = netsF(j).toDouble / 10000.0
-            val pnetD = netsF(pi).toDouble / 10000.0
-            if (netD > pnetD * g && pnetD > 0) {
-              val yr = (k & 0xfffL).toInt
-              ng(yr) += 1L; netS(yr) += netsF(j); osumS(yr) += osumsF(j)
-            }
+      t.slots.foreach { j =>
+        val pi = t.find(t.key(j) - 1L)
+        if (pi >= 0) {
+          val netD = nets(j).toDouble / 10000.0
+          val pnetD = nets(pi).toDouble / 10000.0
+          if (netD > pnetD * growth && pnetD > 0) {
+            val yr = (t.key(j) & 0xfffL).toInt
+            ng(yr) += 1L; netS(yr) += nets(j); osumS(yr) += osums(j)
           }
         }
-        j += 1
       }
-      (0 until 4096).iterator.filter(ng(_) > 0L).map { yr =>
-        new GenericInternalRow(
-          Array[Any](yr, ng(yr), netS(yr), osumS(yr))): InternalRow
-      }
+      (0 until 4096).iterator.filter(ng(_) > 0L)
+        .map(yr => row(yr, ng(yr), netS(yr), osumS(yr)))
     }
-    Bridge.ofRows(df.sparkSession, SinglePassAggNode(
-      plan, Seq(plan.output.head), None,
-      Seq(attr("yr", IntegerType), attr("n", LongType),
-        attr("nets", LongType), attr("osums", LongType)),
-      "yoyGrowerStats", kernel))
+  }
+}
+
+/** One open-address slot table under every [[SinglePass]] kernel: long
+  * keys (one column, or two for pair keys) with the value columns a
+  * kernel declares — longs (sums, counts, flag bits), doubles and bytes
+  * (flag bits) — in parallel primitive arrays, linear probing over a power-of-two
+  * capacity, splitmix64 hashing, 0.7 load factor and ×4 growth.
+  *
+  * The first key column uses 0 as the empty-slot sentinel, so callers
+  * shift or pack keys to be nonzero; a pair's second key is
+  * unrestricted. Slots are never deleted, so a fresh slot's values start
+  * at 0. Every insert counts against the loud per-task `maxEntries` cap.
+  * Value arrays are replaced by a grow: re-read `longs(c)` / `doubles(c)`
+  * / `bytes(c)` after each `slot` call. Bind the slot to a val first —
+  * `longs(0)(idx(slot(k))) += 1` reads `longs(0)` BEFORE `slot` runs, so
+  * the increment lands in the discarded array when that insert grows. */
+private[graft] final class SlotTable(kernel: String, initialCap: Int,
+    pairKeys: Boolean = false, longCols: Int = 0, doubleCols: Int = 0,
+    byteCols: Int = 0, maxEntries: Int = SinglePass.maxEntries) {
+  private var cap = initialCap
+  private var mask = cap - 1
+  private var k1 = new Array[Long](cap)
+  private var k2 = if (pairKeys) new Array[Long](cap) else null
+  private var lv = Array.fill(longCols)(new Array[Long](cap))
+  private var dv = Array.fill(doubleCols)(new Array[Double](cap))
+  private var bv = Array.fill(byteCols)(new Array[Byte](cap))
+  private var n = 0
+
+  def size: Int = n
+  def capacity: Int = cap
+  def key(i: Int): Long = k1(i)
+  def key2(i: Int): Long = k2(i)
+  def longs(c: Int): Array[Long] = lv(c)
+  def doubles(c: Int): Array[Double] = dv(c)
+  def bytes(c: Int): Array[Byte] = bv(c)
+
+  /** Slot of key `k`, inserted on first touch: `i` when the key was
+    * present, `~i` (negative) when this call inserted it. */
+  def slot(k: Long): Int = upsert(k, 0L)
+  def slot(a: Long, b: Long): Int = upsert(a, b)
+
+  /** Slot of a present single key, or −1. */
+  def find(k: Long): Int = { val r = probe(k, 0L); if (r < 0) -1 else r }
+
+  /** Occupied slot indices (unordered — every consumer is an order-free
+    * aggregate or join). */
+  def slots: Iterator[Int] = {
+    val ks = k1
+    Iterator.range(0, ks.length).filter(ks(_) != 0L)
+  }
+
+  /** The key's slot if present, else `~i` for the empty slot ending its
+    * probe run. */
+  private def probe(a: Long, b: Long): Int = {
+    val ks = k1; val ks2 = k2; val m = mask
+    var i = SinglePass.mix(if (ks2 == null) a else a * 0x9e3779b97f4a7c15L + b) & m
+    while (true) {
+      val s = ks(i)
+      if (s == 0L) return ~i
+      if (s == a && (ks2 == null || ks2(i) == b)) return i
+      i = (i + 1) & m
+    }
+    -1
+  }
+
+  private def upsert(a: Long, b: Long): Int = {
+    val r = probe(a, b)
+    if (r >= 0) return r
+    val i = ~r
+    k1(i) = a
+    if (k2 != null) k2(i) = b
+    n += 1
+    checkCap()
+    if (n * 10L >= cap * 7L) { grow(); ~probe(a, b) } else r
+  }
+
+  private def checkCap(): Unit =
+    if (n >= maxEntries) throw new IllegalStateException(
+      s"$kernel: per-task distinct-entry count reached $n >= cap $maxEntries " +
+        "— partition too large for in-memory single-pass aggregation; raise " +
+        "the exchange's partition count (AQE advisory size / pinned width) " +
+        "or raise SPARK_GRAFT_SINGLEPASS_MAX_ENTRIES")
+
+  /** ×4 and rehash keys and values in one loop. */
+  private def grow(): Unit = {
+    val o1 = k1; val o2 = k2; val ol = lv; val od = dv; val ob = bv
+    cap <<= 2; mask = cap - 1
+    require(cap > 0, s"$kernel: hash table capacity overflow")
+    k1 = new Array[Long](cap)
+    if (o2 != null) k2 = new Array[Long](cap)
+    lv = Array.fill(ol.length)(new Array[Long](cap))
+    dv = Array.fill(od.length)(new Array[Double](cap))
+    bv = Array.fill(ob.length)(new Array[Byte](cap))
+    var j = 0
+    while (j < o1.length) {
+      if (o1(j) != 0L) {
+        val i = ~probe(o1(j), if (o2 == null) 0L else o2(j))
+        k1(i) = o1(j)
+        if (o2 != null) k2(i) = o2(j)
+        var c = 0
+        while (c < ol.length) { lv(c)(i) = ol(c)(j); c += 1 }
+        c = 0
+        while (c < od.length) { dv(c)(i) = od(c)(j); c += 1 }
+        c = 0
+        while (c < ob.length) { bv(c)(i) = ob(c)(j); c += 1 }
+      }
+      j += 1
+    }
   }
 }

@@ -637,22 +637,14 @@ object Tpcds {
     // fallback threshold (spark.sql.objectHashAggregate.sortBased.
     // fallbackThreshold, default 128 keys), every map task silently SORTS
     // its whole input. The single-pass kernel exchanges raw 28-byte rows
-    // and computes ns/hr/rev with primitive open maps in one pass — A/B
-    // in OPTIMIZATION_r15.md; toggle restores the collect_set shape.
-    val po =
-      if (sys.env.get("SPARK_GRAFT_Q95_COLLECTSET").contains("1"))
-        tt.lineitem.groupBy("l_orderkey").agg(
-            size(collect_set(col("l_suppkey"))).as("__ns"),
-            max(when(col("l_returnflag") === "R", 1).otherwise(0)).as("__hr"),
-            sum(revL).as("__rev"))
-          .filter(col("__ns") >= 2 && col("__hr") === 1)
-          .select(col("l_orderkey"), col("__rev"))
-      else
-        graft.ops.SinglePass.q95OrderStats(
-          tt.lineitem.select(col("l_orderkey"), col("l_suppkey"),
-            when(col("l_returnflag") === "R", 1).otherwise(0).as("__isR"),
-            revL.as("__rev")),
-          minDistinct = 2, "l_orderkey", "__rev")
+    // and computes ns/hr/rev with primitive open maps in one pass.
+    // OPTIMIZATION_r15.md: collect_set 195.5 s → kernel 106.2 s at k=1000,
+    // 90–112 GB of spill → 0.
+    val po = graft.ops.SinglePass.q95OrderStats(
+      tt.lineitem.select(col("l_orderkey"), col("l_suppkey"),
+        when(col("l_returnflag") === "R", 1).otherwise(0).as("__isR"),
+        revL.as("__rev")),
+      minDistinct = 2, "l_orderkey", "__rev")
     po.join(tt.orders.filter(col("o_orderstatus") === "F")
           .select("o_orderkey").hint("shuffle_hash"),
         col("l_orderkey") === col("o_orderkey"))
@@ -694,14 +686,11 @@ object Tpcds {
     // partial collapses ~nothing while paying set objects + the
     // sort-based fallback (see multiSuppReturned). The kernel exchanges
     // raw 16-byte pairs and counts first-seen pairs per partkey in one
-    // pass; A/B in OPTIMIZATION_r15.md, toggle restores the old shape.
+    // pass. OPTIMIZATION_r15.md: collect_set 126.7 s → kernel 110.8 s at
+    // k=1000, 85 GB of spill → 0.
     val pc = Caches.lease(
-      if (sys.env.get("SPARK_GRAFT_Q23_COLLECTSET").contains("1"))
-        tt.lineitem.groupBy("l_partkey")
-          .agg(size(collect_set(col("l_orderkey"))).as("__cnt"))
-      else
-        graft.ops.SinglePass.distinctPairCountByKey(
-          tt.lineitem.select("l_partkey", "l_orderkey"), "l_partkey", "__cnt"))
+      graft.ops.SinglePass.distinctPairCountByKey(
+        tt.lineitem.select("l_partkey", "l_orderkey"), "l_partkey", "__cnt"))
     val fp = pc.crossJoin(broadcast(pc.agg(avg("__cnt").as("__avg"))))
       .filter(col("__cnt") > col("__avg") * 1.1)
       .select("l_partkey")
@@ -811,101 +800,50 @@ object Tpcds {
     * part dim joined for a brand-level rollup of the finding. Three join
     * rounds on three different keys (orderkey, partkey+yr, partkey).
     *
-    * Scale posture: the per-(part, yr) aggregate collapses the fact to
-    * part×years rows BEFORE the self-join (leased — it feeds both sides);
-    * the cross-year join is part-domain-sized but still a fact-derived
-    * frame, so shuffle-hash, never broadcast; the unit price divides two
-    * EXACT sums (decimal price, integer-valued qty), so the >5% filter
-    * compares bit-identical doubles on both engines.
+    * Scale posture: one hash(partkey) exchange of raw joined rows feeds
+    * the [[graft.ops.SinglePass.priceDropPairs]] kernel, which rolls up
+    * (part, year) and tests consecutive years in one local pass; the unit
+    * price divides two EXACT sums (integral cents, integral qty), so the
+    * >5% filter compares bit-identical doubles on both engines.
     *
     * Timed (r14, TimeQueries with in-artifact bw): k=100 23.7 s @ bw
-    * 12.7 (storm), k=1000 179.4 s @ bw 24.1 — the heaviest slice query
-    * by design (q64 is the heaviest TPC-DS query); the lag-window
-    * alternative was A/B'd and rejected (see body). */
+    * 12.7 (storm), k=1000 179.4 s @ bw 24.1 for the r15 leased self-join
+    * — the heaviest slice query by design (q64 is the heaviest TPC-DS
+    * query). A lag() window per partkey was A/B'd and rejected: 477.9 s
+    * @ bw 16.4 vs 179.4 s @ bw 24.1 at k=1000 — WindowExec's
+    * row-at-a-time sort-and-walk loses on part-scaled frames. */
   def priceChain(s: SparkSession, dir: String): DataFrame = {
     val tt = t(s, dir)
-    lazy val perPartYr = tt.lineitem.select(col("l_orderkey"), col("l_partkey"),
-        cents(col("l_extendedprice")).as("__p"),
-        col("l_quantity"))
+    // r16 single-pass kernel. The r15 shape paid (a) a partial+final
+    // HashAggregate over (partkey, yr) groups that collapse ~nothing
+    // map-side (the q9 disease — partkeys are scattered across the joined
+    // stream), (b) a LEASE materialization of the part×years frame, and
+    // (c) an SHJ of the frame against itself for the consecutive-year
+    // pair. One hash(pk) exchange of the same raw rows feeds
+    // priceDropPairs instead: all years of a part land in one task, so
+    // the rollup AND the cross-year drop test happen in a single local
+    // pass; the kernel output keeps the child's hash(l_partkey)
+    // partitioning (keyPreserving), so the part join below adds no
+    // exchange on the fact side. Both fact exchanges ship 4-byte ints for
+    // cents and quantity (§2.3 narrower types): extendedprice cents ≤
+    // ~1.1e7 ≪ 2^31 (prices don't scale with k — only keys shift) and
+    // l_quantity is integral ≤ 50 (FixturesSpec contract; round-then-cast
+    // per the q18 advice); the kernel accumulates both in exact longs, so
+    // the unit-price doubles are bit-equal to the two-phase shape's.
+    // OPTIMIZATION_r16.md: 297.8 → 258.4 s at k=1000, 74 GB of spill → 0.
+    val joined = tt.lineitem.select(col("l_orderkey"), col("l_partkey"),
+        cents(col("l_extendedprice")).cast("int").as("__p"),
+        round(col("l_quantity")).cast("int").as("__q"))
       .join(tt.orders.select("o_orderkey", "o_orderdate").hint("shuffle_hash"),
         col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("l_partkey"), year(col("o_orderdate")).cast("int").as("yr"))
-      .agg(money2(sum("__p")).as("__psum"), sum("l_quantity").as("__qsum"))
-    if (!sys.env.get("SPARK_GRAFT_PRICECHAIN_WINDOW").contains("1") &&
-        !sys.env.get("SPARK_GRAFT_PRICECHAIN_TWOPHASE").contains("1")) {
-      // r16 SHIPPED: single-pass kernel. The r15 shape below (TWOPHASE
-      // toggle) paid (a) a partial+final HashAggregate over (partkey, yr)
-      // groups that collapse ~nothing map-side (the q9 disease — partkeys
-      // are scattered across the joined stream), (b) a LEASE
-      // materialization of the part×years frame, and (c) an SHJ of the
-      // frame against itself for the consecutive-year pair. One hash(pk)
-      // exchange of the same raw rows feeds priceDropPairs instead: all
-      // years of a part land in one task, so the rollup AND the cross-
-      // year drop test happen in a single local pass; the kernel output
-      // keeps the child's hash(l_partkey) partitioning (keyPreserving),
-      // so the part join below adds no exchange on the fact side. Both
-      // fact exchanges ship 4-byte ints for cents and quantity (§2.3
-      // narrower types): extendedprice cents ≤ ~1.1e7 ≪ 2^31 (prices
-      // don't scale with k — only keys shift) and l_quantity is integral
-      // ≤ 50 (FixturesSpec contract; round-then-cast per the q18 advice);
-      // the kernel accumulates both in exact longs, so the unit-price
-      // doubles are bit-equal to the two-phase shape's.
-      // Numbers + plan diff in OPTIMIZATION_r16.md.
-      val joined = tt.lineitem.select(col("l_orderkey"), col("l_partkey"),
-          cents(col("l_extendedprice")).cast("int").as("__p"),
-          round(col("l_quantity")).cast("int").as("__q"))
-        .join(tt.orders.select("o_orderkey", "o_orderdate").hint("shuffle_hash"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_partkey"), year(col("o_orderdate")).cast("int").as("yr"),
-          col("__p"), col("__q"))
-      graft.ops.SinglePass.priceDropPairs(joined, 0.95)
-        .join(tt.part.select("p_partkey", "p_brand").hint("shuffle_hash"),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand", "yr")
-        .agg(count(lit(1)).as("n_cheaper"))
-        .select("p_brand", "yr", "n_cheaper")
-    } else if (!sys.env.get("SPARK_GRAFT_PRICECHAIN_WINDOW").contains("1")) {
-      // r15 shape (TWOPHASE toggle): leased self-join. The "obvious"
-      // Spark-first alternative — lag() over (partition by partkey order
-      // by yr), one pass, no lease — was A/B'd at k=1000 and REJECTED:
-      // 477.9 s @ bw 16.4 vs this shape's 179.4 s @ bw 24.1 (~2× worse
-      // after weather-normalizing).
-      // WindowExec is row-at-a-time (no whole-stage codegen) and its
-      // 140M-row sort-and-walk costs far more than the lease
-      // materialization + codegen SHJ it replaces. Lesson: windows win
-      // on BOUNDED-domain frames (rank_rollup's ~900 rows), not on
-      // part-scaled ones.
-      val leased = Caches.lease(perPartYr)
-      val cur = leased.select(col("l_partkey"), col("yr"),
-        (col("__psum") / col("__qsum")).as("cur_price"))
-      val prev = leased.select(col("l_partkey"), (col("yr") + 1).as("yr"),
-        (col("__psum") / col("__qsum")).as("prev_price"))
-      cur.join(prev.hint("shuffle_hash"), Seq("l_partkey", "yr"))
-        .filter(col("cur_price") < col("prev_price") * 0.95)
-        .join(tt.part.select("p_partkey", "p_brand").hint("shuffle_hash"),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand", "yr")
-        .agg(count(lit(1)).as("n_cheaper"))
-        .select("p_brand", "yr", "n_cheaper")
-    } else {
-      // REJECTED variant, kept for re-measurement (numbers above):
-      // consecutive-year comparison as a lag() window per partkey.
-      // lag(yr) gates on ACTUAL consecutiveness (a year gap is not a
-      // prev-year observation), matching the self-join's yr = yr + 1.
-      val w = Window.partitionBy("l_partkey").orderBy("yr")
-      perPartYr
-        .select(col("l_partkey"), col("yr"),
-          (col("__psum") / col("__qsum")).as("cur_price"),
-          lag(col("__psum") / col("__qsum"), 1).over(w).as("prev_price"),
-          lag(col("yr"), 1).over(w).as("__prev_yr"))
-        .filter(col("__prev_yr") === col("yr") - 1 &&
-          col("cur_price") < col("prev_price") * 0.95)
-        .join(tt.part.select("p_partkey", "p_brand").hint("shuffle_hash"),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand", "yr")
-        .agg(count(lit(1)).as("n_cheaper"))
-        .select("p_brand", "yr", "n_cheaper")
-    }
+      .select(col("l_partkey"), year(col("o_orderdate")).cast("int").as("yr"),
+        col("__p"), col("__q"))
+    graft.ops.SinglePass.priceDropPairs(joined, 0.95)
+      .join(tt.part.select("p_partkey", "p_brand").hint("shuffle_hash"),
+        col("l_partkey") === col("p_partkey"))
+      .groupBy("p_brand", "yr")
+      .agg(count(lit(1)).as("n_cheaper"))
+      .select("p_brand", "yr", "n_cheaper")
   }
 
   val priceChainSql =
@@ -931,111 +869,52 @@ object Tpcds {
     * aggregates, self-joined across consecutive years, and rolled up to
     * per-year grower counts.
     *
-    * Scale posture: each channel pre-aggregates to (custkey, yr) before
-    * anything joins (the per-order pass collapses ~4:1 and its orderkey
-    * partitioning feeds the orders join); the channel merge and the
-    * cross-year self-join run on customer-domain frames (leased — the
-    * frame feeds both sides), shuffle-joined since customers scale with
-    * the corpus; all sums exact fixed-point longs (see revL — sales/
-    * returns at scale 1e4, order spend at scale 1e2, separate columns so
-    * the scales never mix) so the 1.1× grower filter compares
+    * Scale posture: lineitem revenue rolls up per order in the
+    * key-preserving [[graft.ops.SinglePass.sumLongByKey]] kernel, the
+    * orders join rides its exchange, and one hash(custkey) exchange of
+    * the channel union feeds [[graft.ops.SinglePass.yoyGrowerStats]],
+    * which rolls up (custkey, yr) and pairs consecutive years in one
+    * local pass. All sums are exact fixed-point longs (see revL —
+    * sales/returns at scale 1e4, order spend at scale 1e2, separate
+    * columns so the scales never mix) so the 1.1× grower filter compares
     * bit-identical currency doubles. */
   def threeChannelYoy(s: SparkSession, dir: String): DataFrame = {
     val tt = t(s, dir)
     val yrCol = year(col("o_orderdate")).cast("int").as("yr")
-    // per-order lineitem pass (~4:1 collapse), routed to the customer
-    val chanLi = tt.lineitem.select(col("l_orderkey"),
-        when(col("l_returnflag") === "R", lit(0L)).otherwise(revL).as("__s"),
-        when(col("l_returnflag") === "R", revL).otherwise(lit(0L)).as("__r"))
-      .groupBy("l_orderkey")
-      .agg(sum("__s").as("__s"), sum("__r").as("__r"))
+    // r16 single-pass kernels. The r15 shape paid a (custkey, yr)
+    // exchange whose partial pass collapsed ~nothing (map tasks see ~1
+    // row per (ck, yr) key — the q9 disease), then a SECOND ck exchange
+    // into collect_list (ObjectHashAggregate: boxed per-customer struct
+    // arrays, sort-based fallback under pressure) + sort_array + explode
+    // HOFs. One hash(ck) exchange of the same raw union rows feeds
+    // yoyGrowerStats instead: the (ck, yr) rollup AND the
+    // consecutive-year grower test run in a single local pass, emitting
+    // per-year partials (≤ |year domain| rows per task) for a tiny final
+    // rollup. Exact long sums and the identical money4/money2 IEEE
+    // sequence keep the result bit-equal. The per-order pass is ALSO
+    // single-pass: the scaled fixture's round-robin file layout scatters
+    // orderkeys across every file, so the r15 partial HashAggregate
+    // collapsed ~nothing yet spilled 63 GB at k=1000; sumLongByKey
+    // exchanges the raw ±revenue lines once and its key-preserving output
+    // fuses the orders SHJ into the same stage. Per-line net = s − r
+    // folds to ±revL (exact longs, order-free). OPTIMIZATION_r16.md:
+    // 121.1–142.0 → 78.3 s at k=1000, 78 GB of spill → 0.
+    val chanLiK = graft.ops.SinglePass.sumLongByKey(
+        tt.lineitem.select(col("l_orderkey"),
+          when(col("l_returnflag") === "R", -revL).otherwise(revL).as("__nl")),
+        "l_orderkey", "__net")
       .join(tt.orders.select("o_orderkey", "o_custkey", "o_orderdate")
           .hint("shuffle_hash"),
         col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey"), yrCol, col("__s"), col("__r"),
-        lit(0L).as("__o"))
+      .select(col("o_custkey"), yrCol, col("__net"), lit(0L).as("__o"))
     val chanOrd = tt.orders.select(col("o_custkey"), yrCol,
-      lit(0L).as("__s"), lit(0L).as("__r"), priceL.as("__o"))
-    if (!sys.env.get("SPARK_GRAFT_YOY_TWOPHASE").contains("1")) {
-      // r16 SHIPPED: single-pass kernel. The r15 shape below (TWOPHASE
-      // toggle) paid a (custkey, yr) exchange whose partial pass collapsed
-      // ~nothing (map tasks see ~1 row per (ck, yr) key — the q9
-      // disease), then a SECOND ck exchange into collect_list
-      // (ObjectHashAggregate: boxed per-customer struct arrays, sort-based
-      // fallback under pressure) + sort_array + explode HOFs. One
-      // hash(ck) exchange of the same raw union rows feeds yoyGrowerStats
-      // instead: the (ck, yr) rollup AND the consecutive-year grower test
-      // run in a single local pass, emitting per-year partials (≤ |year
-      // domain| rows per task) for a tiny final rollup. Exact long sums
-      // and the identical money4/money2 IEEE sequence keep the result
-      // bit-equal. The per-order pass is ALSO single-pass: the scaled
-      // fixture's round-robin file layout scatters orderkeys across every
-      // file, so the r15 partial HashAggregate collapsed ~nothing yet
-      // spilled 63 GB at k=1000 (stage dump in OPTIMIZATION_r16.md);
-      // sumLongByKey exchanges the raw ±revenue lines once and its
-      // key-preserving output fuses the orders SHJ into the same stage.
-      // Per-line net = s − r folds to ±revL (exact longs, order-free).
-      val chanLiK = graft.ops.SinglePass.sumLongByKey(
-          tt.lineitem.select(col("l_orderkey"),
-            when(col("l_returnflag") === "R", -revL).otherwise(revL).as("__nl")),
-          "l_orderkey", "__net")
-        .join(tt.orders.select("o_orderkey", "o_custkey", "o_orderdate")
-            .hint("shuffle_hash"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey"), yrCol, col("__net"), lit(0L).as("__o"))
-      val merged = chanLiK
-        .unionByName(chanOrd.select(col("o_custkey"), col("yr"),
-          (col("__s") - col("__r")).as("__net"), col("__o")))
-      graft.ops.SinglePass.yoyGrowerStats(merged, 1.1)
-        .groupBy("yr")
-        .agg(sum("n").as("n_growers"),
-          money4(sum("nets")).as("grower_net"),
-          money2(sum("osums")).as("grower_spend"))
-        .select("yr", "n_growers", "grower_net", "grower_spend")
-    } else {
-    // r15 shape (TWOPHASE toggle): channel MERGE AS A UNION feeding one
-    // (custkey, yr) aggregate — the first cut merged two
-    // separately-aggregated channels with an outer join over a leased
-    // 105M-row frame and self-joined it for the YoY pair: 275 s at k=1000
-    // on a CLEAN host (bw 44.7) — the lease materialization + prev-side
-    // re-exchange + 105M-row SHJ build were the whole cost. The union
-    // pays ONE exchange of slim tagged rows with map-side combine and
-    // needs no outer join (absent channels sum to 0 = the oracle's
-    // coalesce).
-    val perCY = chanLi.unionByName(chanOrd)
-      .groupBy("o_custkey", "yr")
-      .agg((sum("__s") - sum("__r")).as("__net"), sum("__o").as("__osum"))
-    // consecutive-year pairing per customer: collect the ≤|years| rows
-    // into a sorted array and compare adjacent entries with codegen array
-    // HOFs — no lease, no self-join, no WindowExec (the priceChain A/B
-    // showed row-at-a-time windows lose ~2× on fact-derived frames).
-    // NOTE Spark SQL a[i] is 0-BASED (element_at is the 1-based one).
-    val paired = perCY
-      .groupBy("o_custkey")
-      .agg(sort_array(collect_list(
-        struct(col("yr"), col("__net"), col("__osum")))).as("a"))
-      // single-year customers have no consecutive pair — and Spark's
-      // sequence(1, 0) DESCENDS, so the transform would index out of
-      // bounds on a 1-element array
-      .filter(size(col("a")) >= 2)
-      .select(explode(expr(
-        """filter(
-          |  transform(sequence(1, size(a) - 1),
-          |    i -> struct(a[i].yr AS yr, a[i].__net AS net,
-          |                a[i].__osum AS osum,
-          |                a[i-1].yr AS pyr, a[i-1].__net AS pnet)),
-          |  p -> p.pyr = p.yr - 1)""".stripMargin)).as("p"))
-      .select(col("p.yr").as("yr"), col("p.net").as("__net"),
-        col("p.osum").as("__osum"), col("p.pnet").as("__pnet"))
-    paired
-      .filter(money4(col("__net")) > money4(col("__pnet")) * 1.1 &&
-        money4(col("__pnet")) > 0)
+      lit(0L).as("__net"), priceL.as("__o"))
+    graft.ops.SinglePass.yoyGrowerStats(chanLiK.unionByName(chanOrd), 1.1)
       .groupBy("yr")
-      .agg(count(lit(1)).as("n_growers"),
-        money4(sum("__net")).as("grower_net"),
-        money2(sum("__osum")).as("grower_spend"))
+      .agg(sum("n").as("n_growers"),
+        money4(sum("nets")).as("grower_net"),
+        money2(sum("osums")).as("grower_spend"))
       .select("yr", "n_growers", "grower_net", "grower_spend")
-    }
   }
 
   val threeChannelYoySql =

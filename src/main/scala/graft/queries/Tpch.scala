@@ -363,18 +363,7 @@ object Tpch {
       .join(broadcast(tt.region), col("n_regionkey") === col("r_regionkey"))
       .filter(col("r_name") === "EUROPE")
       .select("c_custkey"))
-    // r16 (guide §2.6, VERDICT r15 #5): q8's bloom preparation is TWO
-    // independent action chains — the part chain (partPromo count +
-    // filter build) and the customer/orders chain (custEur count + build
-    // → oF semi materialization → oF orderkey count + build). Serial
-    // submission paid their sum (~6 driver-blocking actions, ~4–6 s of
-    // pure latency at k=1000); concurrent submission from two driver
-    // threads pays only the longer chain, and the scheduler back-fills
-    // the shorter chain's tasks into the longer one's stragglers. Scoped
-    // to q8 ONLY (a Future inside this query function — every other
-    // query's measurement stays serial). SPARK_GRAFT_Q8_SERIAL=1 restores
-    // serial submission for A/B.
-    //
+    // Serial chains: concurrent submission was a wash (OPTIMIZATION_r16.md: 18.85 vs 19.77 s).
     // Chain 1 — narrow the fact rows before their shuffles (same as q9):
     // volume is computed at the scan so the partkey/orderkey exchanges
     // move one folded 8-byte column instead of extendedprice + discount.
@@ -403,17 +392,7 @@ object Tpch {
       (oF, graft.ops.Prune.bloomSemiFilterFor(
         "l_orderkey", oF.select("o_orderkey"), "o_orderkey"))
     }
-    val (applyPart, (oF, applyOrd)) =
-      if (sys.env.get("SPARK_GRAFT_Q8_SERIAL").contains("1"))
-        (partChain(), ordChain())
-      else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val fPart = Future(partChain())
-        val fOrd = Future(ordChain())
-        (Await.result(fPart, Duration.Inf), Await.result(fOrd, Duration.Inf))
-      }
+    val (applyPart, (oF, applyOrd)) = (partChain(), ordChain())
     val liPromo = applyPart(tt.lineitem)
       .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"),
         (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("volume"))
@@ -542,28 +521,21 @@ object Tpch {
     // year() of any representable Spark DateType value is ≤ 5,883,516
     // (2^31−1 days from epoch), so pk ≤ 5.9e6×1e12 + 1e12 < 2^63; a
     // negative year gives pk < 0 and fails the kernel's loud key ≥ 0
-    // check. Toggle SPARK_GRAFT_Q9_TWOPHASE=1 restores the two-phase
-    // aggregate; numbers in OPTIMIZATION_r15.md.
-    val perSupp =
-      if (sys.env.get("SPARK_GRAFT_Q9_TWOPHASE").contains("1"))
-        joined
-          .groupBy(col("l_suppkey"), col("o_year"))
-          .agg(sum("amount").as("amt"))
-      else {
-        val packBase = 1000000000000L // > any remapped l_suppkey (q16)
-        val sb = tt.supplier
-          .agg(min("s_suppkey").as("lo"), max("s_suppkey").as("hi")).head()
-        require(sb.isNullAt(0) || (sb.getLong(0) >= 0L && sb.getLong(1) < packBase),
-          s"q9 pack invariant: s_suppkey domain [${sb.get(0)}, ${sb.get(1)}] " +
-            s"outside [0, $packBase)")
-        graft.ops.SinglePass.sumDoubleByKey(
-            joined.select(
-              (col("o_year") * packBase + col("l_suppkey")).as("pk"),
-              col("amount")),
-            "pk", "amt")
-          .select((col("pk") % packBase).as("l_suppkey"),
-            expr(s"pk div $packBase").as("o_year"), col("amt"))
-      }
+    // check. OPTIMIZATION_r15.md: two-phase 23.3 s → single-pass 19.7 s
+    // at k=1000, 6.1 → 5.1–5.3 s at k=100.
+    val packBase = 1000000000000L // > any remapped l_suppkey (q16)
+    val sb = tt.supplier
+      .agg(min("s_suppkey").as("lo"), max("s_suppkey").as("hi")).head()
+    require(sb.isNullAt(0) || (sb.getLong(0) >= 0L && sb.getLong(1) < packBase),
+      s"q9 pack invariant: s_suppkey domain [${sb.get(0)}, ${sb.get(1)}] " +
+        s"outside [0, $packBase)")
+    val perSupp = graft.ops.SinglePass.sumDoubleByKey(
+        joined.select(
+          (col("o_year") * packBase + col("l_suppkey")).as("pk"),
+          col("amount")),
+        "pk", "amt")
+      .select((col("pk") % packBase).as("l_suppkey"),
+        expr(s"pk div $packBase").as("o_year"), col("amt"))
     perSupp
       .join(tt.supplier.select("s_suppkey", "s_nationkey"),
         col("l_suppkey") === col("s_suppkey"))

@@ -3,7 +3,6 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** TPC-H q11..q22, adapted to the testdata schema (no partsupp, no
   * commit/receipt dates, no phone/comment columns — substitutions noted
@@ -26,14 +25,11 @@ object Tpch2 {
     * each task's primitive-long distinct map cache-resident (~600k
     * entries), clamped to [parallelism, 32×parallelism]. See the q16
     * repartition comment for the tier-by-tier A/B record. */
-  private[queries] def dedupWidth(s: SparkSession, dir: String): Int =
-    // profiling override only (A/B-ing the width without a recompile);
-    // never set by the driver — the input-proportional formula is the shape
-    sys.env.get("SPARK_GRAFT_DEDUP_WIDTH").filter(_.nonEmpty).map(_.toInt).getOrElse {
-      val p = s.sparkContext.defaultParallelism
-      val byWork = (tableBytes(dir, "lineitem") / (10L << 20)).toInt + 1
-      math.max(p, math.min(32 * p, byWork))
-    }
+  private[queries] def dedupWidth(s: SparkSession, dir: String): Int = {
+    val p = s.sparkContext.defaultParallelism
+    val byWork = (tableBytes(dir, "lineitem") / (10L << 20)).toInt + 1
+    math.max(p, math.min(32 * p, byWork))
+  }
 
   /** Q11 (adapted): high-value parts supplied by NATION_5 suppliers —
     * value > 0.1% of that nation's total (scalar subquery over the same
@@ -294,8 +290,7 @@ object Tpch2 {
     // mapPartitions round-trip (deserialize→filter→reserialize ~450M
     // rows) costs far more than the hash probes it replaces, and the
     // radix sort buffers are just as bandwidth-bound as the maps. The
-    // hash distinct stays; toggle kept for re-measurement:
-    // SPARK_GRAFT_Q16_SORTDEDUP=1.
+    // hash distinct stays.
     // r15 single-pass dedup+rollup (guide §1.2 per-task work): the shipped
     // two-phase shape planned partial+final HashAggregate back-to-back
     // above the explicit exchange — every one of the ~450M post-exchange
@@ -306,32 +301,11 @@ object Tpch2 {
     // into the same pass, emitting ~900 partial rows per task. Same
     // exchange count, same exchange bytes, same per-task map footprint
     // (dedupWidth unchanged) — only the redundant passes disappear.
-    // Old paths kept as toggles for re-measurement
-    // (SPARK_GRAFT_Q16_TWOPHASE=1 / SPARK_GRAFT_Q16_SORTDEDUP=1);
-    // A/B numbers recorded in OPTIMIZATION_r15.md.
-    val counted =
-      if (sys.env.get("SPARK_GRAFT_Q16_SORTDEDUP").contains("1")) {
-        import s.implicits._
-        packed.repartition(dedupWidth(s, dir), col("gk"))
-          .sortWithinPartitions("gk")
-          .as[Long]
-          .mapPartitions { it =>
-            var prev = -1L // gk ≥ packBase > 0, so -1 is a safe sentinel
-            it.filter { x => val keep = x != prev; prev = x; keep }
-          }
-          .toDF("gk")
-          .select(expr(s"gk div $packBase").cast("int").as("gid"))
-          .groupBy("gid").agg(count(lit(1)).as("supplier_cnt"))
-      } else if (sys.env.get("SPARK_GRAFT_Q16_TWOPHASE").contains("1")) {
-        packed.repartition(dedupWidth(s, dir), col("gk")).distinct()
-          .select(expr(s"gk div $packBase").cast("int").as("gid"))
-          .groupBy("gid").agg(count(lit(1)).as("supplier_cnt"))
-      } else {
-        graft.ops.SinglePass
-          .distinctCountByGid(packed, dedupWidth(s, dir), packBase)
-          .groupBy("gid").agg(sum("cnt").as("supplier_cnt"))
-      }
-    counted
+    // OPTIMIZATION_r15.md: two-phase 102.7 s → single-pass 87.2 s at
+    // k=1000, 7.9 → 5.8 s at k=100.
+    graft.ops.SinglePass
+      .distinctCountByGid(packed, dedupWidth(s, dir), packBase)
+      .groupBy("gid").agg(sum("cnt").as("supplier_cnt"))
       .join(broadcast(dim), Seq("gid"))
       .select(col("p_brand"), col("p_type"), col("size_band"), col("supplier_cnt"))
       .orderBy(col("supplier_cnt").desc, col("p_brand").asc, col("p_type").asc,
@@ -370,13 +344,11 @@ object Tpch2 {
     val avgQty = liPruned.groupBy(col("l_partkey").as("ap"))
       .agg((avg("l_quantity") * 0.5).as("half_avg"))
     // r15 A/B: SMJ sorted the leased brand sliver against unique-keyed
-    // brandParts — the q12/q14/q19 SHJ rule candidate. Toggle measures
-    // it; numbers in OPTIMIZATION_r15.md.
-    val q17Hint =
-      if (sys.env.get("SPARK_GRAFT_Q17_SMJ").contains("1")) "shuffle_merge"
-      else "shuffle_hash"
+    // brandParts — the q12/q14/q19 SHJ rule candidate. OPTIMIZATION_r15.md:
+    // SHJ 2.76/2.57 s vs SMJ 4.03/3.13 s at k=100, a wash at k=1000
+    // (10.0/9.7 vs 9.8/10.2 s), so SHJ skips the fact-side sort.
     liPruned
-      .join(brandParts.hint(q17Hint), col("l_partkey") === col("p_partkey"))
+      .join(brandParts.hint("shuffle_hash"), col("l_partkey") === col("p_partkey"))
       .join(avgQty, col("l_partkey") === col("ap"))
       .filter(col("l_quantity") < col("half_avg"))
       .agg((sum("l_extendedprice") / 7.0).as("avg_yearly"))
@@ -411,25 +383,17 @@ object Tpch2 {
     // ONE open-address long→long pass whose long total is bit-exact under
     // any accumulation order; the emitted double equals the two-phase
     // plan's and the oracle's. Only orders passing the HAVING leave the
-    // stage. Toggle SPARK_GRAFT_Q18_TWOPHASE=1 restores the old shape;
-    // A/B numbers in OPTIMIZATION_r15.md.
+    // stage. OPTIMIZATION_r15.md: two-phase 44.6 s → single-pass 21.0 s
+    // at k=1000, 5.6–6.7 → 4.7–4.8 s at k=100.
     val bigOrders = graft.ops.Caches.lease(
-      if (sys.env.get("SPARK_GRAFT_Q18_TWOPHASE").contains("1"))
-        tt.lineitem
-          .select("l_orderkey", "l_quantity")
-          .repartition(col("l_orderkey"))
-          .groupBy("l_orderkey")
-          .agg(sum("l_quantity").as("total_qty"))
-          .filter(col("total_qty") > 300)
-      else
-        graft.ops.SinglePass.sumIntByKeyFiltered(
-          // round-then-cast (r15 ADVICE): a bare cast("int") truncates
-          // toward zero, but the FixturesSpec integrality guard tolerates
-          // |q − round(q)| < 1e-9 — round() makes the cast agree with the
-          // guard for a value like 5 − 1e-12
-          tt.lineitem.select(col("l_orderkey"),
-            round(col("l_quantity")).cast("int").as("__q")),
-          300L, "l_orderkey", "total_qty"))
+      graft.ops.SinglePass.sumIntByKeyFiltered(
+        // round-then-cast (r15 ADVICE): a bare cast("int") truncates
+        // toward zero, but the FixturesSpec integrality guard tolerates
+        // |q − round(q)| < 1e-9 — round() makes the cast agree with the
+        // guard for a value like 5 − 1e-12
+        tt.lineitem.select(col("l_orderkey"),
+          round(col("l_quantity")).cast("int").as("__q")),
+        300L, "l_orderkey", "total_qty"))
     // join the SELECTIVE reduction first: qty > 300 keeps a sliver of
     // orders, so orders⋈bigOrders shrinks the customer join input by
     // orders of magnitude (the old customer⋈orders-first shape shuffled
@@ -533,14 +497,11 @@ object Tpch2 {
       tt.part.filter(col("p_name").contains("red")).select("p_partkey"))
     // r15 A/B: the semi's SMJ sorts the ~120M-row bloomed lineitem stream
     // against a unique-keyed part sliver — the q12/q14/q19 SHJ rule says
-    // the sort is pure overhead. Toggle measures it; numbers in
-    // OPTIMIZATION_r15.md.
-    val q20Hint =
-      if (sys.env.get("SPARK_GRAFT_Q20_SMJ").contains("1")) "shuffle_merge"
-      else "shuffle_hash"
+    // the sort is pure overhead. OPTIMIZATION_r15.md: SHJ 2.98/3.10 s vs
+    // SMJ 3.76/3.35 s at k=100, a wash at k=1000 (11.7/16.8 vs 14.6/11.9 s).
     val bigSuppliers = graft.ops.Prune.bloomSemiPrefilter(
         tt.lineitem, "l_partkey", redParts, "p_partkey")
-      .join(redParts.hint(q20Hint),
+      .join(redParts.hint("shuffle_hash"),
         col("l_partkey") === col("p_partkey"), "left_semi")
       .groupBy("l_suppkey")
       .agg(sum("l_quantity").as("qty"))
@@ -602,44 +563,23 @@ object Tpch2 {
         col("l_orderkey").as("lk"), col("l_suppkey").as("ls"),
         when(col("l_shipdate") > date_add(col("o_orderdate"), 90), 1)
           .otherwise(0).as("lateF"))
-    if (sys.env.get("SPARK_GRAFT_Q21_WINDOW").contains("1")) {
-      // pre-r15 shape, kept as a toggle: pair HashAggregate (partial+final
-      // above the join's exchange) + WindowExec per-order on-time count.
-      // A/B numbers in OPTIMIZATION_r15.md.
-      val pairs = flagged
-        .groupBy("lk", "ls")
-        .agg(
-          max(col("lateF")).as("late"),
-          // a line is on time iff it is not late: 1 - min(lateF)
-          (lit(1) - min(col("lateF"))).as("ontime"))
-      val culprits = pairs
-        .withColumn("n_ontime",
-          sum("ontime").over(Window.partitionBy(col("lk"))))
-        .filter(col("late") === 1 && col("n_ontime") - col("ontime") > 0)
-      culprits
-        .join(tt.supplier, col("ls") === col("s_suppkey"))
-        .groupBy(col("s_name"), col("s_suppkey"))
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_suppkey").asc)
-        .limit(25)
-    } else {
-      // r15 single-pass culprit rollup (guide §1.2 per-task work): the
-      // pair dedup, the per-order on-time count and the "another supplier
-      // was on time" filter all run in ONE partition-local pass over the
-      // join output (hash(lk) partitioning makes every order
-      // partition-local) — removing the pair HashAggregate's redundant
-      // second hashing, the full-fact Tungsten sort that WindowExec
-      // demanded, and WindowExec's row-at-a-time walk. The pass emits
-      // per-supplier partial counts, so the supplier join consumes a
-      // supplier-domain aggregate instead of every culprit pair.
-      val perSupp = graft.ops.SinglePass.q21CulpritCounts(flagged)
-        .groupBy("ls").agg(sum("cnt").as("numwait"))
-      perSupp
-        .join(tt.supplier, col("ls") === col("s_suppkey"))
-        .select(col("s_name"), col("s_suppkey"), col("numwait"))
-        .orderBy(col("numwait").desc, col("s_suppkey").asc)
-        .limit(25)
-    }
+    // r15 single-pass culprit rollup (guide §1.2 per-task work): the pair
+    // dedup, the per-order on-time count and the "another supplier was on
+    // time" filter all run in ONE partition-local pass over the join
+    // output (hash(lk) partitioning makes every order partition-local) —
+    // removing the pair HashAggregate's redundant second hashing, the
+    // full-fact Tungsten sort that WindowExec demanded, and WindowExec's
+    // row-at-a-time walk. The pass emits per-supplier partial counts, so
+    // the supplier join consumes a supplier-domain aggregate instead of
+    // every culprit pair. OPTIMIZATION_r15.md: pair-agg + window 30.7 s →
+    // 24.8 s at k=1000, 6.7–6.9 → 4.9–5.6 s at k=100.
+    val perSupp = graft.ops.SinglePass.q21CulpritCounts(flagged)
+      .groupBy("ls").agg(sum("cnt").as("numwait"))
+    perSupp
+      .join(tt.supplier, col("ls") === col("s_suppkey"))
+      .select(col("s_name"), col("s_suppkey"), col("numwait"))
+      .orderBy(col("numwait").desc, col("s_suppkey").asc)
+      .limit(25)
   }
 
   val q21Sql =
