@@ -17,7 +17,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Engine {
 
   /** Opt THIS process into RAM-backed shuffle/spill dirs for the next
-    * [[session]] — measurement harnesses only (Bench/Profile), never the
+    * [[session]] — the measurement harness only (Bench), never the
     * library default. Only takes effect when /dev/shm exists with at
     * least `minFreeBytes` usable (a spilling workload on a half-full
     * tmpfs fails with ENOSPC) and no explicit SPARK_GRAFT_LOCAL_DIR

@@ -13,7 +13,7 @@ import org.apache.spark.storage.StorageLevel
   * unpersist eagerly; leaving frames persisted forever leaks storage in a
   * long-lived session. The lease queue makes the lifecycle explicit:
   * operators `lease` what they persist, and the driver loop (Verify /
-  * Bench / Profile, or any user harness) calls [[releaseAll]] once the
+  * Bench, or any user harness) calls [[releaseAll]] once the
   * query's result has been materialized.
   *
   * Unpersisting is always safe — an unpersisted frame recomputes — so a

@@ -167,7 +167,7 @@ object Dedup {
     * (it feeds two branches of the returned plan). Library callers must
     * call [[releaseCaches]] (or `Caches.releaseAll()`) after
     * materializing the result, or the cached frame stays persisted for
-    * the life of the session — the Verify/Bench/Profile harness loops
+    * the life of the session — the Verify/Bench harness loops
     * already do. A missed release costs memory, never correctness. */
   def dedupSubstrings(docs: DataFrame, idCol: String, textCol: String,
       windowTokens: Int, minCount: Long = 2): DataFrame = {

@@ -21,7 +21,7 @@ object ExecMetrics {
   /** Every node of the executed plan, descending through AQE wrappers
     * (the adaptive root and its materialized query stages hide the real
     * operators behind `executedPlan`/`plan` indirections). */
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+  private[graft] def allNodes(p: SparkPlan): Seq[SparkPlan] = {
     val kids = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case q: QueryStageExec => Seq(q.plan)

@@ -831,9 +831,15 @@ object Tpcds {
     // per the q18 advice); the kernel accumulates both in exact longs, so
     // the unit-price doubles are bit-equal to the two-phase shape's.
     // OPTIMIZATION_r16.md: 297.8 → 258.4 s at k=1000, 74 GB of spill → 0.
+    // With ANSI off a bare cast wraps silently, so each narrowing raises
+    // an error naming its column when a value leaves the Int range.
+    def checkedInt(c: Column, name: String): Column =
+      when(c < Int.MinValue || c > Int.MaxValue, raise_error(
+        concat(lit(s"tpcds_price_chain: $name out of int range: "), c.cast("string"))))
+        .otherwise(c.cast("int"))
     val joined = tt.lineitem.select(col("l_orderkey"), col("l_partkey"),
-        cents(col("l_extendedprice")).cast("int").as("__p"),
-        round(col("l_quantity")).cast("int").as("__q"))
+        checkedInt(cents(col("l_extendedprice")), "l_extendedprice cents").as("__p"),
+        checkedInt(round(col("l_quantity")), "l_quantity").as("__q"))
       .join(tt.orders.select("o_orderkey", "o_orderdate").hint("shuffle_hash"),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("l_partkey"), year(col("o_orderdate")).cast("int").as("yr"),
