@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.expressions.{DedupKernelExprs => GKern}
+import graft.expressions.{DedupKernelExprs => GKern, VectorKernelExprs => VK}
 import graft.functions.{Distance => GDist}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -319,30 +319,32 @@ object Dedup {
       scoreName: String, keepIntra: Boolean)(
       pipeline: DataFrame => (DataFrame, DataFrame)): DataFrame = {
     val base = docs.select(col(idCol).as("id"), valCol.as("__val"))
-    // ids + 16-byte content key only — the leased frame stays narrow even
-    // when __val is a full document or embedding
-    val memb = lease(base.select(col("id"), contentKey(col("__val")).as("__h")))
-    val repIds = memb.groupBy("__h").agg(min("id").as("id"))
-    val reps = base.join(repIds.select("id"), Seq("id"), "left_semi")
+    // the group map, computed once: (id, __rep = min id of its content
+    // key). Ids only — the leased frame stays narrow even when __val is a
+    // full document or embedding.
+    val memb = lease(base.select(col("id"), contentKey(col("__val")).as("__h"))
+      .withColumn("__rep", min("id").over(
+        org.apache.spark.sql.expressions.Window.partitionBy("__h")))
+      .select("id", "__rep"))
+    val reps = base.join(memb.filter(col("id") === col("__rep")).select("id"),
+      Seq("id"), "left_semi")
     val (elig, pairs) = pipeline(reps)
-    val eligH = repIds.join(elig, Seq("id")) // (__h, id, __self)
-    val eligMembers = memb.join(eligH.select("__h"), Seq("__h"), "left_semi")
+    // members of eligible groups with the group's self score
+    val members = lease(memb.join(
+      elig.select(col("id").as("__rep"), col("__self")), Seq("__rep")))
     val cross = pairs
-      .join(eligH.select(col("id").as(aName), col("__h").as("__ha")), aName)
-      .join(eligH.select(col("id").as(bName), col("__h").as("__hb")), bName)
-      .join(eligMembers.select(col("id").as("__xa"), col("__h").as("__ha")), "__ha")
-      .join(eligMembers.select(col("id").as("__xb"), col("__h").as("__hb")), "__hb")
+      .join(members.select(col("__rep").as(aName), col("id").as("__xa")), aName)
+      .join(members.select(col("__rep").as(bName), col("id").as("__xb")), bName)
       .select(least(col("__xa"), col("__xb")).as(aName),
         greatest(col("__xa"), col("__xb")).as(bName), col(scoreName))
     if (!keepIntra) cross
     else {
-      // within-group pairs: a plain equi-join on the content key — one
+      // within-group pairs: a plain equi-join on the representative — one
       // shuffle, output-proportional work (these pairs are owed to the
       // caller either way), no band amplification
-      val intra = eligMembers.select(col("id").as(aName), col("__h"))
-        .join(eligMembers.select(col("id").as(bName), col("__h")), Seq("__h"))
+      val intra = members.select(col("__rep"), col("id").as(aName), col("__self"))
+        .join(members.select(col("__rep"), col("id").as(bName)), Seq("__rep"))
         .filter(col(aName) < col(bName))
-        .join(eligH.select(col("__h"), col("__self")), Seq("__h"))
         .select(col(aName), col(bName), col("__self").as(scoreName))
       cross.unionByName(intra)
     }
@@ -502,33 +504,14 @@ object Dedup {
       threshold: Double, nClusters: Int, seed: Long = 42L): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    def l2norm(v: org.apache.spark.sql.Column) =
-      transform(v, x => x.cast("double") / GDist.norm(v))
-    val train = vecs.select(array_to_vector(l2norm(col(vecCol))).as("features"))
+    val train = Similarity.unitVectors(vecs, vecCol)
+      .select(array_to_vector(col("nv")).as("features"))
     val model = new KMeans().setK(nClusters).setSeed(seed).setMaxIter(10).fit(train)
     val cents = model.clusterCenters.map(_.toArray)
     val bc = vecs.sparkSession.sparkContext.broadcast(cents)
-    val cellOf = udf { (v: Seq[Float]) =>
-      val cs = bc.value
-      var inv = 0.0
-      var j = 0
-      while (j < v.length) { inv += v(j).toDouble * v(j); j += 1 }
-      inv = 1.0 / math.max(math.sqrt(inv), 1e-12)
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < cs.length) {
-        var d = 0.0; var i = 0
-        val cent = cs(c)
-        while (i < cent.length) {
-          val diff = v(i) * inv - cent(i); d += diff * diff; i += 1
-        }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    }
     val withCell = vecs
       .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("cell", cellOf(col("v")))
+      .withColumn("cell", VK.nearestCells(col("v"), bc, 1)(0))
     val a = withCell.select(col("id").as("id_a"), col("v").as("va"), col("cell"))
     val b = withCell.select(col("id").as("id_b"), col("v").as("vb"), col("cell"))
     a.join(b, Seq("cell"))
@@ -556,19 +539,6 @@ object Dedup {
     val planes = Array.fill(k, dim)(rnd.nextGaussian())
     val spark = vecs.sparkSession
     val bcPlanes = spark.sparkContext.broadcast(planes)
-    val signBits = udf { (v: Seq[Float]) =>
-      val ps = bcPlanes.value
-      var sig = 0L
-      var i = 0
-      while (i < ps.length) {
-        var dot = 0.0
-        var j = 0
-        while (j < v.length) { dot += ps(i)(j) * v(j); j += 1 }
-        if (dot >= 0) sig |= (1L << i)
-        i += 1
-      }
-      sig
-    }
     val nBands = k / bandRows
     val mask = (1L << bandRows) - 1
     // exact-dup collapse: identical vectors share every sign pattern, so a
@@ -577,10 +547,11 @@ object Dedup {
         "cos_sim", keepIntra = threshold <= 1.0) { reps =>
       // null vectors are ineligible (mirrors the eligibility frame below):
       // they never banded pre-collapse, and the sign-bit kernel can't
-      // evaluate them anyway
-      val sigs = reps.filter(col("__val").isNotNull)
+      // evaluate them anyway. Leased: the band explode, both verification
+      // joins and the eligibility frame read it.
+      val sigs = lease(reps.filter(col("__val").isNotNull)
         .select(col("id"), col("__val").as("v"))
-        .withColumn("sig", signBits(col("v")))
+        .withColumn("sig", VK.signBits(col("v"), bcPlanes)))
       // ids-only through the band explode; vectors re-attached post-candidate
       val banded = sigs.select(
           col("id"),
@@ -608,8 +579,8 @@ object Dedup {
       // comparison lets NaN pass `>= threshold`, matching the
       // pre-collapse pipeline's emission of NaN-scored pairs for
       // degenerate (but non-null) vectors.
-      (reps.filter(col("__val").isNotNull).select(col("id"),
-        GDist.cosineSimilarityNative(col("__val"), col("__val")).as("__self")),
+      (sigs.select(col("id"),
+        GDist.cosineSimilarityNative(col("v"), col("v")).as("__self")),
         pairs)
     }
   }

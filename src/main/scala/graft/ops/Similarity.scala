@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.expressions.{VectorKernelExprs => VK}
 import graft.functions.{Distance => GDist}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -59,53 +60,33 @@ object Similarity {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
 
-    // L2-normalize for clustering: on the unit sphere euclidean distance is
-    // monotone in cosine, so cell assignment matches the cosine metric.
-    def l2norm(v: org.apache.spark.sql.Column) =
-      transform(v, x => x.cast("double") / GDist.norm(v))
-
     // Train the coarse quantizer on a bounded sample: centroid quality needs
     // only ~O(100) points per cell, so cap the fit input at ~max(100k,
     // 100*nlist) vectors instead of scanning the full corpus per KMeans
     // iteration (at 100 TB the full-corpus fit would dominate the query).
+    // Vectors are L2-normalized for clustering: on the unit sphere
+    // euclidean distance is monotone in cosine, so cell assignment matches
+    // the cosine metric.
     val fitCap = math.max(100000L, 100L * nlist)
     val corpusN = corpus.count()
     val trainBase =
       if (corpusN <= fitCap) corpus
       else corpus.sample(withReplacement = false, fitCap.toDouble / corpusN, seed)
-    val train = trainBase.select(array_to_vector(l2norm(col(cVec))).as("features"))
+    val train = unitVectors(trainBase, cVec).select(array_to_vector(col("nv")).as("features"))
     val model = new KMeans().setK(nlist).setSeed(seed).setMaxIter(10).fit(train)
     val cents: Array[Array[Double]] = model.clusterCenters.map(_.toArray)
-    val spark = corpus.sparkSession
-    val bcCents = spark.sparkContext.broadcast(cents)
+    val bcCents = corpus.sparkSession.sparkContext.broadcast(cents)
 
     // per-row nearest-cells scan over the broadcast centroid table: a pure
     // map pass — no n×nlist row blowup, no shuffle, no per-id window. Ties
-    // break toward the lower cell index (matching the previous
-    // (dist asc, cell asc) ranking exactly).
-    def nearestCells(n: Int) = udf { (v: Seq[Float]) =>
-      val cs = bcCents.value
-      val norm = math.sqrt(v.foldLeft(0.0)((a, x) => a + x.toDouble * x))
-      val dists = Array.tabulate(cs.length) { c =>
-        var d = 0.0
-        var j = 0
-        while (j < cs(c).length) {
-          val diff = (if (norm == 0) 0.0 else v(j) / norm) - cs(c)(j)
-          d += diff * diff
-          j += 1
-        }
-        (d, c)
-      }
-      dists.sortBy(identity).take(n).map(_._2)
-    }
-
+    // break toward the lower cell index.
     val corpusCells = corpus
-      .withColumn("cell", nearestCells(1)(col(cVec))(0))
+      .withColumn("cell", VK.nearestCells(col(cVec), bcCents, 1)(0))
       .select(col(cId), col(cVec), col("cell"))
 
     // queries probe their nprobe nearest cells
     val queryCells = queries
-      .withColumn("cell", explode(nearestCells(nprobe)(col(qVec))))
+      .withColumn("cell", explode(VK.nearestCells(col(qVec), bcCents, nprobe)))
       .select(col(qId).as("query_id"), col(qVec).as("qv"), col("cell"))
 
     val scored = queryCells.join(corpusCells, Seq("cell"))
@@ -145,9 +126,6 @@ object Similarity {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
 
-    def l2norm(v: org.apache.spark.sql.Column) =
-      transform(v, x => x.cast("double") / GDist.norm(v))
-
     val spark = corpus.sparkSession
     val dim = corpus.select(size(col(cVec))).first().getInt(0)
     require(dim % m == 0, s"embedding dim $dim not divisible by m=$m subspaces")
@@ -160,7 +138,7 @@ object Similarity {
     val trainBase =
       if (corpusN <= fitCap) corpus
       else corpus.sample(withReplacement = false, fitCap.toDouble / corpusN, seed)
-    val train = trainBase.select(l2norm(col(cVec)).as("nv")).persist()
+    val train = unitVectors(trainBase, cVec).persist()
     val nTrain = train.count() // materialize the lease once
 
     val coarse = new KMeans().setK(nlist).setSeed(seed).setMaxIter(10)
@@ -180,71 +158,21 @@ object Similarity {
     val bcCents = spark.sparkContext.broadcast(cents)
     val bcBooks = spark.sparkContext.broadcast(codebooks)
 
-    def normalized(v: Seq[Float]): Array[Double] = {
-      val n = math.sqrt(v.foldLeft(0.0)((a, x) => a + x.toDouble * x))
-      Array.tabulate(v.length)(i => if (n == 0) 0.0 else v(i) / n)
-    }
-
-    def nearestCells(n: Int) = udf { (v: Seq[Float]) =>
-      val cs = bcCents.value
-      val nv = normalized(v)
-      val dists = Array.tabulate(cs.length) { c =>
-        var d = 0.0; var j = 0
-        while (j < cs(c).length) { val t = nv(j) - cs(c)(j); d += t * t; j += 1 }
-        (d, c)
-      }
-      dists.sortBy(identity).take(n).map(_._2)
-    }
-
-    // encode: nearest sub-centroid per subspace — m codes per vector
-    val encodeUdf = udf { (v: Seq[Float]) =>
-      val books = bcBooks.value
-      val nv = normalized(v)
-      Array.tabulate(books.length) { j =>
-        val cb = books(j)
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < cb.length) {
-          var d = 0.0; var i = 0
-          while (i < cb(c).length) { val t = nv(j * cb(c).length + i) - cb(c)(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        best
-      }
-    }
-
-    // ADC lookup table: partial inner products query-subvector × centroid
-    val lutUdf = udf { (v: Seq[Float]) =>
-      val books = bcBooks.value
-      val nv = normalized(v)
-      books.zipWithIndex.map { case (cb, j) =>
-        cb.map { cent =>
-          var s = 0.0; var i = 0
-          while (i < cent.length) { s += nv(j * cent.length + i) * cent(i); i += 1 }
-          s
-        }.toSeq
-      }.toSeq
-    }
-    val adcUdf = udf { (lut: Seq[Seq[Double]], codes: Seq[Int]) =>
-      var s = 0.0; var j = 0
-      while (j < codes.length) { s += lut(j)(codes(j)); j += 1 }
-      s
-    }
-
-    // the scan side carries ONLY (id, cell, codes) — never the raw vector
+    // the scan side carries ONLY (id, cell, codes) — never the raw vector;
+    // codes are the nearest sub-centroid per subspace, m per vector
     val corpusCodes = corpus
-      .withColumn("cell", nearestCells(1)(col(cVec))(0))
-      .withColumn("codes", encodeUdf(col(cVec)))
+      .withColumn("cell", VK.nearestCells(col(cVec), bcCents, 1)(0))
+      .withColumn("codes", VK.pqEncode(col(cVec), bcBooks))
       .select(col(cId).as("__cid"), col("cell"), col("codes"))
 
+    // ADC lookup table: partial inner products query-subvector × centroid
     val queryCells = queries
-      .withColumn("lut", lutUdf(col(qVec)))
-      .withColumn("cell", explode(nearestCells(nprobe)(col(qVec))))
+      .withColumn("lut", VK.pqLut(col(qVec), bcBooks))
+      .withColumn("cell", explode(VK.nearestCells(col(qVec), bcCents, nprobe)))
       .select(col(qId).as("query_id"), col(qVec).as("qv"), col("lut"), col("cell"))
 
     val pqScored = queryCells.join(corpusCodes, Seq("cell"))
-      .withColumn("pq_sim", adcUdf(col("lut"), col("codes")))
+      .withColumn("pq_sim", VK.pqAdc(col("lut"), col("codes")))
     val wPq = Window.partitionBy("query_id").orderBy(col("pq_sim").desc, col("__cid").asc)
     val finalists = pqScored
       .withColumn("prk", row_number().over(wPq))
@@ -261,6 +189,13 @@ object Similarity {
       .filter(col("rk") <= k)
       .select(col("query_id"), col("__cid").as("neighbor_id"), col("cos_sim"), col("rk"))
   }
+
+  /** KMeans training input of the IVF quantizers and semantic dedup: the
+    * L2-normalized vectors as `nv`, without null vectors and vectors holding
+    * a null element. Those have no direction (and `array_to_vector` rejects
+    * their nulls); the cell kernels give them no cell either. */
+  private[ops] def unitVectors(df: DataFrame, vec: String): DataFrame =
+    df.select(VK.l2Normalize(col(vec)).as("nv")).filter(forall(col("nv"), _.isNotNull))
 
   // `slice` collides with the DataFrame method name in scope
   private def slice_(c: org.apache.spark.sql.Column, start: Int, len: Int) =

@@ -35,6 +35,27 @@ class LshHotBucketSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  /** Join nodes of every kind in `df`'s physical plan, descending into
+    * adaptive plans, query stages and subqueries, and into each cached
+    * frame the plan reads (counted once: it is computed once). */
+  private def joinCount(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val seen = scala.collection.mutable.Set.empty[AnyRef]
+    def count(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
+      case s: QueryStageExec => count(s.plan)
+      case m: InMemoryTableScanExec =>
+        if (seen.add(m.relation.cacheBuilder)) count(m.relation.cachedPlan) else 0
+      case other =>
+        (if (other.isInstanceOf[BaseJoinExec]) 1 else 0) +
+          (other.children ++ other.subqueries).map(count).sum
+    }
+    count(df.queryExecution.executedPlan)
+  }
+
   test("10k identical docs: pair count exact, candidate volume stays linear") {
     val n = 10000
     val hot = (0 until n).map(i => (i.toLong, "the quick brown fox jumps over the lazy dog again and again"))
@@ -183,5 +204,30 @@ class LshHotBucketSpec extends AnyFunSuite {
       assert(k.getLong(1) != r.getLong(3),
         "component 2 must not be the chained xxhash64(c, lit(1)) form")
     }
+  }
+
+  test("collapse plans compute the group map once: join-count pin") {
+    // Re-deriving the representative map, the eligible groups and the
+    // members frame at each reference planned 21 joins for minhash, 31 for
+    // embedding LSH and 19 for simhash. One leased (id, __rep) map, one
+    // leased members frame and embedding LSH's leased signature frame leave
+    // the pipeline's own joins (3 for minhash and embedding LSH, 1 for
+    // simhash), the semi-join selecting the representatives, the members
+    // join, 2 cross-group joins and 1 intra-group join.
+    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"),
+      (3L, "alpha beta gamma epsilon")).toDF("doc_id", "text")
+    val vecs = Seq((1L, Array(0.6f, 0.8f)), (2L, Array(0.6f, 0.8f)), (3L, Array(0.8f, 0.6f)))
+      .toDF("vec_id", "embedding")
+    try {
+      val minhash = joinCount(Dedup.minhashLshPairs(docs, "doc_id", "text",
+        shingleN = 2, k = 16, bandRows = 1, threshold = 0.2))
+      val embed = joinCount(Dedup.embeddingCosineLshPairs(vecs, "vec_id", "embedding",
+        threshold = 0.9, k = 16, bandRows = 2))
+      val simhash = joinCount(Dedup.simhashPairs(docs, "doc_id", "text",
+        shingleN = 2, maxHamming = 3))
+      assert(minhash <= 8, s"minhash-LSH plans $minhash joins")
+      assert(embed <= 8, s"embedding-LSH plans $embed joins")
+      assert(simhash <= 6, s"simhash plans $simhash joins")
+    } finally graft.ops.Caches.releaseAll()
   }
 }
