@@ -115,14 +115,11 @@ object Engine {
           .orElse(sys.props.get("graft.local.dir"))
           .filter(_ != "default")
           .getOrElse(System.getProperty("java.io.tmpdir", "/tmp")))
-      // A/B knob for the injected rules (bench experiments; the rules
-      // read these as runtime confs so per-session override also works)
-      .config("spark.graft.optimizer.bloomPrefilter.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_DISABLE_RULES", "0") != "1").toString)
-      .config("spark.graft.optimizer.factBroadcastGuard.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_DISABLE_RULES", "0") != "1").toString)
-      .config("spark.graft.optimizer.eagerAggregation.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_DISABLE_RULES", "0") != "1").toString)
+      // the injected rules read these as runtime confs, so an A/B turns
+      // one off per session with spark.conf.set
+      .config("spark.graft.optimizer.bloomPrefilter.enabled", "true")
+      .config("spark.graft.optimizer.factBroadcastGuard.enabled", "true")
+      .config("spark.graft.optimizer.eagerAggregation.enabled", "true")
       // Stats-driven planning (the reference's enrich_with_stats +
       // reorder_joins — Spark-first this is CBO) is OFF by default and
       // enabled IN SCOPE where ANALYZE'd catalog tables exist
@@ -134,19 +131,9 @@ object Engine {
       // parquet (k=1000 A/B: q13 16.2 s -> 24.1 s deterministic,
       // q21 53.9 -> 69.9 same session) — so "no-op without stats" is
       // false and the tuned corpus keeps the size-only visitor.
-      .config("spark.sql.cbo.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_CBO", "0") == "1").toString)
-      .config("spark.sql.cbo.joinReorder.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_CBO", "0") == "1").toString)
+      .config("spark.sql.cbo.enabled", "false")
+      .config("spark.sql.cbo.joinReorder.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
-      // profiling knob (r15 multi_supp/best_cust investigation):
-      // ObjectHashAggregate (collect_set paths) falls back to SORT-based
-      // aggregation past this many distinct keys per task-map. Unset by
-      // default (Spark's own default applies); env-settable for A/Bs.
-      .config(sys.env.get("SPARK_GRAFT_OBJ_AGG_FALLBACK")
-        .map(v => Map(
-          "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> v))
-        .getOrElse(Map.empty[String, String]))
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // start wide, coalesce down: big shuffles (10+ GB locally, TBs on a
       // cluster) would otherwise squeeze through `cores` partitions at
@@ -155,7 +142,7 @@ object Engine {
       // 2x width, holds comfortably at 4x); AQE merges the small ones back
       // to the 64 MB advisory size so small queries don't pay for the width
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cores.toInt * sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS_X", "4").toInt).toString)
+        (cores.toInt * 4).toString)
       // AQE coalesce target = the post-shuffle sort/agg chunk each task
       // holds. Round-6 A/B (3 interleaved Profile passes per arm at the
       // SF100-equivalent tier, medians): 32 MB beats 64 MB on EVERY
@@ -165,8 +152,7 @@ object Engine {
       // spill rationale disappeared once the bloom build sides were
       // leased; what remains is smaller sort chunks fitting cache).
       // Small queries coalesce to one partition either way.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        (sys.env.getOrElse("SPARK_GRAFT_ADVISORY_MB", "32").toLong << 20).toString)
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (32L << 20).toString)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
       .config("spark.sql.session.timeZone", "UTC")

@@ -2,8 +2,10 @@ package graft.ops
 
 import graft.expressions.{DedupKernelExprs => GKern, VectorKernelExprs => VK}
 import graft.functions.{Distance => GDist}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** Large-scale deduplication pipelines for training-data curation — the
   * 100 TB-oriented extension layer (builder brief; reference analogues:
@@ -34,7 +36,7 @@ object Dedup {
   def releaseCaches(): Unit = Caches.releaseAll()
 
   /** Word n-gram shingles of a text column (distinct, nulls filtered). */
-  def shingles(text: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column = {
+  def shingles(text: Column, n: Int): Column = {
     val toks = split(text, " ")
     filter(
       array_distinct(transform(
@@ -76,9 +78,9 @@ object Dedup {
       evalTextCol: String,
       n: Int = 13,
       maxBroadcastGrams: Long = 50000000L): DataFrame = {
-    def norm(c: org.apache.spark.sql.Column) =
+    def norm(c: Column) =
       trim(regexp_replace(lower(c), "\\s+", " "))
-    def gramHashes(c: org.apache.spark.sql.Column) =
+    def gramHashes(c: Column) =
       transform(shingles(norm(c), n), g => xxhash64(g))
     val evalG = evalSet
       .select(explode(gramHashes(col(evalTextCol))).as("__g"))
@@ -212,7 +214,7 @@ object Dedup {
   /** Exact dedup: keep the first row (min of `keepBy`) per duplicate group
     * — plain hash groupBy, fully distributed. */
   def exact(df: DataFrame, dupCols: Seq[String], keepBy: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
+    val w = Window
       .partitionBy(dupCols.map(col): _*).orderBy(col(keepBy).asc)
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
@@ -289,65 +291,91 @@ object Dedup {
     * bound was ~n²/2⁶⁵. Putting the constant FIRST (`xxhash64(lit(1), c)`)
     * hashes c under seed XXH64(1, 42) ≠ 42, making the components
     * independent (LshHotBucketSpec pins the expression shape). */
-  private[graft] def contentKey(c: org.apache.spark.sql.Column) =
+  private[graft] def contentKey(c: Column) =
     struct(xxhash64(c), xxhash64(lit(1), c))
 
-  /** Hot-bucket guard for the LSH family (r12, VERDICT r11 #4): exact
-    * duplicates all share one signature, so d copies of one document put d
-    * ids into EVERY band bucket — O(d²·nBands) candidate-join rows BEFORE
-    * dedup (10k planted copies ≈ 10⁹ rows through one shuffle partition,
-    * the classic boilerplate-page blowup at corpus scale). Collapse to one
-    * representative per distinct content first (min id), run the banding
-    * pipeline on representatives only, then re-expand:
-    *   - intra-group pairs are exact duplicates — emitted directly at the
-    *     metric's exact-match score, no candidate generation at all;
-    *   - a representative pair (ra, rb, s) expands to members(ra) ×
-    *     members(rb) with the same score (identical content ⇒ identical
-    *     metric).
-    * Candidate volume is now O(distinct-content) regardless of duplicate
-    * multiplicity; output pair count is unchanged (pair semantics survive).
+  /** The candidate-and-verify recipe under the three LSH pipelines
+    * ([[minhashLshPairs]], [[simhashPairs]], [[embeddingCosineLshPairs]]).
+    * A family supplies five things:
+    *   - `sign` maps the representatives (`id`, `__val`) to the signature
+    *     frame: `id`, the verify payload as `__val`, whatever `buckets`
+    *     reads, and only the rows eligible to pair;
+    *   - `buckets`, an array over that frame whose position is the band;
+    *   - `score` of two payloads, the metric reported for a pair;
+    *   - `selfScore` of one payload: the exact metric of a row against an
+    *     identical copy (jaccard 1.0, hamming 0, self-cosine — NaN for a
+    *     zero vector, which Spark's NaN-is-greatest comparison passes);
+    *   - `keep`, the threshold predicate on a score.
     *
-    * `pipeline` maps the representative frame (`id`, `__val`) to
-    * (elig(`id`, `__self`), pairs(aName, bName, scoreName)). `elig` mirrors
-    * the pipeline's own input filter (e.g. empty shingle sets) so
-    * ineligible groups expand to nothing, exactly as before; `__self` is
-    * the EXACT metric of a member against itself (jaccard 1.0, hamming 0,
-    * self-cosine — NaN for a zero vector, preserving Spark's NaN-passes-
-    * threshold comparison semantics the un-collapsed pipeline had). */
-  private def collapseExactDups(docs: DataFrame, idCol: String,
-      valCol: org.apache.spark.sql.Column, aName: String, bName: String,
-      scoreName: String, keepIntra: Boolean)(
-      pipeline: DataFrame => (DataFrame, DataFrame)): DataFrame = {
+    * Hot-bucket guard (VERDICT r11 #4): exact duplicates all share one
+    * signature, so d copies of one document put d ids into EVERY band
+    * bucket — O(d²·nBands) candidate rows before the distinct (10k planted
+    * copies ≈ 10⁹ rows through one shuffle partition). The recipe bands
+    * one representative per distinct content (min id) and re-expands:
+    * intra-group pairs are emitted directly at `selfScore`, and a
+    * representative pair (ra, rb, s) expands to members(ra) × members(rb)
+    * at s (identical content ⇒ identical metric). Candidate volume is
+    * O(distinct content); the pair set is unchanged. Groups whose
+    * representative `sign` drops (empty shingle sets, null vectors)
+    * expand to nothing, as they never banded.
+    *
+    * The payload's data type decides how it reaches verification: an
+    * array payload (shingle set, vector) would be copied nBands× through
+    * the bucket shuffle, so only ids ride the explode and the payload is
+    * re-attached to the distinct candidates; a scalar payload (the 64-bit
+    * simhash) is no wider than the bucket key and rides the explode.
+    *
+    * The group map, the signature frame and the members frame are each
+    * computed once and leased: the semi-join, both explode sides, both
+    * payload joins and the expansion joins read them. */
+  private def lshPairs(docs: DataFrame, idCol: String, valCol: Column,
+      aName: String, bName: String, scoreName: String)(
+      sign: DataFrame => DataFrame, buckets: Column,
+      score: (Column, Column) => Column, selfScore: Column => Column,
+      keep: Column => Column): DataFrame = {
     val base = docs.select(col(idCol).as("id"), valCol.as("__val"))
-    // the group map, computed once: (id, __rep = min id of its content
-    // key). Ids only — the leased frame stays narrow even when __val is a
-    // full document or embedding.
+    // the group map: (id, __rep = min id of its content key). Ids only —
+    // the lease stays narrow even when __val is a full document or vector.
     val memb = lease(base.select(col("id"), contentKey(col("__val")).as("__h"))
-      .withColumn("__rep", min("id").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("__h")))
+      .withColumn("__rep", min("id").over(Window.partitionBy("__h")))
       .select("id", "__rep"))
     val reps = base.join(memb.filter(col("id") === col("__rep")).select("id"),
       Seq("id"), "left_semi")
-    val (elig, pairs) = pipeline(reps)
+    val sigs = lease(sign(reps))
+    val carry = !sigs.schema("__val").dataType.isInstanceOf[ArrayType]
+    val carried = if (carry) Seq("__val") else Nil
+    val banded = sigs.select(
+      (col("id") +: carried.map(col)) :+ posexplode(buckets).as(Seq("band", "bucket")): _*)
+    def side(id: String, v: String) = banded.select(
+      Seq(col("id").as(id), col("band"), col("bucket")) ++ carried.map(col(_).as(v)): _*)
+    val candidates = side(aName, "__va").join(side(bName, "__vb"), Seq("band", "bucket"))
+      .filter(col(aName) < col(bName))
+      .drop("band", "bucket")
+      .dropDuplicates(aName, bName)
+    def payload(id: String, v: String) = sigs.select(col("id").as(id), col("__val").as(v))
+    val withPayload =
+      if (carry) candidates
+      else candidates.join(payload(aName, "__va"), aName).join(payload(bName, "__vb"), bName)
+    val pairs = withPayload
+      .withColumn(scoreName, score(col("__va"), col("__vb")))
+      .filter(keep(col(scoreName)))
+      .select(aName, bName, scoreName)
     // members of eligible groups with the group's self score
     val members = lease(memb.join(
-      elig.select(col("id").as("__rep"), col("__self")), Seq("__rep")))
+      sigs.select(col("id").as("__rep"), selfScore(col("__val")).as("__self")), Seq("__rep")))
     val cross = pairs
       .join(members.select(col("__rep").as(aName), col("id").as("__xa")), aName)
       .join(members.select(col("__rep").as(bName), col("id").as("__xb")), bName)
       .select(least(col("__xa"), col("__xb")).as(aName),
         greatest(col("__xa"), col("__xb")).as(bName), col(scoreName))
-    if (!keepIntra) cross
-    else {
-      // within-group pairs: a plain equi-join on the representative — one
-      // shuffle, output-proportional work (these pairs are owed to the
-      // caller either way), no band amplification
-      val intra = members.select(col("__rep"), col("id").as(aName), col("__self"))
-        .join(members.select(col("__rep"), col("id").as(bName)), Seq("__rep"))
-        .filter(col(aName) < col(bName))
-        .select(col(aName), col(bName), col("__self").as(scoreName))
-      cross.unionByName(intra)
-    }
+    // within-group pairs: a plain equi-join on the representative — one
+    // shuffle, output-proportional work, no band amplification
+    val intra = members.filter(keep(col("__self")))
+      .select(col("__rep"), col("id").as(aName), col("__self"))
+      .join(members.select(col("__rep"), col("id").as(bName)), Seq("__rep"))
+      .filter(col(aName) < col(bName))
+      .select(col(aName), col(bName), col("__self").as(scoreName))
+    cross.unionByName(intra)
   }
 
   /** MinHash + LSH banding: k-hash signature, band-bucket join for
@@ -355,103 +383,45 @@ object Dedup {
     * per-band collision probability equals the jaccard itself, so recall at
     * threshold t is 1-(1-t)^k (≈1 for k=64, t≥0.2); verification removes
     * all false positives, making the output equal to the exact pipeline.
-    * Exact duplicates are pre-collapsed ([[collapseExactDups]]) so a
-    * boilerplate document repeated d times costs O(d) instead of
-    * O(d²·nBands) in the bucket join. */
+    *
+    * The signature frame holds each document's hashed, sorted shingle set
+    * from ONE O(tokens) kernel pass (a 64-bit collision inside one set is
+    * ~n²/2⁶⁵). The band buckets come out of ONE fused kernel call over it:
+    * slicing a signature column per band re-evaluates the kernel per band
+    * after CollapseProject inlining. Verification is a codegen
+    * `array_intersect` over primitive longs, not a Scala UDF, which boxes
+    * every element of both arrays per pair (7.0 s vs 1.7 s over the same
+    * 495k candidates). */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, k: Int, bandRows: Int, threshold: Double): DataFrame =
-    collapseExactDups(docs, idCol, col(textCol), "doc_a", "doc_b",
-        "jac", keepIntra = threshold <= 1.0) { reps =>
-      minhashLshRepPairs(reps, shingleN, k, bandRows, threshold)
-    }
-
-  /** The rep-level minhash pipeline: `reps` is (`id`, `__val`=text), output
-    * is (eligible rep ids, verified pairs). */
-  private def minhashLshRepPairs(reps: DataFrame, shingleN: Int, k: Int,
-      bandRows: Int, threshold: Double): (DataFrame, DataFrame) = {
-    // shingles are hashed and sorted in ONE O(tokens) kernel pass, then
-    // PERSISTED: this projection is the expensive shared subtree of the
-    // plan (band explode on both self-join sides + two verification
-    // joins re-evaluate it — measured 6× at sf0.1 before the persist,
-    // which is the difference between 28 s and 4 s). Production minhash
-    // pipelines materialize signatures for exactly this reason; the
-    // cached form is ids + long arrays ≈ 8 B/shingle, MEMORY_AND_DISK so
-    // a 100 TB corpus spills instead of evicting. A 64-bit hash
-    // collision inside one doc's set is ~n²/2⁶⁵ — negligible.
-    val withSh = lease(reps
-      .select(col("id"),
-        GKern.hashedShingles(col("__val"), shingleN).as("shh"))
-      .filter(size(col("shh")) > 0))
-    // ids only through the nBands-way explode: shingle arrays would be
-    // replicated nBands× through the bucket shuffle otherwise. They are
-    // re-attached to the (tiny) candidate set for exact verification.
-    // Band buckets come out of ONE fused kernel call (signature + band
-    // hashing inside the UDF) — slicing a signature column per band
-    // re-evaluates the kernel per band after CollapseProject inlining.
-    val banded = withSh.select(
-        col("id"),
-        posexplode(GKern.minhashBands(col("shh"), k, bandRows, 1L)))
-      .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
-    val l = banded.select(col("id").as("doc_a"), col("band"), col("bucket"))
-    val r = banded.select(col("id").as("doc_b"), col("band"), col("bucket"))
-    val candidateIds = l.join(r, Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .dropDuplicates("doc_a", "doc_b")
-    val candidates = candidateIds
-      .join(withSh.select(col("id").as("doc_a"), col("shh").as("sh_a")), "doc_a")
-      .join(withSh.select(col("id").as("doc_b"), col("shh").as("sh_b")), "doc_b")
-    // codegen expression verification (array_intersect over primitive
-    // longs), NOT a Scala UDF: the UDF boundary boxes every element of
-    // both arrays per pair — measured 7.0 s vs 1.7 s over the same 495k
-    // candidates. One intersect pass; the union size is derived.
-    val pairs = candidates
-      .withColumn("common",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("jac",
-        col("common") / (size(col("sh_a")) + size(col("sh_b")) - col("common")))
-      .filter(col("jac") >= threshold)
-      .select("doc_a", "doc_b", "jac")
-    // identical texts ⇒ identical shingle sets ⇒ jaccard exactly 1.0
-    (withSh.select(col("id"), lit(1.0).as("__self")), pairs)
-  }
+    lshPairs(docs, idCol, col(textCol), "doc_a", "doc_b", "jac")(
+      sign = _.select(col("id"), GKern.hashedShingles(col("__val"), shingleN).as("__val"))
+        .filter(size(col("__val")) > 0),
+      buckets = GKern.minhashBands(col("__val"), k, bandRows, 1L),
+      score = { (a, b) =>
+        val common = size(array_intersect(a, b)).cast("double")
+        common / (size(a) + size(b) - common)
+      },
+      selfScore = _ => lit(1.0),
+      keep = _ >= threshold)
 
   /** SimHash near-dup candidates: 64-bit simhash, pigeonhole banding on
     * 16-bit chunks (hamming ≤ 3 ⇒ some chunk equal), then exact hamming
-    * verification on candidates. Exact duplicates pre-collapsed
-    * ([[collapseExactDups]]): identical texts share one simhash, so a hot
-    * 16-bit chunk bucket would otherwise grow with duplicate multiplicity. */
+    * verification on candidates. Signatures come from one fused hash
+    * kernel per doc (bit-identical to the string form — both vote on
+    * stringHash64(gram, 0)); the signature frame holds the 64-bit
+    * signature only, which rides the band explode. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, maxHamming: Int): DataFrame =
-    collapseExactDups(docs, idCol, col(textCol), "doc_a", "doc_b",
-        "ham", keepIntra = maxHamming >= 0) { reps =>
-      // same materialization discipline as minhashLshPairs: one fused
-      // hash kernel per doc (bit-identical signatures to the string form —
-      // both vote on stringHash64(gram, 0)), persisted so the self-join
-      // branches don't re-shingle the corpus
-      val withSig = lease(reps
-        .select(col("id"),
-          GKern.hashedShingles(col("__val"), shingleN).as("shh"))
-        .filter(size(col("shh")) > 0)
-        .withColumn("sig", GKern.simhash64(col("shh"))))
-      val banded = withSig.select(
-        col("id"), col("sig"),
-        explode(array((0 until 4).map(i =>
-          struct(lit(i).as("chunk"),
-            shiftrightunsigned(col("sig"), i * 16).bitwiseAND(lit(0xFFFFL)).as("bits"))): _*))
-          .as("band"))
-        .select(col("id"), col("sig"), col("band.chunk"), col("band.bits"))
-      val l = banded.select(col("id").as("doc_a"), col("sig").as("sig_a"), col("chunk"), col("bits"))
-      val r = banded.select(col("id").as("doc_b"), col("sig").as("sig_b"), col("chunk"), col("bits"))
-      val pairs = l.join(r, Seq("chunk", "bits"))
-        .filter(col("doc_a") < col("doc_b"))
-        .dropDuplicates("doc_a", "doc_b")
-        .withColumn("ham", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-        .filter(col("ham") <= maxHamming)
-        .select("doc_a", "doc_b", "ham")
-      // identical texts ⇒ identical simhash ⇒ hamming exactly 0
-      (withSig.select(col("id"), lit(0).as("__self")), pairs)
-    }
+    lshPairs(docs, idCol, col(textCol), "doc_a", "doc_b", "ham")(
+      sign = _.select(col("id"), GKern.hashedShingles(col("__val"), shingleN).as("__sh"))
+        .filter(size(col("__sh")) > 0)
+        .select(col("id"), GKern.simhash64(col("__sh")).as("__val")),
+      buckets = array((0 until 4).map(i =>
+        shiftrightunsigned(col("__val"), i * 16).bitwiseAND(lit(0xFFFFL))): _*),
+      score = (a, b) => bit_count(a.bitwiseXOR(b)),
+      selfScore = _ => lit(0),
+      keep = _ <= maxHamming)
 
   /** Embedding cosine near-dup, exact: block-matrix (tiled) self-join.
     *
@@ -530,59 +500,24 @@ object Dedup {
     * A pair agreeing on every hyperplane sign in some band collides there;
     * for duplicates (cosine ≈ 1) all sign patterns agree, so recall is 1
     * for exact/same-direction dups and 1-(1-p^r)^B for near-dups with
-    * per-plane agreement p = 1 - θ/π. Only ids+signatures ride the
-    * explode; vectors are re-attached for verification afterwards. */
+    * per-plane agreement p = 1 - θ/π. Null vectors never pair: they have
+    * no sign pattern, and the hyperplanes take their dimension from the
+    * first non-null vector (a frame without one returns no pairs). */
   def embeddingCosineLshPairs(vecs: DataFrame, idCol: String, vecCol: String,
       threshold: Double, k: Int = 32, bandRows: Int = 8, seed: Long = 7L): DataFrame = {
-    val dim = vecs.select(size(col(vecCol))).head().getInt(0)
+    val dim = Similarity.vectorDim(vecs, vecCol).getOrElse(0)
     val rnd = new scala.util.Random(seed)
-    val planes = Array.fill(k, dim)(rnd.nextGaussian())
-    val spark = vecs.sparkSession
-    val bcPlanes = spark.sparkContext.broadcast(planes)
-    val nBands = k / bandRows
+    val bcPlanes = vecs.sparkSession.sparkContext.broadcast(
+      Array.fill(k, dim)(rnd.nextGaussian()))
     val mask = (1L << bandRows) - 1
-    // exact-dup collapse: identical vectors share every sign pattern, so a
-    // hot embedding (cluster of byte-identical vectors) floods its buckets
-    collapseExactDups(vecs, idCol, col(vecCol), "id_a", "id_b",
-        "cos_sim", keepIntra = threshold <= 1.0) { reps =>
-      // null vectors are ineligible (mirrors the eligibility frame below):
-      // they never banded pre-collapse, and the sign-bit kernel can't
-      // evaluate them anyway. Leased: the band explode, both verification
-      // joins and the eligibility frame read it.
-      val sigs = lease(reps.filter(col("__val").isNotNull)
-        .select(col("id"), col("__val").as("v"))
-        .withColumn("sig", VK.signBits(col("v"), bcPlanes)))
-      // ids-only through the band explode; vectors re-attached post-candidate
-      val banded = sigs.select(
-          col("id"),
-          explode(array((0 until nBands).map(bIdx =>
-            struct(lit(bIdx).as("band"),
-              shiftrightunsigned(col("sig"), bIdx * bandRows)
-                .bitwiseAND(lit(mask)).as("bits"))): _*)).as("bb"))
-        .select(col("id"), col("bb.band"), col("bb.bits"))
-      val candidates = banded.as("l").join(banded.as("r"), Seq("band", "bits"))
-        .filter(col("l.id") < col("r.id"))
-        .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-        .dropDuplicates("id_a", "id_b")
-      val va = sigs.select(col("id").as("id_a"), col("v").as("va"))
-      val vb = sigs.select(col("id").as("id_b"), col("v").as("vb"))
-      val pairs = candidates.join(va, "id_a").join(vb, "id_b")
-        .withColumn("cos_sim", GDist.cosineSimilarityNative(col("va"), col("vb")))
-        .filter(col("cos_sim") >= threshold)
-        .select("id_a", "id_b", "cos_sim")
-      // eligibility mirrors the banding input: NULL vectors never banded
-      // in the pre-collapse pipeline (null band bits fail the equi-join),
-      // so null-embedding groups must expand to nothing here too (ADVICE
-      // r12 — declaring every rep eligible fabricated NULL-scored intra
-      // pairs for identical-null groups). __self = exact self-cosine,
-      // which is NaN for a zero vector — and Spark's NaN-is-greatest
-      // comparison lets NaN pass `>= threshold`, matching the
-      // pre-collapse pipeline's emission of NaN-scored pairs for
-      // degenerate (but non-null) vectors.
-      (sigs.select(col("id"),
-        GDist.cosineSimilarityNative(col("v"), col("v")).as("__self")),
-        pairs)
-    }
+    lshPairs(vecs, idCol, col(vecCol), "id_a", "id_b", "cos_sim")(
+      sign = _.filter(col("__val").isNotNull)
+        .withColumn("__sig", VK.signBits(col("__val"), bcPlanes)),
+      buckets = array((0 until k / bandRows).map(b =>
+        shiftrightunsigned(col("__sig"), b * bandRows).bitwiseAND(lit(mask))): _*),
+      score = GDist.cosineSimilarityNative,
+      selfScore = v => GDist.cosineSimilarityNative(v, v),
+      keep = _ >= threshold)
   }
 
   /** Duplicate-cluster assignment: connected components over candidate

@@ -127,7 +127,8 @@ object Similarity {
     import org.apache.spark.ml.functions.array_to_vector
 
     val spark = corpus.sparkSession
-    val dim = corpus.select(size(col(cVec))).first().getInt(0)
+    val dim = vectorDim(corpus, cVec).getOrElse(
+      throw new IllegalArgumentException(s"ivfPqTopK: corpus column $cVec holds no non-null vector"))
     require(dim % m == 0, s"embedding dim $dim not divisible by m=$m subspaces")
     val sub = dim / m
 
@@ -189,6 +190,11 @@ object Similarity {
       .filter(col("rk") <= k)
       .select(col("query_id"), col("__cid").as("neighbor_id"), col("cos_sim"), col("rk"))
   }
+
+  /** The length of the first non-null vector of `vec`, or None when the
+    * frame holds none (null vectors are allowed anywhere, first included). */
+  private[ops] def vectorDim(df: DataFrame, vec: String): Option[Int] =
+    df.filter(col(vec).isNotNull).select(size(col(vec))).head(1).headOption.map(_.getInt(0))
 
   /** KMeans training input of the IVF quantizers and semantic dedup: the
     * L2-normalized vectors as `nv`, without null vectors and vectors holding

@@ -230,4 +230,85 @@ class LshHotBucketSpec extends AnyFunSuite {
       assert(simhash <= 6, s"simhash plans $simhash joins")
     } finally graft.ops.Caches.releaseAll()
   }
+
+  test("simhash at hamming <= 3 equals the brute-force all-pairs hamming filter") {
+    // pigeonhole over 4 x 16-bit chunks: hamming <= 3 leaves some chunk
+    // equal, so banding misses no pair and the pipeline is exact
+    val rnd = new scala.util.Random(11)
+    val vocab = (0 until 40).map(i => s"w$i")
+    val bases = (0 until 30).map(_ => Seq.fill(200)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    // each original in an exact-duplicate group of 1 to 3 copies, plus
+    // three near-duplicates one appended token (one shingle) away
+    val texts = bases.zipWithIndex.flatMap { case (b, i) =>
+      Seq.fill(1 + i % 3)(b) ++ (1 to 3).map(e => s"$b tail$i$e")
+    } ++ Seq("", null)
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val sigs = docs.select(col("doc_id"),
+        graft.expressions.DedupKernelExprs.hashedShingles(col("text"), 3).as("sh"))
+      .filter(size(col("sh")) > 0)
+      .select(col("doc_id"), graft.expressions.DedupKernelExprs.simhash64(col("sh")))
+      .as[(Long, Long)].collect().sortBy(_._1)
+    assert(sigs.length == texts.size - 2, "the empty and the null text have no shingles")
+    val all = for {
+      i <- sigs.indices; j <- (i + 1) until sigs.length
+    } yield (sigs(i)._1, sigs(j)._1, java.lang.Long.bitCount(sigs(i)._2 ^ sigs(j)._2))
+    try (0 to 3).foreach { h =>
+      val brute = all.filter(_._3 <= h).toSet
+      val got = Dedup.simhashPairs(docs, "doc_id", "text", shingleN = 3, maxHamming = h)
+        .as[(Long, Long, Int)].collect()
+      assert(got.length == got.toSet.size, s"h=$h: a pair is emitted twice")
+      assert(got.toSet == brute, s"h=$h")
+    } finally graft.ops.Caches.releaseAll()
+    // the corpus reaches every distance the banding must not miss
+    assert((0 to 3).forall(h => all.exists(_._3 == h)),
+      s"distances <= 3 seen: ${all.map(_._3).filter(_ <= 3).distinct.sorted}")
+  }
+
+  test("array payloads never ride the bucket explode: the bucket self-join carries ids only") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.types.ArrayType
+    val docs = Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma delta"),
+      (3L, "alpha beta gamma epsilon")).toDF("doc_id", "text")
+    val vecs = Seq((1L, Array(0.6f, 0.8f)), (2L, Array(0.6f, 0.8f)), (3L, Array(0.8f, 0.6f)))
+      .toDF("vec_id", "embedding")
+    def bucketJoins(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case j: Join if j.condition.exists(_.references.exists(_.name == "band")) => j
+      }
+    try Seq(
+      "minhash" -> Dedup.minhashLshPairs(docs, "doc_id", "text",
+        shingleN = 2, k = 16, bandRows = 1, threshold = 0.2),
+      "embedding" -> Dedup.embeddingCosineLshPairs(vecs, "vec_id", "embedding",
+        threshold = 0.9, k = 16, bandRows = 2)
+    ).foreach { case (name, df) =>
+      val joins = bucketJoins(df)
+      assert(joins.size == 1, s"$name: one bucket self-join, found ${joins.size}")
+      joins.head.children.foreach { side =>
+        assert(!side.output.exists(_.dataType.isInstanceOf[ArrayType]),
+          s"$name: a bucket-join input carries an array: ${side.output}")
+      }
+    } finally graft.ops.Caches.releaseAll()
+  }
+
+  test("embedding LSH and IVF-PQ take the dimension from the first non-null vector") {
+    val v = Array(0.6f, 0.8f, 0.0f, 0.0f)
+    val nul = null.asInstanceOf[Array[Float]]
+    val vecs = Seq((0L, nul), (1L, v), (2L, v), (3L, Array(0.0f, 0.6f, 0.8f, 0.0f)))
+      .toDF("vec_id", "embedding").coalesce(1)
+    try {
+      val got = Dedup.embeddingCosineLshPairs(vecs, "vec_id", "embedding",
+          threshold = 0.9, k = 16, bandRows = 2)
+        .as[(Long, Long, Double)].collect().map(p => (p._1, p._2))
+      assert(got.toSet == Set((1L, 2L)), s"${got.toSeq}")
+      // no non-null vector, or no row at all: no pairs
+      Seq(vecs.filter(col("vec_id") === 0L), vecs.limit(0)).foreach { df =>
+        assert(Dedup.embeddingCosineLshPairs(df, "vec_id", "embedding", threshold = 0.9)
+          .count() == 0)
+      }
+      val top = graft.ops.Similarity.ivfPqTopK(vecs.filter(col("vec_id") =!= 3L), vecs,
+          "vec_id", "embedding", "vec_id", "embedding", k = 1, nlist = 2, nprobe = 2, m = 2)
+        .as[(Long, Long, Double, Int)].collect()
+      assert(top.map(_._1).toSet == Set(1L, 2L) && top.forall(_._2 != 0L), s"${top.toSeq}")
+    } finally graft.ops.Caches.releaseAll()
+  }
 }
