@@ -58,9 +58,13 @@ object Engine {
     }
   }
 
+  /** The local core count of a session built without one: the one read
+    * of `SPARK_GRAFT_CPUS`. */
+  private[graft] def defaultCores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
   /** Build a tuned local session. On a cluster the same config block applies
     * minus `master`. */
-  def session(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
+  def session(cores: String = defaultCores): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")

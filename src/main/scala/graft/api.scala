@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * }}}
   */
 object Graft {
-  def session(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
+  def session(cores: String = Engine.defaultCores): SparkSession = {
     val s = Engine.session(cores)
     graft.expressions.CosineSimilarityExpr.register(s)
     s

@@ -437,7 +437,8 @@ object Dedup {
     * inputs each, the standard exact all-pairs layout on a cluster.
     *
     * At production thresholds prefer [[embeddingCosineLshPairs]] as the
-    * blocking stage; this exact form is the in-block verification. */
+    * blocking stage; this exact form is the in-block verification. A null
+    * or zero vector pairs with nothing ([[Similarity.rankable]]). */
   def embeddingCosinePairs(vecs: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nBlocks: Int = 8): DataFrame = {
     val base = vecs.select(col(idCol).as("id"), col(vecCol).as("v"))
@@ -454,7 +455,7 @@ object Dedup {
     a.join(b, Seq("tile_i", "tile_j"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("cos_sim", GDist.cosineSimilarityNative(col("va"), col("vb")))
-      .filter(col("cos_sim") >= threshold)
+      .filter(Similarity.rankable(col("cos_sim")) && col("cos_sim") >= threshold)
       .select("id_a", "id_b", "cos_sim")
   }
 
@@ -469,7 +470,8 @@ object Dedup {
     * (argmin over the centroid table, no crossJoin/window), then ONE
     * shuffle on cell for the intra-cluster equi-join; exact cosine
     * verifies every emitted pair, so precision is 1 — only recall is
-    * approximate. Returns (id_a, id_b, cos_sim), id_a < id_b. */
+    * approximate. A null or zero vector pairs with nothing
+    * ([[Similarity.rankable]]). Returns (id_a, id_b, cos_sim), id_a < id_b. */
   def semanticDedupPairs(vecs: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nClusters: Int, seed: Long = 42L): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
@@ -487,7 +489,7 @@ object Dedup {
     a.join(b, Seq("cell"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("cos_sim", GDist.cosineSimilarityNative(col("va"), col("vb")))
-      .filter(col("cos_sim") >= threshold)
+      .filter(Similarity.rankable(col("cos_sim")) && col("cos_sim") >= threshold)
       .select("id_a", "id_b", "cos_sim")
   }
 

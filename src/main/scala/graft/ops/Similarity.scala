@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.expressions.{VectorKernelExprs => VK}
 import graft.functions.{Distance => GDist}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -22,9 +22,16 @@ object Similarity {
     * [[ivfTopK]], whose probe join shuffles instead of broadcasting. */
   val MaxBroadcastQueries = 100000L
 
+  /** The one rule for similarity scores: a null or NaN score (the cosine
+    * of a null or all-zero vector, which has no direction) never ranks
+    * and never passes a threshold. Left to the comparison, Spark would
+    * order NaN above every number and pass it through `>=`. */
+  private[ops] def rankable(score: Column): Column = score.isNotNull && !isnan(score)
+
   /** Exact top-k: every (query, corpus) pair scored, top k per query.
     * The query side is broadcast; the corpus is never shuffled — the
     * window ranks within query-id partitions of the (small) scored set.
+    * Only [[rankable]] scores rank, here and in the IVF searches.
     *
     * The cap check evaluates the query plan a second time (once for the
     * guard count, once for the broadcast) — pass a cached/leased frame,
@@ -43,6 +50,7 @@ object Similarity {
     val scored = corpus.join(
         broadcast(queries.select(col(qId).as("query_id"), col(qVec).as("qv"))))
       .withColumn("cos_sim", GDist.cosineSimilarityNative(col("qv"), col(cVec)))
+      .filter(rankable(col("cos_sim")))
     val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col(cId).asc)
     scored
       .withColumn("rk", row_number().over(w))
@@ -91,6 +99,7 @@ object Similarity {
 
     val scored = queryCells.join(corpusCells, Seq("cell"))
       .withColumn("cos_sim", GDist.cosineSimilarityNative(col("qv"), col(cVec)))
+      .filter(rankable(col("cos_sim")))
     val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col(cId).asc)
     scored
       .withColumn("rk", row_number().over(w))
@@ -174,6 +183,7 @@ object Similarity {
 
     val pqScored = queryCells.join(corpusCodes, Seq("cell"))
       .withColumn("pq_sim", VK.pqAdc(col("lut"), col("codes")))
+      .filter(rankable(col("pq_sim")))
     val wPq = Window.partitionBy("query_id").orderBy(col("pq_sim").desc, col("__cid").asc)
     val finalists = pqScored
       .withColumn("prk", row_number().over(wPq))
@@ -184,6 +194,7 @@ object Similarity {
     val exact = finalists
       .join(corpus.select(col(cId).as("__cid"), col(cVec).as("__cv")), Seq("__cid"))
       .withColumn("cos_sim", GDist.cosineSimilarityNative(col("qv"), col("__cv")))
+      .filter(rankable(col("cos_sim")))
     val w = Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col("__cid").asc)
     exact
       .withColumn("rk", row_number().over(w))

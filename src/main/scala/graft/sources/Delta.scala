@@ -8,6 +8,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -382,30 +383,33 @@ object Delta {
       tablePath: String,
       schema: StructType,
       partCols: Seq[String],
-      live: Seq[AddFile]): DataFrame = {
+      live: Seq[AddFile]): DataFrame =
     if (!live.exists(_.dv.isDefined))
       PartitionedFiles.readWithPartitions(
         spark, schema, partCols,
         live.map(f => absolutePath(tablePath, f.path)),
         live.map(_.partitionValues))
-    else {
-      val data = PartitionedFiles.readWithPartitions(
-        spark, schema, partCols,
-        live.map(f => absolutePath(tablePath, f.path)),
-        live.map(_.partitionValues),
-        sourceCol = Some("__graft_src"), posCol = Some("__graft_pos"))
-      minusDvTombstones(spark, tablePath, data, live)
-        .drop("__graft_src", "__graft_pos")
-    }
-  }
+    else cowFiles(spark, tablePath, schema, partCols).liveRows(live)
+      .drop(PartitionedFiles.SrcCol, PartitionedFiles.PosCol)
 
-  /** Anti-join `data` (must carry `__graft_src`/`__graft_pos`) against
-    * the deletion vectors of `files`. No-op when none has a DV. */
+  /** The table's files for the copy-on-write recipe: a scan of them
+    * subtracts the rows their deletion vectors tombstone. */
+  private def cowFiles(spark: SparkSession, tablePath: String, schema: StructType,
+      partCols: Seq[String]): PartitionedFiles.CowFiles[AddFile] =
+    new PartitionedFiles.CowFiles[AddFile](spark, schema, partCols,
+      f => absolutePath(tablePath, f.path), _.partitionValues,
+      minusDvTombstones(spark, tablePath, _, _))
+
+  private def cowFiles(spark: SparkSession, snap: Snapshot): PartitionedFiles.CowFiles[AddFile] =
+    cowFiles(spark, snap.tablePath, snap.schema, snap.partitionColumns)
+
+  /** Anti-join `data` (must carry the source and position columns)
+    * against the deletion vectors of `files`. No-op when none has a DV. */
   private def minusDvTombstones(
       spark: SparkSession, tablePath: String,
       data: DataFrame, files: Seq[AddFile]): DataFrame = {
     val withDv = files.flatMap(f => f.dv.map(d =>
-      (Paths.get(absolutePath(tablePath, f.path)).normalize.toString, d)))
+      (PartitionedFiles.normPath(absolutePath(tablePath, f.path)), d)))
     if (withDv.isEmpty) return data
     val tp = tablePath
     val rows = spark.sparkContext
@@ -415,8 +419,8 @@ object Delta {
     val tombstones = spark.createDataFrame(rows, StructType(Seq(
       StructField("__del_path", StringType), StructField("__del_pos", LongType))))
     data.join(tombstones,
-      data("__graft_src") === col("__del_path") &&
-        data("__graft_pos") === col("__del_pos"),
+      data(PartitionedFiles.SrcCol) === col("__del_path") &&
+        data(PartitionedFiles.PosCol) === col("__del_pos"),
       "left_anti")
   }
 
@@ -478,61 +482,83 @@ object Delta {
     // 1. data files: stage through a scratch dir (hive-layout for
     //    partitioned writes), then move parts into the table layout.
     val now = System.currentTimeMillis()
-    // add.path is percent-encoded per the spec ("relative path, encoded
-    // as a URL") so readers' decode restores the on-disk literal even
-    // for partition values containing '%', '+', spaces, or non-ASCII
-    val staged = PartitionedFiles.stageAndMove(df, tablePath, partCols)
-    val dataSchema = StructType(df.schema.filterNot(f => partCols.contains(f.name)))
+    val added = addsOf(spark, tablePath, PartitionedFiles.stageAndMove(df, tablePath, partCols),
+      StructType(df.schema.filterNot(f => partCols.contains(f.name))), now)
+
+    // 2. publish the commit. Version 0 creates the table (protocol +
+    //    metaData); an overwrite restates metaData and removes every file
+    //    live at its version, so a lost race recomputes those removes.
+    val overwrite = mode == "overwrite"
+    def lines(version: Long, live: => Seq[AddFile]): Seq[String] = {
+      val head =
+        if (version == 0) Seq("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+          metaDataJson(mapper, df.schema, partCols))
+        else if (overwrite) Seq(metaDataJson(mapper, df.schema, partCols))
+        else Nil
+      commitLines(head, if (overwrite && version > 0) live.map(_.path) else Nil, added,
+        dataChange = true, now, if (overwrite) "WRITE OVERWRITE" else "WRITE", txn)
+    }
+    publish(spark, tablePath, existing + 1, lines(existing + 1, snapshot(spark, tablePath).files))(
+      latest => Right(lines(latest.version + 1, latest.files)))
+  }
+
+  /** The adds of staged data files, with stats from one pass over all
+    * of them. `add.path` is percent-encoded per the spec ("relative
+    * path, encoded as a URL"), so readers' decode restores the on-disk
+    * literal even for partition values holding '%', '+', spaces or
+    * non-ASCII. */
+  private def addsOf(spark: SparkSession, tablePath: String,
+      staged: Seq[PartitionedFiles.StagedFile], dataSchema: StructType, now: Long): Seq[AddFile] = {
     val statsByRel = DeltaStats.collect(spark, tablePath, staged, dataSchema)
-    val added = staged.map(f => AddFile(PartitionedFiles.percentEncodePath(f.relPath),
+    staged.map(f => AddFile(PartitionedFiles.percentEncodePath(f.relPath),
       f.partitionValues, f.sizeBytes, now, statsByRel.get(f.relPath)))
+  }
 
-    // 2. publish the commit, retrying on version races.
-    var attempt = math.max(existing, -1L) + 1
-    var committed = -1L
-    while (committed < 0) {
-      val removes: Seq[String] =
-        if (mode == "overwrite" && attempt > 0) snapshot(spark, tablePath).files.map(_.path) else Nil
-      val lines = mutable.ArrayBuffer.empty[String]
-      val om = mapper
-      if (attempt == 0) {
-        lines += """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
-        lines += metaDataJson(om, df.schema, partCols)
-      } else if (mode == "overwrite") {
-        lines += metaDataJson(om, df.schema, partCols)
-      }
-      removes.foreach { p =>
-        val o = om.createObjectNode()
-        val r = o.putObject("remove")
-        r.put("path", p); r.put("deletionTimestamp", now); r.put("dataChange", true)
-        lines += om.writeValueAsString(o)
-      }
-      added.foreach(a => lines += addJson(om, a, dataChange = true))
-      txn.foreach { case (appId, v) =>
-        val o = om.createObjectNode()
-        val t = o.putObject("txn")
-        t.put("appId", appId); t.put("version", v); t.put("lastUpdated", now)
-        lines += om.writeValueAsString(o)
-      }
-      val ci = om.createObjectNode()
-      val info = ci.putObject("commitInfo")
-      info.put("timestamp", now); info.put("operation", if (mode == "overwrite") "WRITE OVERWRITE" else "WRITE")
-      lines += om.writeValueAsString(ci)
+  /** The actions of one commit in log order: `head` (protocol /
+    * metaData), a remove per path, an add per file, the txn, commitInfo. */
+  private def commitLines(head: Seq[String], removed: Seq[String], added: Seq[AddFile],
+      dataChange: Boolean, now: Long, operation: String,
+      txn: Option[(String, Long)] = None): Seq[String] = {
+    val om = mapper
+    def line(action: String)(fill: ObjectNode => Unit): String = {
+      val o = om.createObjectNode(); fill(o.putObject(action)); om.writeValueAsString(o)
+    }
+    head ++
+      removed.map(p => line("remove") { r =>
+        r.put("path", p); r.put("deletionTimestamp", now); r.put("dataChange", dataChange) }) ++
+      added.map(addJson(om, _, dataChange)) ++
+      txn.map { case (appId, v) => line("txn") { t =>
+        t.put("appId", appId); t.put("version", v); t.put("lastUpdated", now) } } :+
+      line("commitInfo") { i => i.put("timestamp", now); i.put("operation", operation) }
+  }
 
-      Files.createDirectories(logDir(tablePath))
-      val tmp = logDir(tablePath).resolve(s".tmp-${UUID.randomUUID()}.json")
-      Files.write(tmp, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-      try {
-        // hard-link claim: atomic EEXIST, never a silent rename-overwrite
-        AtomicClaim.publish(tmp, commitFile(tablePath, attempt))
-        committed = attempt
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.delete(tmp); attempt += 1 // lost the race; recompute removes
+  /** The one commit loop: publish `lines` as commit `version` by a
+    * hard-link claim (atomic EEXIST, never a silent rename-overwrite —
+    * optimistic concurrency per the spec). After a lost version race
+    * the caller's `onRace` policy gets the latest snapshot and either
+    * returns the lines to retry with at the next version (Right), or
+    * ends the commit with the version to return (Left). */
+  @annotation.tailrec
+  private def publish(spark: SparkSession, tablePath: String, version: Long, lines: Seq[String])(
+      onRace: Snapshot => Either[Long, Seq[String]]): Long = {
+    Files.createDirectories(logDir(tablePath))
+    val tmp = logDir(tablePath).resolve(s".tmp-${UUID.randomUUID()}.json")
+    Files.write(tmp, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    val won =
+      try { AtomicClaim.publish(tmp, commitFile(tablePath, version)); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => Files.delete(tmp); false }
+    if (won) version
+    else {
+      val latest = snapshot(spark, tablePath)
+      onRace(latest) match {
+        case Left(v) => v
+        case Right(next) => publish(spark, tablePath, latest.version + 1, next)(onRace)
       }
     }
-    committed
   }
+
+  private def deleteStaged(tablePath: String, added: Seq[AddFile]): Unit =
+    added.foreach(a => Files.deleteIfExists(Paths.get(absolutePath(tablePath, a.path))))
 
   /** One `add` action line (shared by write / rewrite / DML commits);
     * emits the `deletionVector` struct when the file carries one. */
@@ -599,11 +625,8 @@ object Delta {
       PartitionedFiles.stageAndMove(slice, tablePath, snap.partitionColumns)
     }.flatten
     // ONE stats pass over every rewritten file, not one job per partition
-    val statsByRel = DeltaStats.collect(spark, tablePath, staged, snap.dataSchema)
-    val added = staged.map(f => AddFile(PartitionedFiles.percentEncodePath(f.relPath),
-      f.partitionValues, f.sizeBytes, now, statsByRel.get(f.relPath)))
-
-    commitRewrite(spark, tablePath, snap.version, removed, added, now, "OPTIMIZE")
+    commitRewrite(spark, snap, removed,
+      addsOf(spark, tablePath, staged, snap.dataSchema, now), now, "OPTIMIZE")
   }
 
   /** Run per-partition rewrite work with bounded concurrent Spark job
@@ -620,52 +643,25 @@ object Delta {
     finally pool.shutdown()
   }
 
-  /** Publish a dataChange=false rewrite (the OPTIMIZE commit shape):
-    * removes + adds, retrying on version races. If a concurrent commit
-    * removed any file this rewrite covers, publishing would resurrect
-    * overwritten rows — abort instead (a rewrite is only an
-    * optimization), deleting the staged outputs. */
-  private def commitRewrite(
+  /** Publish a dataChange=false rewrite (the OPTIMIZE commit shape) of
+    * `start`'s `removed` files. A version race retries at the next
+    * version, unless a concurrent commit removed any file this rewrite
+    * covers: publishing would then resurrect overwritten rows, so it
+    * aborts instead (a rewrite is only an optimization), deleting the
+    * staged outputs and returning the latest version. */
+  private[graft] def commitRewrite(
       spark: SparkSession,
-      tablePath: String,
-      startVersion: Long,
+      start: Snapshot,
       removed: Seq[AddFile],
       added: Seq[AddFile],
       now: Long,
       operation: String): Long = {
-    val om = mapper
-    val lines = mutable.ArrayBuffer.empty[String]
-    removed.foreach { f =>
-      val o = om.createObjectNode()
-      val r = o.putObject("remove")
-      r.put("path", f.path); r.put("deletionTimestamp", now); r.put("dataChange", false)
-      lines += om.writeValueAsString(o)
+    val lines = commitLines(Nil, removed.map(_.path), added, dataChange = false, now, operation)
+    publish(spark, start.tablePath, start.version + 1, lines) { latest =>
+      val stillLive = latest.files.map(_.path).toSet
+      if (removed.forall(f => stillLive.contains(f.path))) Right(lines)
+      else { deleteStaged(start.tablePath, added); Left(latest.version) }
     }
-    added.foreach(a => lines += addJson(om, a, dataChange = false))
-    val ci = om.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", operation)
-    lines += om.writeValueAsString(ci)
-
-    var attempt = startVersion + 1
-    var committed = -1L
-    while (committed < 0) {
-      val tmp = logDir(tablePath).resolve(s".tmp-${UUID.randomUUID()}.json")
-      Files.write(tmp, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-      try { AtomicClaim.publish(tmp, commitFile(tablePath, attempt)); committed = attempt }
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        Files.delete(tmp)
-        val latest = snapshot(spark, tablePath)
-        val stillLive = latest.files.map(_.path).toSet
-        if (!removed.forall(f => stillLive.contains(f.path))) {
-          added.foreach(a =>
-            Files.deleteIfExists(Paths.get(absolutePath(tablePath, a.path))))
-          return latest.version
-        }
-        attempt = latest.version + 1
-      }
-    }
-    committed
   }
 
   /** OPTIMIZE ZORDER BY (production Delta's multi-dimensional
@@ -723,10 +719,8 @@ object Delta {
       PartitionedFiles.stageAndMove(clustered, tablePath, snap.partitionColumns)
     }.flatten
     // ONE stats pass over every rewritten file, not one job per partition
-    val statsByRel = DeltaStats.collect(spark, tablePath, staged, snap.dataSchema)
-    val added = staged.map(f => AddFile(PartitionedFiles.percentEncodePath(f.relPath),
-      f.partitionValues, f.sizeBytes, now, statsByRel.get(f.relPath)))
-    commitRewrite(spark, tablePath, snap.version, snap.files, added, now, "OPTIMIZE ZORDER")
+    commitRewrite(spark, snap, snap.files,
+      addsOf(spark, tablePath, staged, snap.dataSchema, now), now, "OPTIMIZE ZORDER")
   }
 
   /** Row-level DELETE via copy-on-write (the spec's remove + rewritten
@@ -740,10 +734,8 @@ object Delta {
     * At 100 TB this is the compliance-delete shape a training corpus
     * needs: a point delete on a z-ordered/clustered column rewrites a
     * handful of files, not the table. */
-  def delete(spark: SparkSession, tablePath: String, pred: Column): (Long, Long) = {
-    rewriteRows(spark, tablePath, pred, "DELETE",
-      (slice, hit) => slice.filter(!hit))
-  }
+  def delete(spark: SparkSession, tablePath: String, pred: Column): (Long, Long) =
+    rewriteRows(spark, tablePath, pred, "DELETE", PartitionedFiles.deleteRows)
 
   /** Row-level DELETE via deletion vectors (merge-on-read; PROTOCOL.md
     * §Deletion Vectors): matching rows are tombstoned by row ordinal —
@@ -762,34 +754,26 @@ object Delta {
     val hit = coalesce(pred, lit(false))
     val candidates = DeltaStats.prune(snap.files, pred, snap.schema, snap.partitionColumns)
     if (candidates.isEmpty) return (snap.version, 0L)
-    def normPath(f: AddFile): String =
-      Paths.get(absolutePath(tablePath, f.path)).normalize.toString
-    // one distributed pass: new tombstone ordinals per file (previously
-    // tombstoned rows excluded, so a repeated DELETE is a no-op and
-    // cardinalities stay exact)
-    val newPositions: Map[String, Array[Long]] = minusDvTombstones(spark, tablePath,
-        PartitionedFiles.readWithPartitions(
-          spark, snap.schema, snap.partitionColumns,
-          candidates.map(f => absolutePath(tablePath, f.path)),
-          candidates.map(_.partitionValues),
-          sourceCol = Some("__graft_src"), posCol = Some("__graft_pos")),
-        candidates)
+    // one distributed pass: new tombstone ordinals per file over the
+    // live rows (previously tombstoned rows excluded, so a repeated
+    // DELETE is a no-op and cardinalities stay exact)
+    val newPositions: Map[String, Array[Long]] = cowFiles(spark, snap).liveRows(candidates)
       .filter(hit)
-      .groupBy(col("__graft_src"))
-      .agg(collect_list(col("__graft_pos")).as("__ps"))
+      .groupBy(col(PartitionedFiles.SrcCol))
+      .agg(collect_list(col(PartitionedFiles.PosCol)).as("__ps"))
       .collect()
-      .map(r => Paths.get(r.getString(0)).normalize.toString -> r.getSeq[Long](1).toArray)
+      .map(r => PartitionedFiles.normPath(r.getString(0)) -> r.getSeq[Long](1).toArray)
       .toMap
-    val touched = candidates.filter(f =>
-      newPositions.getOrElse(normPath(f), Array.empty[Long]).nonEmpty)
+    val touched: Seq[(AddFile, Array[Long])] = candidates.flatMap(f =>
+      newPositions.get(PartitionedFiles.normPath(absolutePath(tablePath, f.path))).map(f -> _))
     if (touched.isEmpty) return (snap.version, 0L)
-    val deleted = touched.map(f => newPositions(normPath(f)).length.toLong).sum
+    val deleted = touched.map(_._2.length.toLong).sum
 
     // merged blob per touched file: previous DV ∪ new tombstones
-    val blobs: Seq[(AddFile, Array[Byte], Long)] = touched.map { f =>
+    val blobs: Seq[(AddFile, Array[Byte], Long)] = touched.map { case (f, fresh) =>
       val prev = f.dv.map(DeltaDeletionVectors.positions(tablePath, _))
         .getOrElse(Array.empty[Long])
-      val all = (prev ++ newPositions(normPath(f))).distinct.sorted
+      val all = (prev ++ fresh).distinct.sorted
       (f, DeltaDeletionVectors.serialize(all), all.length.toLong)
     }
     val big = blobs.filter(_._2.length > inlineMaxBytes)
@@ -809,7 +793,7 @@ object Delta {
     val protocolLine =
       """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
         """"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}"""
-    val v = commitDml(spark, tablePath, snap, touched, withDv,
+    val v = commitDml(spark, snap, touched.map(_._1), withDv,
       System.currentTimeMillis(), "DELETE", Some(pred), Seq(protocolLine))
     (v, deleted)
   }
@@ -823,22 +807,8 @@ object Delta {
       spark: SparkSession,
       tablePath: String,
       set: Map[String, Column],
-      pred: Column): (Long, Long) = {
-    require(set.nonEmpty, "update requires at least one column assignment")
-    rewriteRows(spark, tablePath, pred, "UPDATE",
-      (slice, hit) => {
-        val bad = set.keySet -- slice.columns.toSet
-        require(bad.isEmpty, s"no such columns: ${bad.mkString(", ")}")
-        val fields = slice.schema.fields.map { f =>
-          set.get(f.name) match {
-            case Some(e) =>
-              when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }
-        slice.select(fields.toSeq: _*)
-      })
-  }
+      pred: Column): (Long, Long) =
+    rewriteRows(spark, tablePath, pred, "UPDATE", PartitionedFiles.updateRows(set))
 
   /** MERGE INTO by equality key (the upsert shape every CDC / dedup
     * pipeline needs): source rows whose `key` matches a table row
@@ -847,7 +817,8 @@ object Delta {
     * finds the files actually containing matches, and only those
     * rewrite (unmatched old rows + updated matches + inserts land as new
     * files). The source must be key-unique (multiple matches per target
-    * row is ambiguous — same contract as production Delta MERGE); the
+    * row is ambiguous — same contract as production Delta MERGE) except
+    * for null keys, which match nothing and each insert; the
     * TARGET may hold duplicate keys, and each duplicate row is updated
     * in place like production MERGE's WHEN MATCHED UPDATE. Returns
     * (version, rows updated, rows inserted). */
@@ -861,36 +832,21 @@ object Delta {
     PartitionedFiles.requireSameSchema(snap.schema, source.schema, s"delta merge into $tablePath")
     val src = source.persist()
     try {
-      val dup = src.groupBy(col(key)).count().filter(col("count") > 1).limit(1).count()
+      // null keys never match a target row, so they cannot be ambiguous
+      val dup = src.filter(col(key).isNotNull).groupBy(col(key)).count()
+        .filter(col("count") > 1).limit(1).count()
       require(dup == 0, s"merge source has duplicate values of $key — ambiguous matches")
 
       // key-range narrowing: files outside [min(src.key), max(src.key)]
       // cannot contain a match
       val r = src.agg(min(col(key)).as("lo"), max(col(key)).as("hi")).collect()(0)
-      val candidates =
-        if (r.isNullAt(0)) Seq.empty[AddFile]
-        else DeltaStats.prune(snap.files,
-          col(key) >= lit(r.get(0)) && col(key) <= lit(r.get(1)),
-          snap.schema, snap.partitionColumns)
-      def normPath(f: AddFile): String =
-        Paths.get(absolutePath(tablePath, f.path)).normalize.toString
-
-      val matchedPerFile: Map[String, Long] =
-        if (candidates.isEmpty) Map.empty
-        else minusDvTombstones(spark, tablePath,
-            PartitionedFiles.readWithPartitions(
-              spark, snap.schema, snap.partitionColumns,
-              candidates.map(f => absolutePath(tablePath, f.path)),
-              candidates.map(_.partitionValues),
-              sourceCol = Some("__graft_src"), posCol = Some("__graft_pos")),
-            candidates)
-          .join(src.select(col(key)), Seq(key), "left_semi")
-          .groupBy(col("__graft_src")).count()
-          .collect()
-          .map(rw => Paths.get(rw.getString(0)).normalize.toString -> rw.getLong(1))
-          .toMap
-      val touched = candidates.filter(f => matchedPerFile.getOrElse(normPath(f), 0L) > 0L)
-      val updated = matchedPerFile.valuesIterator.sum
+      val keyRange =
+        if (r.isNullAt(0)) None else Some(col(key) >= lit(r.get(0)) && col(key) <= lit(r.get(1)))
+      val candidates = keyRange.fold(Seq.empty[AddFile])(
+        DeltaStats.prune(snap.files, _, snap.schema, snap.partitionColumns))
+      // the matched-per-file pass is a semi-join on the source keys
+      val (touched, updated) = cowFiles(spark, snap).touched(candidates)(
+        _.join(src.select(col(key)), Seq(key), "left_semi"))
 
       val now = System.currentTimeMillis()
       val ordered = snap.schema.fieldNames.map(col).toSeq
@@ -923,15 +879,10 @@ object Delta {
         .unionByName(updatedRows.select(ordered: _*))
         .unionByName(insertRows.select(ordered: _*))
       val staged = PartitionedFiles.stageAndMove(newData, tablePath, snap.partitionColumns)
-      val statsByRel = DeltaStats.collect(spark, tablePath, staged, snap.dataSchema)
-      val added = staged.map(f => AddFile(PartitionedFiles.percentEncodePath(f.relPath),
-        f.partitionValues, f.sizeBytes, now, statsByRel.get(f.relPath)))
+      val added = addsOf(spark, tablePath, staged, snap.dataSchema, now)
       // a concurrent append inside the source's key range would hold rows
       // this MERGE should have matched — conflict on retry (see commitDml)
-      val mergePred =
-        if (r.isNullAt(0)) None
-        else Some(col(key) >= lit(r.get(0)) && col(key) <= lit(r.get(1)))
-      val v = commitDml(spark, tablePath, snap, touched, added, now, "MERGE", mergePred)
+      val v = commitDml(spark, snap, touched, added, now, "MERGE", keyRange)
       (v, updated, inserted)
     } finally { src.unpersist(); () }
   }
@@ -943,46 +894,21 @@ object Delta {
       operation: String,
       rewrite: (DataFrame, Column) => DataFrame): (Long, Long) = {
     val snap = snapshot(spark, tablePath)
-    val hit = coalesce(pred, lit(false))
-    // phase 1: stats narrow to files that MIGHT contain matches
+    // stats narrow to files that MIGHT contain matches; the recipe counts
+    // matches minus DV-tombstoned rows (a CoW DML on a DV table must
+    // neither count nor resurrect already-deleted rows) and rewrites
+    // ONLY the touched files
     val candidates = DeltaStats.prune(snap.files, pred, snap.schema, snap.partitionColumns)
-    if (candidates.isEmpty) return (snap.version, 0L)
-    def normPath(f: AddFile): String =
-      Paths.get(absolutePath(tablePath, f.path)).normalize.toString
-    // phase 2: one distributed pass counts matches per candidate file
-    // (minus DV-tombstoned rows — a CoW DML on a DV table must neither
-    // count nor resurrect already-deleted rows)
-    val matches: Map[String, Long] = minusDvTombstones(spark, tablePath,
-        PartitionedFiles.readWithPartitions(
-          spark, snap.schema, snap.partitionColumns,
-          candidates.map(f => absolutePath(tablePath, f.path)),
-          candidates.map(_.partitionValues),
-          sourceCol = Some("__graft_src"), posCol = Some("__graft_pos")),
-        candidates)
-      .groupBy(col("__graft_src"))
-      .agg(sum(when(hit, 1L).otherwise(0L)).as("__m"))
-      .collect()
-      .map(r => Paths.get(r.getString(0)).normalize.toString -> r.getLong(1))
-      .toMap
-    val touched = candidates.filter(f => matches.getOrElse(normPath(f), 0L) > 0L)
-    val changed = matches.valuesIterator.sum
-    if (touched.isEmpty) return (snap.version, 0L)
-    // phase 3: rewrite ONLY the touched files
-    val now = System.currentTimeMillis()
-    val slice = readSnapshot(spark, snap.copy(files = touched))
-    val staged = PartitionedFiles.stageAndMove(
-      rewrite(slice, hit), tablePath, snap.partitionColumns)
-    val statsByRel = DeltaStats.collect(spark, tablePath, staged, snap.dataSchema)
-    val added = staged.map(f => AddFile(PartitionedFiles.percentEncodePath(f.relPath),
-      f.partitionValues, f.sizeBytes, now, statsByRel.get(f.relPath)))
-
-    val v = commitDml(spark, tablePath, snap, touched, added, now, operation, Some(pred))
-    (v, changed)
+    cowFiles(spark, snap).rewrite(candidates, pred)(rewrite) match {
+      case None => (snap.version, 0L)
+      case Some((touched, changed, rows)) =>
+        val now = System.currentTimeMillis()
+        val staged = PartitionedFiles.stageAndMove(rows, tablePath, snap.partitionColumns)
+        val added = addsOf(spark, tablePath, staged, snap.dataSchema, now)
+        (commitDml(spark, snap, touched, added, now, operation, Some(pred)), changed)
+    }
   }
 
-  /** dataChange=true removes + adds commit with version-race retry; a
-    * concurrent commit that removed any rewritten file makes the DML
-    * non-serializable → refuse (delete the staged outputs, throw). */
   /** Serializability check for a DML retrying after a version race.
     * Conflict when (1) any file this DML rewrites is no longer live (a
     * concurrent rewrite of the same rows won), or (2) a concurrent commit
@@ -1011,50 +937,28 @@ object Delta {
     }
   }
 
+  /** Publish a dataChange=true DML commit (removes + adds) of `start`'s
+    * `removed` files. A version race retries at the next version unless
+    * [[dmlConflict]] finds the DML no longer serializable: then it
+    * deletes the staged outputs and throws. */
   private def commitDml(
       spark: SparkSession,
-      tablePath: String,
       start: Snapshot,
       removed: Seq[AddFile],
       added: Seq[AddFile],
       now: Long,
       operation: String,
       pred: Option[Column],
-      headLines: Seq[String] = Nil): Long = {
-    val om = mapper
-    val lines = mutable.ArrayBuffer.empty[String]
-    lines ++= headLines
-    removed.foreach { f =>
-      val o = om.createObjectNode()
-      val r = o.putObject("remove")
-      r.put("path", f.path); r.put("deletionTimestamp", now); r.put("dataChange", true)
-      lines += om.writeValueAsString(o)
-    }
-    added.foreach(a => lines += addJson(om, a, dataChange = true))
-    val ci = om.createObjectNode()
-    val info = ci.putObject("commitInfo")
-    info.put("timestamp", now); info.put("operation", operation)
-    lines += om.writeValueAsString(ci)
-
-    var attempt = start.version + 1
-    var committed = -1L
-    while (committed < 0) {
-      val tmp = logDir(tablePath).resolve(s".tmp-${UUID.randomUUID()}.json")
-      Files.write(tmp, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-      try { AtomicClaim.publish(tmp, commitFile(tablePath, attempt)); committed = attempt }
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        Files.delete(tmp)
-        val latest = snapshot(spark, tablePath)
-        if (dmlConflict(start, latest, removed, pred)) {
-          added.foreach(a =>
-            Files.deleteIfExists(Paths.get(absolutePath(tablePath, a.path))))
-          throw new IllegalStateException(
-            s"$operation conflicts with a concurrent commit on $tablePath — retry the operation")
-        }
-        attempt = latest.version + 1
+      head: Seq[String] = Nil): Long = {
+    val lines = commitLines(head, removed.map(_.path), added, dataChange = true, now, operation)
+    publish(spark, start.tablePath, start.version + 1, lines) { latest =>
+      if (!dmlConflict(start, latest, removed, pred)) Right(lines)
+      else {
+        deleteStaged(start.tablePath, added)
+        throw new IllegalStateException(s"$operation conflicts with a concurrent commit on " +
+          s"${start.tablePath} — retry the operation")
       }
     }
-    committed
   }
 
   /** Physically delete data files no longer referenced by the CURRENT
@@ -1075,7 +979,7 @@ object Delta {
       .map(f => absolutePath(tablePath, f.path)) ++
       snap.files.flatMap(_.dv).filter(d => d.storageType == "u" || d.storageType == "p")
         .map(d => DeltaDeletionVectors.absolutePath(tablePath, d)))
-      .map(p => Paths.get(p).normalize.toString).toSet
+      .map(PartitionedFiles.normPath).toSet
     val root = Paths.get(tablePath)
     val cutoff = System.currentTimeMillis() - math.max(retainMillis, 0L)
     var deleted = 0
@@ -1170,18 +1074,13 @@ object Delta {
     val part = Files.walk(scratch).iterator().asScala
       .find(p => p.getFileName.toString.endsWith(".parquet")).get
     Files.move(part, checkpointFile(tablePath, st.version), StandardCopyOption.REPLACE_EXISTING)
-    deleteRecursively(scratch)
+    PartitionedFiles.deleteRecursively(scratch)
     val nRows = spark.read.parquet(checkpointFile(tablePath, st.version).toString).count()
     val hint = s"""{"version":${st.version},"size":$nRows}"""
     Files.write(logDir(tablePath).resolve("_last_checkpoint"), hint.getBytes(StandardCharsets.UTF_8))
     st.version
   }
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-
   private[graft] def deleteTable(tablePath: String): Unit =
-    deleteRecursively(Paths.get(tablePath))
+    PartitionedFiles.deleteRecursively(Paths.get(tablePath))
 }

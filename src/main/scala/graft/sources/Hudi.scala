@@ -166,7 +166,8 @@ object Hudi {
     prior.foreach(tl =>
       PartitionedFiles.requireSameSchema(tl.schema, df.schema, s"hudi $mode to $tablePath"))
 
-    val action = if (mode == "overwrite") "replacecommit" else "commit"
+    val overwrite = mode == "overwrite"
+    val action = if (overwrite) "replacecommit" else "commit"
     val instant = claimInstant(dir, action, prior.map(_.completedInstants).getOrElse(Nil))
     if (!exists) {
       val props = Seq(
@@ -179,17 +180,35 @@ object Hudi {
         props.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
     }
 
-    // spec ordering: requested (claimed above) -> inflight -> data -> completed
-    Files.write(dir.resolve(s"$instant.$action.inflight"), Array.emptyByteArray)
+    // overwrite replaces EVERY file group the planning timeline saw: a
+    // commit that landed since makes that replacement a lost update —
+    // refuse (appends are always serializable: they only add new groups)
+    commitInstant(tablePath, instant, action, df, partCols,
+      Option.when(overwrite)(prior.map(_.slices).getOrElse(Nil)),
+      if (overwrite) "insert_overwrite_table" else "insert",
+      Option.when(overwrite)(prior.map(_.completedInstants).getOrElse(Nil)),
+      s"hudi overwrite of $tablePath conflicts with a concurrent commit — retry")
+    instant
+  }
 
+  /** Land `df` as the files of the claimed `instant` (spec ordering:
+    * requested -> inflight -> data -> completed) and publish a commit
+    * listing them per partition, plus the file groups it `replaces`.
+    * With `planned` (the completed instants the caller planned against),
+    * any commit completed since makes the instant stale: it aborts with
+    * `conflict` instead. */
+  private def commitInstant(tablePath: String, instant: String, action: String,
+      df: DataFrame, partCols: Seq[String], replaces: Option[Seq[FileSlice]],
+      operation: String, planned: Option[Seq[String]], conflict: String): Unit = {
+    val dir = hoodieDir(tablePath)
+    Files.write(dir.resolve(s"$instant.$action.inflight"), Array.emptyByteArray)
     val staged = PartitionedFiles.stageAndMove(df, tablePath, partCols,
       renamePart = p => s"${UUID.randomUUID()}_0-0-0_$instant.parquet")
 
     val om = mapper
     val root = om.createObjectNode()
-    val byPart = staged.groupBy(f => partitionPathOf(f.relPath))
     val pw = root.putObject("partitionToWriteStats")
-    byPart.foreach { case (part, files) =>
+    staged.groupBy(f => partitionPathOf(f.relPath)).foreach { case (part, files) =>
       val arr = pw.putArray(part)
       files.foreach { f =>
         val st = arr.addObject()
@@ -198,24 +217,17 @@ object Hudi {
         st.put("fileSizeInBytes", f.sizeBytes)
       }
     }
-    if (mode == "overwrite") {
+    replaces.foreach { slices =>
       val rep = root.putObject("partitionToReplaceFileIds")
-      prior.map(_.slices).getOrElse(Nil).groupBy(_.partitionPath).foreach { case (part, ss) =>
+      slices.groupBy(_.partitionPath).foreach { case (part, ss) =>
         val arr = rep.putArray(part)
         ss.map(_.fileId).distinct.foreach(arr.add)
       }
     }
-    root.put("operation", if (mode == "overwrite") "insert_overwrite_table" else "insert")
-
-    // overwrite replaces EVERY file group the planning timeline saw: a
-    // commit that landed since makes that replacement a lost update —
-    // refuse (appends are always serializable: they only add new groups)
-    if (mode == "overwrite" &&
-        completedInstantsNow(tablePath) != prior.map(_.completedInstants).getOrElse(Nil))
-      abortInstant(tablePath, dir, instant, action, staged,
-        s"hudi overwrite of $tablePath conflicts with a concurrent commit — retry")
+    root.put("operation", operation)
+    if (planned.exists(_ != completedInstantsNow(tablePath)))
+      abortInstant(tablePath, dir, instant, action, staged, conflict)
     publishCommit(dir, instant, action, om.writeValueAsBytes(root))
-    instant
   }
 
   /** Make the instant visible atomically: stage the commit json then
@@ -238,13 +250,12 @@ object Hudi {
     * drops the old groups, `partitionToWriteStats` adds the rewritten
     * files — Hudi's insert-overwrite machinery applied per-group).
     * Column stats live in Hudi's metadata table (HFile, out of from-spec
-    * scope), so candidates are found with one distributed per-file match
-    * count instead of stats pruning. NULL predicate keeps the row.
+    * scope), so every file slice is a candidate of the one distributed
+    * per-file match count. NULL predicate keeps the row.
     * Returns (commit instant, rows deleted). */
   def delete(spark: SparkSession, tablePath: String,
       pred: org.apache.spark.sql.Column): (String, Long) =
-    dml(spark, tablePath, pred, "delete", (slice, hit) =>
-      slice.filter(org.apache.spark.sql.functions.not(hit)))
+    dml(spark, tablePath, pred, "delete", PartitionedFiles.deleteRows)
 
   /** Row-level UPDATE via copy-on-write: `set` maps column name →
     * replacement expression, applied where `pred` holds. */
@@ -252,21 +263,8 @@ object Hudi {
       spark: SparkSession,
       tablePath: String,
       set: Map[String, org.apache.spark.sql.Column],
-      pred: org.apache.spark.sql.Column): (String, Long) = {
-    require(set.nonEmpty, "update requires at least one column assignment")
-    dml(spark, tablePath, pred, "upsert", (slice, hit) => {
-      import org.apache.spark.sql.functions.{col, when}
-      val bad = set.keySet -- slice.columns.toSet
-      require(bad.isEmpty, s"no such columns: ${bad.mkString(", ")}")
-      val fields = slice.schema.fields.map { f =>
-        set.get(f.name) match {
-          case Some(e) => when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }
-      slice.select(fields.toSeq: _*)
-    })
-  }
+      pred: org.apache.spark.sql.Column): (String, Long) =
+    dml(spark, tablePath, pred, "upsert", PartitionedFiles.updateRows(set))
 
   private def dml(
       spark: SparkSession,
@@ -274,64 +272,22 @@ object Hudi {
       pred: org.apache.spark.sql.Column,
       operation: String,
       rewrite: (DataFrame, org.apache.spark.sql.Column) => DataFrame): (String, Long) = {
-    import org.apache.spark.sql.functions._
     val tl = timeline(tablePath)
-    val latest = tl.completedInstants.maxOption.getOrElse("")
-    if (tl.slices.isEmpty) return (latest, 0L)
-    val hit = coalesce(pred, lit(false))
-    def norm(p: String): String = Paths.get(p).normalize.toString
-    def absOf(s: FileSlice): String = s"$tablePath/${s.relPath}"
-
-    val matches: Map[String, Long] = PartitionedFiles.readWithPartitions(
-        spark, tl.schema, tl.partitionColumns,
-        tl.slices.map(absOf), tl.slices.map(s => partitionValues(tl, s.partitionPath)),
-        sourceCol = Some("__graft_src"))
-      .groupBy(col("__graft_src"))
-      .agg(sum(when(hit, 1L).otherwise(0L)).as("__m"))
-      .collect()
-      .map(r => norm(r.getString(0)) -> r.getLong(1)).toMap
-    val touched = tl.slices.filter(s => matches.getOrElse(norm(absOf(s)), 0L) > 0L)
-    val changed = matches.valuesIterator.sum
-    if (touched.isEmpty) return (latest, 0L)
-
-    val slice = PartitionedFiles.readWithPartitions(
-      spark, tl.schema, tl.partitionColumns,
-      touched.map(absOf), touched.map(s => partitionValues(tl, s.partitionPath)))
-    val out = rewrite(slice, hit)
-
-    val dir = hoodieDir(tablePath)
-    val instant = claimInstant(dir, "replacecommit", tl.completedInstants)
-    Files.write(dir.resolve(s"$instant.replacecommit.inflight"), Array.emptyByteArray)
-    val staged = PartitionedFiles.stageAndMove(out, tablePath, tl.partitionColumns,
-      renamePart = p => s"${UUID.randomUUID()}_0-0-0_$instant.parquet")
-
-    val om = mapper
-    val root = om.createObjectNode()
-    val pw = root.putObject("partitionToWriteStats")
-    staged.groupBy(f => partitionPathOf(f.relPath)).foreach { case (part, files) =>
-      val arr = pw.putArray(part)
-      files.foreach { f =>
-        val st = arr.addObject()
-        st.put("fileId", f.relPath.substring(f.relPath.lastIndexOf('/') + 1).split('_')(0))
-        st.put("path", f.relPath)
-        st.put("fileSizeInBytes", f.sizeBytes)
-      }
+    val files = new PartitionedFiles.CowFiles[FileSlice](spark, tl.schema, tl.partitionColumns,
+      s => s"$tablePath/${s.relPath}", s => partitionValues(tl, s.partitionPath))
+    files.rewrite(tl.slices, pred)(rewrite) match {
+      case None => (tl.completedInstants.maxOption.getOrElse(""), 0L)
+      case Some((touched, changed, rows)) =>
+        val instant = claimInstant(hoodieDir(tablePath), "replacecommit", tl.completedInstants)
+        // serializability: this replacecommit rewrites file groups as
+        // read at planning time — ANY commit completed since (a rewrite of
+        // the same groups, or an append whose rows this DML never saw)
+        // makes the rewrite stale; refuse rather than lose the update
+        commitInstant(tablePath, instant, "replacecommit", rows, tl.partitionColumns,
+          Some(touched), operation, Some(tl.completedInstants),
+          s"hudi $operation on $tablePath conflicts with a concurrent commit — retry")
+        (instant, changed)
     }
-    val rep = root.putObject("partitionToReplaceFileIds")
-    touched.groupBy(_.partitionPath).foreach { case (part, ss) =>
-      val arr = rep.putArray(part)
-      ss.map(_.fileId).distinct.foreach(arr.add)
-    }
-    root.put("operation", operation)
-    // serializability: this replacecommit rewrites file groups as read at
-    // planning time — ANY commit completed since (a rewrite of the same
-    // groups, or an append whose rows this DML never saw) makes the
-    // rewrite stale; refuse rather than lose the concurrent update
-    if (completedInstantsNow(tablePath) != tl.completedInstants)
-      abortInstant(tablePath, dir, instant, "replacecommit", staged,
-        s"hudi $operation on $tablePath conflicts with a concurrent commit — retry")
-    publishCommit(dir, instant, "replacecommit", om.writeValueAsBytes(root))
-    (instant, changed)
   }
 
   /** Physically delete file slices no longer visible to the latest

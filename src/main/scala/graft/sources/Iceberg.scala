@@ -214,16 +214,8 @@ object Iceberg {
         s"Iceberg table has no current snapshot: $tablePath")
       meta.get("current-snapshot-id").asLong
     }
-    val snap = meta.get("snapshots").elements().asScala
-      .find(_.get("snapshot-id").asLong == snapId)
-      .getOrElse(sys.error(s"snapshot $snapId not found in $tablePath"))
-    val manifests = readAvro(resolve(tablePath, snap.get("manifest-list").asText))
-      .map { ml =>
-        val seq = Option(ml.getSchema.getField("sequence_number"))
-          .flatMap(_ => Option(ml.get("sequence_number")))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-        (resolve(tablePath, ml.get("manifest_path").toString), seq)
-      }
+    val manifests = manifestsOf(tablePath, meta, snapId)
+      .map { case (mp, _, seq) => (resolve(tablePath, mp), seq) }
     (schema, partitionFields, snapId, manifests, fieldsById)
   }
 
@@ -286,37 +278,20 @@ object Iceberg {
         PartitionedFiles.readWithPartitions(
           spark, schema, partitionFields,
           live.map(_.path), live.map(_.partition))
-      else applyDeletes(spark, schema, partitionFields, live, dels)
+      // merge-on-read: scan with (path, ordinal) attached, subtract deletes
+      else cowFiles(spark, schema, partitionFields, dels).liveRows(live)
+        .drop(PartitionedFiles.SrcCol, PartitionedFiles.PosCol)
     dataFilter.fold(df)(df.filter)
   }
 
-  /** Merge-on-read: scan the live files with (path, ordinal) attached and
-    * subtract both delete kinds. */
-  private def applyDeletes(
-      spark: SparkSession,
-      schema: StructType,
-      partitionFields: Seq[String],
-      live: Seq[DataFileRef],
-      dels: Seq[DataFileRef]): DataFrame = {
-    val data = PartitionedFiles.readWithPartitions(
-      spark, schema, partitionFields,
-      live.map(_.path), live.map(_.partition),
-      sourceCol = Some("__graft_src"), posCol = Some("__graft_pos"))
-    subtractDeletes(spark, data, schema, live, dels).drop("__graft_src", "__graft_pos")
-  }
-
-  /** Subtract all delete files from `data` (which must carry
-    * `__graft_src`/`__graft_pos` and be backed by exactly the files in
-    * `live`). Position deletes first, then equality deletes. */
-  private def subtractDeletes(
-      spark: SparkSession,
-      data: DataFrame,
-      schema: StructType,
-      live: Seq[DataFileRef],
-      dels: Seq[DataFileRef]): DataFrame = {
-    val afterPos = minusTombstones(spark, data, dels.filter(_.content == 1))
-    minusEquality(spark, afterPos, schema, live, dels.filter(_.content == 2))
-  }
+  /** The table's data files for the copy-on-write recipe: a scan of
+    * some of them subtracts the rows `dels` delete — position deletes
+    * first, then equality deletes. */
+  private def cowFiles(spark: SparkSession, schema: StructType, partitionFields: Seq[String],
+      dels: Seq[DataFileRef]): PartitionedFiles.CowFiles[DataFileRef] =
+    new PartitionedFiles.CowFiles[DataFileRef](spark, schema, partitionFields, _.path, _.partition,
+      (data, live) => minusEquality(spark, minusTombstones(spark, data, dels),
+        schema, live, dels.filter(_.content == 2)))
 
   /** v2 position deletes (spec §Position Delete Files): delete files are
     * parquet with reserved columns `file_path` (2147483546) + `pos`
@@ -330,7 +305,7 @@ object Iceberg {
     * commits; paths are unique per spec, so path-addressed application is
     * equivalent for reads of a consistent snapshot).
     *
-    * Anti-join `data` (which must carry `__graft_src`/`__graft_pos`)
+    * Anti-join `data` (which must carry the source and position columns)
     * against the rows of the position-delete files in `dels`. */
   private def minusTombstones(
       spark: SparkSession, data: DataFrame, dels: Seq[DataFileRef]): DataFrame = {
@@ -344,8 +319,8 @@ object Iceberg {
         regexp_replace(col("file_path"), "^file:(//)?", "").as("__del_path"),
         col("pos").as("__del_pos"))
     data.join(tombstones,
-        data("__graft_src") === col("__del_path") &&
-          data("__graft_pos") === col("__del_pos"),
+        data(PartitionedFiles.SrcCol) === col("__del_path") &&
+          data(PartitionedFiles.PosCol) === col("__del_pos"),
         "left_anti")
   }
 
@@ -373,14 +348,13 @@ object Iceberg {
     if (eqs.isEmpty) return data
     eqs.foreach(f => require(f.equalityCols.nonEmpty,
       s"equality delete file without equality_ids: ${f.path}"))
-    def norm(p: String): String = Paths.get(p).normalize.toString
-    val normUdf = udf(norm _)
     val seqSchema = StructType(Seq(
       StructField("__sq_nk", StringType), StructField("__graft_seq", LongType)))
-    val seqRows = live.map(f => Row(norm(f.path), f.seq))
+    val seqRows = live.map(f => Row(PartitionedFiles.normPath(f.path), f.seq))
     val seqDf = spark.createDataFrame(
       spark.sparkContext.parallelize(seqRows, 1), seqSchema)
-    val withSeq = data.withColumn("__sq_nk", normUdf(col("__graft_src")))
+    val withSeq = data
+      .withColumn("__sq_nk", PartitionedFiles.normPathUdf(col(PartitionedFiles.SrcCol)))
       .join(broadcast(seqDf), Seq("__sq_nk"))
     val byName = schema.fields.map(f => f.name -> f.dataType).toMap
     val out = eqs.groupBy(f => (f.equalityCols, f.partition)).toSeq
@@ -457,17 +431,8 @@ object Iceberg {
     }
 
     // 1. data files: hive-layout staging guarantees value-pure files so
-    //    each manifest entry's partition tuple is exact (pruning-safe);
-    //    record counts come from one metadata job, not one job per file.
-    val byName = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val staged = PartitionedFiles
-      .stageAndMove(df, tablePath, partCols, subDir = "data", countRows = true)
-    val newFiles = staged
-      .map(f => DataFileRef(f.relPath, f.rowCount, f.sizeBytes, f.partitionValues))
-    // per-column lower/upper bounds + null counts, one distributed pass
-    // (spec §Manifests) — the file-skipping metadata read() prunes on
-    val dataSchema = StructType(df.schema.filterNot(f => partCols.contains(f.name)))
-    val rawStats = DeltaStats.collectRaw(df.sparkSession, tablePath, staged, dataSchema)
+    //    each manifest entry's partition tuple is exact (pruning-safe)
+    val (newFiles, rawStats) = stageData(df, tablePath, df.schema, partCols)
     // manifest stats must be keyed by the TABLE's field ids: reuse the
     // prior metadata's schema node whenever it still describes the data
     // (same-schema append/overwrite); regenerate only for a new table or
@@ -475,44 +440,82 @@ object Iceberg {
     val schemaNode = prior.map(_._1).map(currentSchemaNode)
       .filter(n => sameShape(icebergToSpark(n), df.schema))
       .getOrElse(sparkToIceberg(mapper, df.schema))
-    val fieldIds: Map[String, Int] = schemaNode.get("fields").elements().asScala
-      .map(f => f.get("name").asText -> f.get("id").asInt).toMap
 
-    // 2. avro manifest for this snapshot
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    val manifestName = s"manifest-$snapshotId.avro"
+    // 2. one snapshot: a manifest of the new files (on overwrite also
+    //    every prior file, recorded as DELETED) at the new data sequence
+    //    number, plus (on append) the prior snapshot's manifests carried
+    //    forward with the seqs they were added at
     val removedAsDeleted: Seq[DataFileRef] =
       if (mode == "overwrite") prior.map(_._2.files).getOrElse(Nil).map(f =>
         f.copy(path = relativize(tablePath, f.path))) else Nil
-    writeManifest(metadataDir(tablePath).resolve(manifestName), df.schema, partCols,
-      byName, newFiles.toSeq, removedAsDeleted, snapshotId, rawStats, fieldIds)
-
-    // 3. manifest list: new manifest (at the new data sequence number) +
-    //    (on append) the prior snapshot's manifests carried forward with
-    //    the seqs they were added at
-    val nextSeq = nextSequenceNumber(prior.map(_._1), formatVersion)
     val priorManifests: Seq[(String, Long, Long)] =
       if (mode == "append")
-        prior.flatMap { case (m, st) =>
-          if (st.snapshotId == -1) None
-          else m.get("snapshots").elements().asScala
-            .find(_.get("snapshot-id").asLong == st.snapshotId)
-            .map(sn => readManifestListEntries(tablePath, sn.get("manifest-list").asText))
-        }.getOrElse(Nil)
+        prior.filter(_._2.snapshotId != -1).map { case (m, st) =>
+          manifestsOf(tablePath, m, st.snapshotId) }.getOrElse(Nil)
       else Nil
-    val manifestListName = s"snap-$snapshotId.avro"
-    val mlPath = metadataDir(tablePath).resolve(manifestListName)
-    Files.createDirectories(mlPath.getParent)
-    val manifestFullPath = metadataDir(tablePath).resolve(manifestName).toString
-    writeManifestList(mlPath,
-      (manifestFullPath, Files.size(Paths.get(manifestFullPath)), nextSeq) +: priorManifests,
-      snapshotId)
+    commitSnapshot(tablePath, prior.map(_._1), df.schema, partCols, newFiles, removedAsDeleted,
+      rawStats, fieldIdsOf(schemaNode), nextSequenceNumber(prior.map(_._1), formatVersion),
+      if (mode == "overwrite") "overwrite" else "append", formatVersion)(_ => priorManifests)
+  }
 
-    // 4. new metadata json + version hint
-    publishMetadata(tablePath, prior.map(_._1), df.schema, partCols,
-      snapshotId, mlPath, if (mode == "overwrite") "overwrite" else "append",
+  /** Stage `df` as data files under `data/`: their refs with row counts
+    * (one metadata job) and their per-column lower/upper bounds + null
+    * counts (one distributed pass; spec §Manifests — the file-skipping
+    * metadata [[read]] prunes on). */
+  private def stageData(df: DataFrame, tablePath: String, schema: StructType,
+      partCols: Seq[String]): (Seq[DataFileRef], Map[String, DeltaStats.RawFileStats]) = {
+    val staged = PartitionedFiles
+      .stageAndMove(df, tablePath, partCols, subDir = "data", countRows = true)
+    val dataSchema = StructType(schema.filterNot(f => partCols.contains(f.name)))
+    (staged.map(f => DataFileRef(f.relPath, f.rowCount, f.sizeBytes, f.partitionValues)),
+      DeltaStats.collectRaw(df.sparkSession, tablePath, staged, dataSchema))
+  }
+
+  /** Commit one snapshot: a new manifest holding `added` (ADDED) and
+    * `deleted` (DELETED), a manifest list of it at sequence number `seq`
+    * plus `carried(snapshotId)`, then the metadata that makes the
+    * snapshot current ([[publishMetadata]]). Returns the snapshot id. */
+  private def commitSnapshot(
+      tablePath: String,
+      prior: Option[JsonNode],
+      schema: StructType,
+      partCols: Seq[String],
+      added: Seq[DataFileRef],
+      deleted: Seq[DataFileRef],
+      rawStats: Map[String, DeltaStats.RawFileStats],
+      fieldIds: Map[String, Int],
+      seq: Long,
+      operation: String,
+      formatVersion: Int = 1)(carried: Long => Seq[(String, Long, Long)]): Long = {
+    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
+    val manifest = metadataDir(tablePath).resolve(s"manifest-$snapshotId.avro")
+    writeManifest(manifest, schema, partCols, schema.fields.map(f => f.name -> f.dataType).toMap,
+      added, deleted, snapshotId, rawStats, fieldIds)
+    val mlPath = metadataDir(tablePath).resolve(s"snap-$snapshotId.avro")
+    writeManifestList(mlPath,
+      (manifest.toString, Files.size(manifest), seq) +: carried(snapshotId), snapshotId)
+    publishMetadata(tablePath, prior, schema, partCols, snapshotId, mlPath, operation,
       formatVersion)
     snapshotId
+  }
+
+  private def fieldIdsOf(schemaNode: JsonNode): Map[String, Int] =
+    schemaNode.get("fields").elements().asScala
+      .map(f => f.get("name").asText -> f.get("id").asInt).toMap
+
+  /** Snapshot `snapshotId`'s manifests as (raw path, length, sequence
+    * number) — seq 0 when the list predates sequence tracking (v1). */
+  private def manifestsOf(tablePath: String, meta: JsonNode,
+      snapshotId: Long): Seq[(String, Long, Long)] = {
+    val snap = meta.get("snapshots").elements().asScala
+      .find(_.get("snapshot-id").asLong == snapshotId)
+      .getOrElse(sys.error(s"snapshot $snapshotId not found in $tablePath"))
+    readAvro(resolve(tablePath, snap.get("manifest-list").asText)).map { r =>
+      val seq = Option(r.getSchema.getField("sequence_number"))
+        .flatMap(_ => Option(r.get("sequence_number")))
+        .map(_.asInstanceOf[Long]).getOrElse(0L)
+      (r.get("manifest_path").toString, r.get("manifest_length").asInstanceOf[Long], seq)
+    }
   }
 
   private def relativize(tablePath: String, abs: String): String =
@@ -528,8 +531,7 @@ object Iceberg {
     * NULL predicate results keep the row. Returns (snapshotId, rows). */
   def delete(spark: SparkSession, tablePath: String,
       pred: org.apache.spark.sql.Column): (Long, Long) =
-    dml(spark, tablePath, pred, (slice, hit) =>
-      slice.filter(org.apache.spark.sql.functions.not(hit)))
+    dml(spark, tablePath, pred, PartitionedFiles.deleteRows)
 
   /** Row-level UPDATE via copy-on-write: `set` maps column name →
     * replacement expression, applied where `pred` holds. */
@@ -537,21 +539,8 @@ object Iceberg {
       spark: SparkSession,
       tablePath: String,
       set: Map[String, org.apache.spark.sql.Column],
-      pred: org.apache.spark.sql.Column): (Long, Long) = {
-    require(set.nonEmpty, "update requires at least one column assignment")
-    dml(spark, tablePath, pred, (slice, hit) => {
-      import org.apache.spark.sql.functions.{col, when}
-      val bad = set.keySet -- slice.columns.toSet
-      require(bad.isEmpty, s"no such columns: ${bad.mkString(", ")}")
-      val fields = slice.schema.fields.map { f =>
-        set.get(f.name) match {
-          case Some(e) => when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }
-      slice.select(fields.toSeq: _*)
-    })
-  }
+      pred: org.apache.spark.sql.Column): (Long, Long) =
+    dml(spark, tablePath, pred, PartitionedFiles.updateRows(set))
 
   /** Merge-on-read row-level DELETE (spec §Position Delete Files): rows
     * matching `pred` are tombstoned by (file_path, pos) WITHOUT rewriting
@@ -578,14 +567,11 @@ object Iceberg {
     // (path, pos) of matching rows, minus rows already dead (position OR
     // equality deletes) — a repeated DELETE over the same predicate is a
     // no-op, not a second tombstone for the same position
-    val delRows = subtractDeletes(spark,
-        PartitionedFiles.readWithPartitions(
-          spark, st.schema, st.partitionFields,
-          candidates.map(_.path), candidates.map(_.partition),
-          sourceCol = Some("__graft_src"), posCol = Some("__graft_pos")),
-        st.schema, candidates, st.deleteFiles)
+    val delRows = cowFiles(spark, st.schema, st.partitionFields, st.deleteFiles)
+      .liveRows(candidates)
       .filter(hit)
-      .select(col("__graft_src").as("file_path"), col("__graft_pos").as("pos"))
+      .select(col(PartitionedFiles.SrcCol).as("file_path"),
+        col(PartitionedFiles.PosCol).as("pos"))
     // delete files are scoped by the partition tuple of their TARGET data
     // files: attach it via a broadcast path→tuple map (normalized join
     // key; the STORED file_path stays byte-identical to what the scan
@@ -594,16 +580,15 @@ object Iceberg {
     val withPart =
       if (st.partitionFields.isEmpty) delRows
       else {
-        val normUdf = udf((s: String) => Paths.get(s).normalize.toString)
         val pvSchema = StructType(
           StructField("__nk", StringType) +:
             st.partitionFields.map(c => StructField(s"__pv_$c", StringType)))
         val pvRows = candidates.map(f => Row.fromSeq(
-          Paths.get(f.path).normalize.toString +:
+          PartitionedFiles.normPath(f.path) +:
             st.partitionFields.map(c => f.partition.getOrElse(c, null))))
         val pvDf = spark.createDataFrame(spark.sparkContext.parallelize(pvRows, 1), pvSchema)
         st.partitionFields.foldLeft(
-            delRows.withColumn("__nk", normUdf(col("file_path")))
+            delRows.withColumn("__nk", PartitionedFiles.normPathUdf(col("file_path")))
               .join(broadcast(pvDf), Seq("__nk"))) { (df, c) =>
             df.withColumn(c, col(s"__pv_$c").cast(byName(c)))
           }
@@ -616,7 +601,7 @@ object Iceberg {
       DataFileRef(f.relPath, f.rowCount, f.sizeBytes, f.partitionValues, None, content = 1))
     val deleted = delFiles.map(_.recordCount).sum
     if (deleted == 0) return (st.snapshotId, 0L)
-    (commitDeleteSnapshot(tablePath, meta, st, byName, delFiles.toSeq), deleted)
+    (commitDeleteSnapshot(tablePath, meta, st, delFiles.toSeq), deleted)
   }
 
   /** Merge-on-read row-level DELETE by key (spec §Equality Delete Files):
@@ -653,10 +638,8 @@ object Iceberg {
         content = 2, seq = nextSeq, equalityCols = cols))
     val keyRows = delFiles.map(_.recordCount).sum
     if (keyRows == 0) return (st.snapshotId, 0L)
-    val schemaNode = currentSchemaNode(meta)
-    val fieldIds = schemaNode.get("fields").elements().asScala
-      .map(f => f.get("name").asText -> f.get("id").asInt).toMap
-    (commitDeleteSnapshot(tablePath, meta, st, byName, delFiles.toSeq, fieldIds), keyRows)
+    (commitDeleteSnapshot(tablePath, meta, st, delFiles.toSeq,
+      fieldIdsOf(currentSchemaNode(meta))), keyRows)
   }
 
   /** Commit a delete-file-only snapshot: one new manifest holding
@@ -666,135 +649,74 @@ object Iceberg {
       tablePath: String,
       meta: JsonNode,
       st: TableState,
-      byName: Map[String, DataType],
       delFiles: Seq[DataFileRef],
-      fieldIds: Map[String, Int] = Map.empty): Long = {
-    val nextSeq = nextSequenceNumber(Some(meta), 2)
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    val manifestName = s"manifest-$snapshotId.avro"
-    writeManifest(metadataDir(tablePath).resolve(manifestName), st.schema,
-      st.partitionFields, byName, delFiles, Nil, snapshotId, Map.empty, fieldIds)
-    val curSnap = meta.get("snapshots").elements().asScala
-      .find(_.get("snapshot-id").asLong == st.snapshotId)
-      .getOrElse(sys.error(s"current snapshot ${st.snapshotId} missing from metadata"))
-    val priorManifests = readManifestListEntries(tablePath, curSnap.get("manifest-list").asText)
-    val mlPath = metadataDir(tablePath).resolve(s"snap-$snapshotId.avro")
-    val mfp = metadataDir(tablePath).resolve(manifestName).toString
-    writeManifestList(mlPath,
-      (mfp, Files.size(Paths.get(mfp)), nextSeq) +: priorManifests, snapshotId)
-    publishMetadata(tablePath, Some(meta), st.schema, st.partitionFields,
-      snapshotId, mlPath, "delete")
-    snapshotId
-  }
+      fieldIds: Map[String, Int] = Map.empty): Long =
+    commitSnapshot(tablePath, Some(meta), st.schema, st.partitionFields, delFiles, Nil, Map.empty,
+      fieldIds, nextSequenceNumber(Some(meta), 2), "delete")(_ =>
+      manifestsOf(tablePath, meta, st.snapshotId))
 
+  /** Copy-on-write DELETE / UPDATE: the shared recipe over the files
+    * whose bounds may match, with rows already dead (position OR
+    * equality deletes) excluded from both the match count and the
+    * rewrite — a CoW DML on a v2 table must not resurrect (or
+    * double-count) tombstoned rows. The rewritten files land at the NEW
+    * sequence number, so older equality deletes correctly stop applying
+    * to them. */
   private def dml(
       spark: SparkSession,
       tablePath: String,
       pred: org.apache.spark.sql.Column,
       rewrite: (DataFrame, org.apache.spark.sql.Column) => DataFrame): (Long, Long) = {
-    import org.apache.spark.sql.functions._
     val meta = readMetadata(tablePath)
     val st = state(tablePath)
-    def norm(p: String): String = Paths.get(p).normalize.toString
     val keep = DeltaStats.keep(pred, st.schema, st.partitionFields)
     val candidates = st.files.filter(f => keep(f.stats, f.partition))
-    if (candidates.isEmpty) return (st.snapshotId, 0L)
-    val hit = coalesce(pred, lit(false))
-
-    // one distributed pass: matches per candidate file. Rows already dead
-    // (position OR equality deletes) are excluded FIRST — a CoW
-    // DELETE/UPDATE on a v2 table must not resurrect (or double-count)
-    // rows already tombstoned.
-    val matches: Map[String, Long] = subtractDeletes(spark,
-        PartitionedFiles.readWithPartitions(
-          spark, st.schema, st.partitionFields,
-          candidates.map(_.path), candidates.map(_.partition),
-          sourceCol = Some("__graft_src"), posCol = Some("__graft_pos")),
-        st.schema, candidates, st.deleteFiles)
-      .groupBy(col("__graft_src"))
-      .agg(sum(when(hit, 1L).otherwise(0L)).as("__m"))
-      .collect()
-      .map(r => norm(r.getString(0)) -> r.getLong(1)).toMap
-    val touchedRefs = candidates.filter(f => matches.getOrElse(norm(f.path), 0L) > 0L)
-    val changed = matches.valuesIterator.sum
-    if (touchedRefs.isEmpty) return (st.snapshotId, 0L)
-    val touchedAbs = touchedRefs.map(f => norm(f.path)).toSet
-
-    // rewrite only the touched files (again minus already-dead rows; the
-    // rewritten files land at the NEW sequence number, so older equality
-    // deletes correctly stop applying to them)
-    val slice = subtractDeletes(spark,
-        PartitionedFiles.readWithPartitions(
-          spark, st.schema, st.partitionFields,
-          touchedRefs.map(_.path), touchedRefs.map(_.partition),
-          sourceCol = Some("__graft_src"), posCol = Some("__graft_pos")),
-        st.schema, touchedRefs, st.deleteFiles)
-      .drop("__graft_src", "__graft_pos")
-    val staged = PartitionedFiles.stageAndMove(
-      rewrite(slice, hit), tablePath, st.partitionFields, subDir = "data", countRows = true)
-    val newFiles = staged.map(f => DataFileRef(f.relPath, f.rowCount, f.sizeBytes, f.partitionValues))
-    val dataSchema = StructType(st.schema.filterNot(f => st.partitionFields.contains(f.name)))
-    val rawStats = DeltaStats.collectRaw(spark, tablePath, staged, dataSchema)
-    // key the rewritten manifest's stats by the TABLE's own field ids
-    // (prior metadata), never a regenerated sequential assignment
-    val schemaNode = currentSchemaNode(meta)
-    val fieldIds = schemaNode.get("fields").elements().asScala
-      .map(f => f.get("name").asText -> f.get("id").asInt).toMap
-    val byName = st.schema.fields.map(f => f.name -> f.dataType).toMap
-
-    // new manifest: rewritten adds + touched files recorded as DELETED
-    val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
-    val manifestName = s"manifest-$snapshotId.avro"
-    writeManifest(metadataDir(tablePath).resolve(manifestName), st.schema, st.partitionFields,
-      byName, newFiles.toSeq,
-      touchedRefs.map(f => f.copy(path = relativize(tablePath, f.path))),
-      snapshotId, rawStats, fieldIds)
-
-    // carry prior manifests forward; any that still lists a touched file
-    // as live is rewritten with those entries marked DELETED (the spec
-    // retains delete entries for one snapshot)
-    val curSnap = meta.get("snapshots").elements().asScala
-      .find(_.get("snapshot-id").asLong == st.snapshotId)
-      .getOrElse(sys.error(s"current snapshot ${st.snapshotId} missing from metadata"))
-    val priorManifests = readManifestListEntries(tablePath, curSnap.get("manifest-list").asText)
-    def entryPath(e: GenericRecord): String =
-      norm(resolve(tablePath,
-        e.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString))
-    // a rewritten carried manifest keeps its ORIGINAL sequence number:
-    // its surviving entries were added at that seq, and equality-delete
-    // scoping reads the seq back from the manifest list
-    val carried: Seq[(String, Long, Long)] = priorManifests.zipWithIndex.map {
-      case ((mp, _, seq), i) =>
-      val abs = resolve(tablePath, mp)
-      val entries = readAvro(abs)
-      val hasLiveTouched = entries.exists(e =>
-        e.get("status").asInstanceOf[Int] != 2 && touchedAbs(entryPath(e)))
-      if (!hasLiveTouched) (abs, Files.size(Paths.get(abs)), seq)
-      else {
-        val dst = metadataDir(tablePath).resolve(s"manifest-$snapshotId-rw$i.avro")
-        val reader = new DataFileReader[GenericRecord](
-          new File(abs), new GenericDatumReader[GenericRecord]())
-        try {
-          val avroSchema = reader.getSchema
-          val writer = new DataFileWriter[GenericRecord](
-            new GenericDatumWriter[GenericRecord](avroSchema))
-          writer.create(avroSchema, dst.toFile)
-          try reader.iterator().asScala.foreach { e =>
-            if (touchedAbs(entryPath(e))) e.put("status", 2)
-            writer.append(e)
-          } finally writer.close()
-        } finally reader.close()
-        (dst.toString, Files.size(dst), seq)
-      }
+    cowFiles(spark, st.schema, st.partitionFields, st.deleteFiles)
+      .rewrite(candidates, pred)(rewrite) match {
+      case None => (st.snapshotId, 0L)
+      case Some((touched, changed, rows)) =>
+        val (newFiles, rawStats) = stageData(rows, tablePath, st.schema, st.partitionFields)
+        val touchedAbs = touched.map(f => PartitionedFiles.normPath(f.path)).toSet
+        def entryPath(e: GenericRecord): String = PartitionedFiles.normPath(resolve(tablePath,
+          e.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString))
+        // new manifest: rewritten adds + touched files recorded as DELETED,
+        // stats keyed by the TABLE's own field ids (prior metadata), never
+        // a regenerated sequential assignment. Prior manifests carry
+        // forward; any that still lists a touched file as live is
+        // rewritten with those entries marked DELETED (the spec retains
+        // delete entries for one snapshot), keeping its ORIGINAL sequence
+        // number: its surviving entries were added at that seq, and
+        // equality-delete scoping reads the seq back from the list.
+        val committed = commitSnapshot(tablePath, Some(meta), st.schema, st.partitionFields,
+          newFiles, touched.map(f => f.copy(path = relativize(tablePath, f.path))), rawStats,
+          fieldIdsOf(currentSchemaNode(meta)), nextSequenceNumber(Some(meta), 2), "overwrite") {
+          snapshotId => manifestsOf(tablePath, meta, st.snapshotId).zipWithIndex.map {
+            case ((mp, _, seq), i) =>
+              val abs = resolve(tablePath, mp)
+              val entries = readAvro(abs)
+              if (!entries.exists(e =>
+                  e.get("status").asInstanceOf[Int] != 2 && touchedAbs(entryPath(e))))
+                (abs, Files.size(Paths.get(abs)), seq)
+              else {
+                val dst = metadataDir(tablePath).resolve(s"manifest-$snapshotId-rw$i.avro")
+                val reader = new DataFileReader[GenericRecord](
+                  new File(abs), new GenericDatumReader[GenericRecord]())
+                try {
+                  val avroSchema = reader.getSchema
+                  val writer = new DataFileWriter[GenericRecord](
+                    new GenericDatumWriter[GenericRecord](avroSchema))
+                  writer.create(avroSchema, dst.toFile)
+                  try reader.iterator().asScala.foreach { e =>
+                    if (touchedAbs(entryPath(e))) e.put("status", 2)
+                    writer.append(e)
+                  } finally writer.close()
+                } finally reader.close()
+                (dst.toString, Files.size(dst), seq)
+              }
+          }
+        }
+        (committed, changed)
     }
-    val mlPath = metadataDir(tablePath).resolve(s"snap-$snapshotId.avro")
-    val mfp = metadataDir(tablePath).resolve(manifestName).toString
-    writeManifestList(mlPath,
-      (mfp, Files.size(Paths.get(mfp)), nextSequenceNumber(Some(meta), 2)) +: carried,
-      snapshotId)
-    publishMetadata(tablePath, Some(meta), st.schema, st.partitionFields,
-      snapshotId, mlPath, "overwrite")
-    (snapshotId, changed)
   }
 
   /** New metadata json + version hint for a snapshot whose manifest list
@@ -866,26 +788,31 @@ object Iceberg {
     sn.put("timestamp-ms", System.currentTimeMillis())
     sn.put("manifest-list", mlPath.toString)
     sn.putObject("summary").put("operation", operation)
+    claimMetadata(tablePath, root, "the operation")
+  }
+
+  /** Publish `root` as the next metadata version and point the version
+    * hint at it. Optimistic concurrency (the HadoopTables exclusive-
+    * commit contract): stage the json then hard-link-claim it as vN —
+    * readers never see a partial metadata file, and the claim fails
+    * atomically (EEXIST) if a concurrent writer already produced vN.
+    * That writer's commit was built against the same base as ours, so
+    * ours is stale: refuse (retry `what`), never overwrite. */
+  private def claimMetadata(tablePath: String, root: JsonNode, what: String): Unit = {
     val hint = metadataDir(tablePath).resolve("version-hint.text")
     val next =
       if (Files.exists(hint))
         new String(Files.readAllBytes(hint), StandardCharsets.UTF_8).trim.toInt + 1
       else 1
-    // optimistic concurrency (the HadoopTables exclusive-commit
-    // contract): stage the json then hard-link-claim it as vN — readers
-    // never see a partial metadata file, and the claim fails atomically
-    // (EEXIST) if a concurrent writer already produced vN. That writer's
-    // commit was built against the same base as ours, so ours is stale:
-    // refuse, never overwrite.
     val tmp = metadataDir(tablePath).resolve(s".tmp-v$next-${UUID.randomUUID()}.json")
-    Files.write(tmp, om.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
+    Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
     try AtomicClaim.publish(tmp, metadataDir(tablePath).resolve(s"v$next.metadata.json"))
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         Files.deleteIfExists(tmp)
         throw new IllegalStateException(
           s"concurrent Iceberg commit on $tablePath (version $next already " +
-            "exists) — retry the operation against the current table state")
+            s"exists) — retry $what against the current table state")
     }
     Files.write(hint, next.toString.getBytes(StandardCharsets.UTF_8))
   }
@@ -913,24 +840,11 @@ object Iceberg {
       }
     }
     // rewrite metadata keeping only the current snapshot
-    val om = mapper
     val root = meta.deepCopy[JsonNode]().asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     val snaps = root.putArray("snapshots")
     meta.get("snapshots").elements().asScala
       .filter(_.get("snapshot-id").asLong == current).foreach(snaps.add)
-    val hint = metadataDir(tablePath).resolve("version-hint.text")
-    val next = new String(Files.readAllBytes(hint), StandardCharsets.UTF_8).trim.toInt + 1
-    val tmp = metadataDir(tablePath).resolve(s".tmp-v$next-${UUID.randomUUID()}.json")
-    Files.write(tmp, om.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
-    try AtomicClaim.publish(tmp, metadataDir(tablePath).resolve(s"v$next.metadata.json"))
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new IllegalStateException(
-          s"concurrent Iceberg commit on $tablePath (version $next already " +
-            "exists) — retry expireSnapshots against the current table state")
-    }
-    Files.write(hint, next.toString.getBytes(StandardCharsets.UTF_8))
+    claimMetadata(tablePath, root, "expireSnapshots")
     deleted
   }
 
@@ -1083,16 +997,6 @@ object Iceberg {
         {"name":"added_snapshot_id","type":["null","long"],"default":null},
         {"name":"sequence_number","type":["null","long"],"default":null}
       ]}""")
-
-  /** Prior snapshot's manifest list as (raw path, length, sequence
-    * number) — seq 0 when the list predates sequence tracking (v1). */
-  private def readManifestListEntries(tablePath: String, mlPath: String): Seq[(String, Long, Long)] =
-    readAvro(resolve(tablePath, mlPath)).map { r =>
-      val seq = Option(r.getSchema.getField("sequence_number"))
-        .flatMap(_ => Option(r.get("sequence_number")))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      (r.get("manifest_path").toString, r.get("manifest_length").asInstanceOf[Long], seq)
-    }
 
   /** The data sequence number the NEXT commit will be stamped with —
     * matches the bump [[publishMetadata]] performs (v2 tables track
@@ -1287,11 +1191,6 @@ object Iceberg {
     convert(schema)
   }
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-
   private[graft] def deleteTable(tablePath: String): Unit =
-    deleteRecursively(Paths.get(tablePath))
+    PartitionedFiles.deleteRecursively(Paths.get(tablePath))
 }

@@ -10,9 +10,19 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Shared machinery for table formats whose data files do not carry the
-  * partition columns (hive-layout staging on write, metadata-driven
-  * re-attachment on read). Used by [[Delta]] and [[Iceberg]].
+/** Shared machinery of the table formats ([[Delta]], [[Iceberg]],
+  * [[Hudi]]): hive-layout staging on write, metadata-driven partition
+  * re-attachment on read, and the copy-on-write DML recipe.
+  *
+  * Copy-on-write DELETE / UPDATE / MERGE is one recipe for every format:
+  * (1) the format prunes its candidate files; (2) ONE distributed pass
+  * counts the matching rows per candidate file; (3) the files with a
+  * match are the touched ones; (4) only those are read back; (5) their
+  * rows are rewritten; (6) the format stages the result and commits
+  * touched-out / staged-in. Steps 2–5 live in [[CowFiles]]; a format
+  * supplies only its candidate files, its subtraction of tombstoned rows
+  * (Delta deletion vectors, Iceberg delete files; none for Hudi) and its
+  * commit.
   *
   * Scale shape: the read side is ONE parquet scan over the live file set;
   * partition columns are re-attached by a BROADCAST join against the tiny
@@ -23,6 +33,72 @@ import org.apache.spark.sql.types._
   * write job emits identically-named part files into every partition
   * directory, so a basename alone would collide. */
 private[graft] object PartitionedFiles {
+
+  /** Extra scan columns of row-level DML: the DECODED absolute source
+    * file of a row, and the row's ordinal within that file. */
+  val SrcCol = "__graft_src"
+  val PosCol = "__graft_pos"
+
+  /** The key a file list and a scan's [[SrcCol]] agree on. */
+  def normPath(p: String): String = Paths.get(p).normalize.toString
+
+  private[sources] val normPathUdf = udf((p: String) => normPath(p))
+
+  /** One format's data files `F` as the copy-on-write recipe sees them:
+    * a file's absolute path and partition values, and the format's
+    * subtraction of tombstoned rows from a scan of some of its files
+    * that carries [[SrcCol]] and [[PosCol]]. */
+  final class CowFiles[F](
+      spark: SparkSession,
+      schema: StructType,
+      partitionColumns: Seq[String],
+      path: F => String,
+      partitionValues: F => Map[String, String],
+      minusDeleted: (DataFrame, Seq[F]) => DataFrame = (df: DataFrame, _: Seq[F]) => df) {
+
+    /** The live rows of `files`, carrying [[SrcCol]] and [[PosCol]]. */
+    def liveRows(files: Seq[F]): DataFrame =
+      minusDeleted(readWithPartitions(spark, schema, partitionColumns,
+        files.map(path), files.map(partitionValues), withSource = true), files)
+
+    /** Steps 2–3: the candidates holding a live row that `matching`
+      * keeps, and the number of such rows, from one count per file. */
+    def touched(candidates: Seq[F])(matching: DataFrame => DataFrame): (Seq[F], Long) =
+      if (candidates.isEmpty) (Nil, 0L)
+      else {
+        val perFile = matching(liveRows(candidates)).groupBy(col(SrcCol)).count().collect()
+          .map(r => normPath(r.getString(0)) -> r.getLong(1)).toMap
+        (candidates.filter(f => perFile.getOrElse(normPath(path(f)), 0L) > 0L),
+          perFile.valuesIterator.sum)
+      }
+
+    /** Steps 2–5 of DELETE and UPDATE: None when no live row matches
+      * `pred` (NULL counts as no match); else the touched files, the
+      * matching row count and the touched files' rows after `rewrite`,
+      * which gets the NULL-safe match column. */
+    def rewrite(candidates: Seq[F], pred: Column)(
+        rewrite: (DataFrame, Column) => DataFrame): Option[(Seq[F], Long, DataFrame)] = {
+      val hit = coalesce(pred, lit(false))
+      val (files, n) = touched(candidates)(_.filter(hit))
+      if (files.isEmpty) None
+      else Some((files, n, rewrite(liveRows(files).drop(SrcCol, PosCol), hit)))
+    }
+  }
+
+  /** DELETE's rewrite: drop the matching rows. */
+  val deleteRows: (DataFrame, Column) => DataFrame = (rows, hit) => rows.filter(!hit)
+
+  /** UPDATE's rewrite: `set` maps column name → replacement expression,
+    * cast to the column's type and applied where the match holds. */
+  def updateRows(set: Map[String, Column]): (DataFrame, Column) => DataFrame = {
+    require(set.nonEmpty, "update requires at least one column assignment")
+    (rows, hit) => {
+      val bad = set.keySet -- rows.columns.toSet
+      require(bad.isEmpty, s"no such columns: ${bad.mkString(", ")}")
+      rows.select(rows.schema.fields.toSeq.map(f => set.get(f.name).fold(col(f.name))(e =>
+        when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name))): _*)
+    }
+  }
 
   final case class StagedFile(relPath: String, partitionValues: Map[String, String],
       sizeBytes: Long, rowCount: Long)
@@ -96,26 +172,22 @@ private[graft] object PartitionedFiles {
       partitionColumns: Seq[String],
       paths: Seq[String],
       filePv: Seq[Map[String, String]],
-      sourceCol: Option[String] = None,
-      posCol: Option[String] = None): DataFrame = {
-    // sourceCol: carry the DECODED absolute source-file path as an extra
-    // column — row-level rewrite ops (DELETE/UPDATE) group on it to find
-    // which files actually contain matching rows.
-    // posCol: carry the row's ordinal within its file (_metadata.row_index)
-    // — the join key for position-addressed row-level deletes (Iceberg v2
-    // position deletes, Delta deletion vectors).
+      withSource: Boolean = false): DataFrame = {
+    // withSource: carry [[SrcCol]], the DECODED absolute source-file path
+    // (row-level DML groups on it to find the files holding matches), and
+    // [[PosCol]], the row's ordinal within its file (_metadata.row_index;
+    // the join key of position-addressed deletes: Iceberg v2 position
+    // deletes, Delta deletion vectors).
     val ordered: Seq[Column] =
-      schema.map(f => col(f.name)) ++ sourceCol.map(col).toSeq ++ posCol.map(col).toSeq
-    def srcKey: Column = percentDecodeUdf(
-      regexp_replace(col("_metadata.file_path"), "^file:(//)?", ""))
-    def addExtras(df: DataFrame): DataFrame = {
-      val s = sourceCol.fold(df)(n => df.withColumn(n, srcKey))
-      posCol.fold(s)(n => s.withColumn(n, col("_metadata.row_index")))
-    }
+      (schema.fieldNames.toSeq ++ (if (withSource) Seq(SrcCol, PosCol) else Nil)).map(col)
+    def addExtras(df: DataFrame): DataFrame =
+      if (!withSource) df
+      else df.withColumn(SrcCol, percentDecodeUdf(
+          regexp_replace(col("_metadata.file_path"), "^file:(//)?", "")))
+        .withColumn(PosCol, col("_metadata.row_index"))
     if (paths.isEmpty) {
-      val outSchema = StructType(
-        schema.fields.toSeq ++ sourceCol.map(StructField(_, StringType)).toSeq ++
-          posCol.map(StructField(_, LongType)).toSeq)
+      val outSchema = StructType(schema.fields.toSeq ++ (if (!withSource) Nil
+        else Seq(StructField(SrcCol, StringType), StructField(PosCol, LongType))))
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
     }
     val dataSchema = StructType(schema.filterNot(f => partitionColumns.contains(f.name)))

@@ -153,6 +153,54 @@ class DeltaDmlSpec extends AnyFunSuite {
     assert(e.getMessage.contains("duplicate"))
   }
 
+  test("merge inserts null-key source rows: a null key matches nothing, so it is no duplicate") {
+    val path = freshDir("mergenullkeys")
+    Delta.write((0 until 10).map(i => (Long.box(i.toLong), s"old_$i")).toDF("id", "t"), path)
+    val src = Seq[(java.lang.Long, String)]((null, "x"), (null, "y"), (5L, "new")).toDF("id", "t")
+    val (_, updated, inserted) = Delta.merge(spark, path, src, "id")
+    assert(updated == 1 && inserted == 2)
+    val back = Delta.read(spark, path)
+    assert(back.count() == 12)
+    assert(back.filter(col("id").isNull).select("t").as[String].collect().sorted.toSeq ==
+      Seq("x", "y"))
+    assert(back.filter(col("id") === 5L).select("t").as[String].head() == "new")
+  }
+
+  test("OPTIMIZE race: a rewrite retries past an append, aborts when its input was removed") {
+    val path = freshDir("optrace")
+    Delta.write((0 until 100).map(i => (i.toLong, s"r$i")).toDF("id", "r")
+      .repartitionByRange(4, col("id")), path)
+    // a rewrite of one file into an identical copy, staged in the table dir
+    def stageCopy(snap: Delta.Snapshot, name: String): Delta.AddFile = {
+      val src = Paths.get(path, snap.files.head.path)
+      java.nio.file.Files.copy(src, Paths.get(path, name))
+      Delta.AddFile(name, Map.empty, java.nio.file.Files.size(src), 0L)
+    }
+    def rewrite(start: Delta.Snapshot, copy: Delta.AddFile): Long =
+      Delta.commitRewrite(spark, start, Seq(start.files.head), Seq(copy), 0L, "OPTIMIZE")
+
+    // a concurrent append removes nothing: the rewrite lands at the next version
+    val s0 = Delta.snapshot(spark, path)
+    val kept = stageCopy(s0, "kept-copy.parquet")
+    Delta.write(Seq((500L, "late")).toDF("id", "r"), path)
+    assert(rewrite(s0, kept) == s0.version + 2)
+    assert(Delta.snapshot(spark, path).files.map(_.path).contains(kept.path))
+    assert(Delta.read(spark, path).count() == 101)
+
+    // a concurrent DELETE rewrote the rewrite's input: publish nothing,
+    // delete the staged copy, return the latest version
+    val s1 = Delta.snapshot(spark, path)
+    val dropped = stageCopy(s1, "dropped-copy.parquet")
+    val victim = spark.read.parquet(Paths.get(path, s1.files.head.path).toString)
+      .agg(min("id")).as[Long].head()
+    Delta.delete(spark, path, col("id") === victim)
+    val latest = Delta.latestVersion(path)
+    assert(rewrite(s1, dropped) == latest)
+    assert(Delta.latestVersion(path) == latest, "an aborted rewrite must not publish")
+    assert(!java.nio.file.Files.exists(Paths.get(path, dropped.path)), "staged files must be deleted")
+    assert(Delta.read(spark, path).count() == 100)
+  }
+
   test("merge into a partitioned table routes inserts to their partitions") {
     val path = freshDir("mergepart")
     Delta.write((0 until 90).map(i => (i.toLong, (i % 3).toString, "old"))

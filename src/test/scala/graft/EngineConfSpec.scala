@@ -24,13 +24,20 @@ class EngineConfSpec extends AnyFunSuite {
     expected.foreach { case (k, v) => assert(conf.get(k) == v, s"$k") }
   }
 
-  test("Engine reads only SPARK_GRAFT_CPUS and SPARK_GRAFT_LOCAL_DIR from the environment") {
-    val f = new java.io.File("src/main/scala/graft/Engine.scala")
-    assert(f.isFile, s"Engine source not found at ${f.getAbsolutePath}")
+  private def sourceLines(file: String): Seq[String] = {
+    val f = new java.io.File(s"src/main/scala/graft/$file")
+    assert(f.isFile, s"source not found at ${f.getAbsolutePath}")
     val src = Source.fromFile(f, "UTF-8")
-    val named = try src.getLines().filter(_.contains("sys.env")).flatMap(l =>
+    try src.getLines().toList finally src.close()
+  }
+
+  test("Engine reads only SPARK_GRAFT_CPUS and SPARK_GRAFT_LOCAL_DIR from the environment") {
+    val named = sourceLines("Engine.scala").filter(_.contains("sys.env")).flatMap(l =>
       "sys\\.env[.\\w]*\\(\\s*\"([^\"]*)\"".r.findAllMatchIn(l).map(_.group(1))).toSet
-    finally src.close()
     assert(named == Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_LOCAL_DIR"), s"$named")
+  }
+
+  test("the Graft facade reads no environment: its session default comes from Engine") {
+    assert(!sourceLines("api.scala").exists(_.contains("sys.env")))
   }
 }

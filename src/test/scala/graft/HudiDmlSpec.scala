@@ -49,4 +49,16 @@ class HudiDmlSpec extends AnyFunSuite {
     val (_, zero) = Hudi.delete(spark, path, col("id") > 1000L)
     assert(zero == 0)
   }
+
+  test("delete matching nothing commits nothing") {
+    val path = freshDir("noop")
+    val i0 = Hudi.write((1 to 10).map(i => (i.toLong, s"r$i")).toDF("id", "r"), path)
+    val (i, n) = Hudi.delete(spark, path, col("id") > 1000L)
+    assert(i == i0 && n == 0)
+    assert(Hudi.timeline(path).completedInstants == Seq(i0), "no-op delete must not commit")
+    val markers = java.nio.file.Files.list(java.nio.file.Paths.get(path, ".hoodie"))
+    try assert(!markers.anyMatch(_.getFileName.toString.matches(".*\\.(requested|inflight)$")),
+      "no-op delete claims no instant")
+    finally markers.close()
+  }
 }
