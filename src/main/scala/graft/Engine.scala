@@ -69,9 +69,10 @@ object Engine {
       .builder()
       .master(s"local[$cores]")
       .appName("graft")
-      // planner extension: custom whole-operator plans (as-of join) are
-      // planned by Catalyst like built-in joins — EnsureRequirements owns
-      // their exchanges/sorts (brief tier (c): LogicalPlan+Strategy+Exec)
+      // planner extension: every keyed as-of join (AsofJoin.join,
+      // df.asofJoin) plans through this strategy, like a built-in join —
+      // EnsureRequirements owns its exchanges/sorts (brief tier (c):
+      // LogicalPlan+Strategy+Exec); a session without it cannot plan one
       .withExtensions { ext =>
         ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
         // r15 single-pass per-partition aggregation (q16/q18/q21 hot
@@ -222,7 +223,7 @@ object Tables {
     throw new IllegalArgumentException(
       s"event-time column `$name` has unhandled type $t — extend " +
         "graft.Tables.eventTimeMicros/eventTimeTs (consumers: Tables.events, " +
-        "ops/AsofJoin.timeExpr, streaming/Streaming)")
+        "ops/AsofJoin.onMicros, streaming/Streaming)")
 
   /** Epoch-µs `LongType` column for an event-time field of any handled
     * encoding. ns→µs uses integer `div` (exact: 2024-era ns values ~1.7e18

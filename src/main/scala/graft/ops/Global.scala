@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (the reference dedicates a streaming sink to this case,
   * `window_order_by_only.rs`). This operator keeps the computation
   * distributed with the classic two-pass range-partition + prefix-offset
-  * scheme (the same shape `AsofJoin.joinGlobal` uses):
+  * scheme (the same shape as the as-of join without by-keys):
   *
   *  1. range-partition by the order keys and sort within partitions —
   *     partition i holds keys entirely ≤ partition i+1's (per the given

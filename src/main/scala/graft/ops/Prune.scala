@@ -71,37 +71,22 @@ object Prune {
     * only pass extra rows that the downstream join drops. */
   def bloomSemiPrefilter(big: DataFrame, bigKey: String,
       build: DataFrame, buildKey: String, fpp: Double = DefaultFpp,
-      maxBuildKeys: Long = 200000000L): DataFrame =
-    bloomSemiFilterFor(bigKey, build, buildKey, fpp, maxBuildKeys)(big)
-
-  /** Two-step form of [[bloomSemiPrefilter]]: runs the build side's count
-    * + bloom aggregation EAGERLY and returns the lazy big-side filter as a
-    * function. Lets a caller with several independent build chains submit
-    * them from concurrent driver threads (guide §2.6 — q8's two bloom
-    * chains are independent; serial submission left ~2 actions of pure
-    * latency on the table) and apply the filters once all are ready.
-    * Semantics are identical to the one-step form for every branch
-    * (empty build, over-cap build, normal build). */
-  def bloomSemiFilterFor(bigKey: String,
-      build: DataFrame, buildKey: String, fpp: Double = DefaultFpp,
-      maxBuildKeys: Long = 200000000L): DataFrame => DataFrame = {
+      maxBuildKeys: Long = 200000000L): DataFrame = {
     val n = build.count()
     // empty build side: no key can match — the exact answer is the empty
     // prefilter result
-    if (n == 0) return big => big.filter(lit(false))
+    if (n == 0) return big.filter(lit(false))
     // 100 TB guard: the filter is ~1.5 bytes/key of BROADCAST — fine to
     // ~300 MB, absurd at a billion keys. Past the cap the prefilter is a
     // no-op (a valid superset — the downstream exact join still runs);
     // the null filter is kept so both branches have identical semantics.
-    if (n > maxBuildKeys) return big => big.filter(col(bigKey).isNotNull)
+    if (n > maxBuildKeys) return big.filter(col(bigKey).isNotNull)
     // key-type agnostic: the filter holds xxhash64 of the key, so string/
     // decimal/struct keys work identically (a long cast would null out
     // non-numeric keys and silently drop their rows)
     val bf = SplitBlockBloom.build(build, buildKey, n, bitsPerKey(fpp))
-    big => {
-      val bc = big.sparkSession.sparkContext.broadcast(bf)
-      big.filter(col(bigKey).isNotNull &&
-        BlockBloomMightContainExpr.mightContain(bc, xxhash64(col(bigKey))))
-    }
+    val bc = big.sparkSession.sparkContext.broadcast(bf)
+    big.filter(col(bigKey).isNotNull &&
+      BlockBloomMightContainExpr.mightContain(bc, xxhash64(col(bigKey))))
   }
 }

@@ -1,33 +1,31 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types._
 
 import graft.ops.AsofJoin
 
-/** Planner-integrated as-of join — the full Spark extension stack for a
-  * whole-operator semantic (build brief tier (c)): a custom `LogicalPlan`
-  * node, a `SparkStrategy` planning it, and a `SparkPlan` that declares
-  * its distribution/ordering requirements so CATALYST (EnsureRequirements)
-  * owns the exchanges and sorts — exactly how SortMergeJoin is planned.
+/** Planner-integrated as-of join with by-keys — the full Spark extension
+  * stack for a whole-operator semantic (build brief tier (c)): a custom
+  * `LogicalPlan` node, a `SparkStrategy` planning it, and a `SparkPlan`
+  * that declares its distribution/ordering requirements so CATALYST
+  * (EnsureRequirements) owns the exchanges and sorts — exactly how
+  * SortMergeJoin is planned:
+  *  - `ClusteredDistribution(by-keys)` on both children, so an input
+  *    already hash-partitioned on the keys (bucketed table, prior
+  *    aggregate, explicit repartition) skips the shuffle entirely;
+  *  - child orderings, so the sort can be absorbed by an already-sorted
+  *    child for free;
+  *  - execution as a streaming merge of sorted key runs — per-KEY
+  *    buffering (bounded by the largest key group), never per-partition
+  *    arrays.
   *
-  * Compared to the cogroup implementation in [[graft.ops.AsofJoin]] (same
-  * runtime merge), the planner variant:
-  *  - declares `ClusteredDistribution(by-keys)` on both children, so an
-  *    input already hash-partitioned on the keys (bucketed table, prior
-  *    aggregate) skips the shuffle entirely — cogroup always shuffles;
-  *  - declares child orderings, so the sort can be absorbed by an
-  *    already-sorted child for free;
-  *  - executes as a streaming merge of sorted key-runs — per-KEY buffering
-  *    (bounded by the largest key group), never per-partition arrays.
-  *
+  * Built only by [[graft.ops.AsofJoin.join]], which hands it `LongType`
+  * on-keys (already normalised) and a right side without null keys.
   * Registered through `SparkSessionExtensions.injectPlannerStrategy` in
   * `Engine.session` (ref reference logical op `ops/asof_join.rs:74`).
   */
@@ -71,8 +69,7 @@ case class AsofJoinExec(
   // co-partition both sides on the by-keys; EnsureRequirements inserts the
   // exchanges only where the child isn't already clustered correctly
   override def requiredChildDistribution: Seq[Distribution] =
-    if (leftBy.isEmpty) AllTuples :: AllTuples :: Nil
-    else ClusteredDistribution(leftBy) :: ClusteredDistribution(rightBy) :: Nil
+    ClusteredDistribution(leftBy) :: ClusteredDistribution(rightBy) :: Nil
 
   // sorted key-runs within partitions; sorts are absorbed if already sorted
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
@@ -82,28 +79,14 @@ case class AsofJoinExec(
   override def outputOrdering: Seq[SortOrder] =
     (leftBy :+ leftOn).map(a => SortOrder(a, Ascending))
 
-  /** Normalize the on-key to comparable micros (timestamps are stored as
-    * Long micros in InternalRow; dates as Int days). */
-  private def timeNormalizer(attr: Attribute, out: Seq[Attribute]): InternalRow => Long = {
-    val bound = BindReferences.bindReference(attr: Expression, out)
-    attr.dataType match {
-      case DateType => r => bound.eval(r).asInstanceOf[Int].toLong * 86400000000L
-      case TimestampType | TimestampNTZType | LongType => r => bound.eval(r).asInstanceOf[Long]
-      case IntegerType => r => bound.eval(r).asInstanceOf[Int].toLong
-      case ShortType => r => bound.eval(r).asInstanceOf[Short].toLong
-      case ByteType => r => bound.eval(r).asInstanceOf[Byte].toLong
-      case other => throw new IllegalArgumentException(s"asof on-key type $other unsupported")
-    }
-  }
-
   protected override def doExecute(): RDD[InternalRow] = {
     val lOut = left.output
     val rOut = right.output
     val lByBound = leftBy.map(BindReferences.bindReference(_: Expression, lOut))
     val rByBound = rightBy.map(BindReferences.bindReference(_: Expression, rOut))
     val keyTypes = leftBy.map(_.dataType)
-    val lTimeF = timeNormalizer(leftOn, lOut)
-    val rTimeF = timeNormalizer(rightOn, rOut)
+    val lt = lOut.indexWhere(_.exprId == leftOn.exprId)
+    val rt = rOut.indexWhere(_.exprId == rightOn.exprId)
     val nRight = rOut.size
     val strat = strategy
     val tol = toleranceMicros
@@ -112,9 +95,7 @@ case class AsofJoinExec(
     left.execute().zipPartitions(right.execute()) { (lIt, rIt) =>
       val lKeyProj = UnsafeProjection.create(lByBound)
       val rKeyProj = UnsafeProjection.create(rByBound)
-      val keyOrd: Ordering[InternalRow] =
-        org.apache.spark.sql.catalyst.expressions.RowOrdering
-          .createNaturalAscendingOrdering(keyTypes)
+      val keyOrd: Ordering[InternalRow] = RowOrdering.createNaturalAscendingOrdering(keyTypes)
       val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
       val nullRight = new GenericInternalRow(nRight)
       val joined = new JoinedRow
@@ -138,34 +119,23 @@ case class AsofJoinExec(
       val rRuns = groupRuns(rIt, rKeyProj)
 
       lRuns.flatMap { case (lk, ls) =>
-        // advance right to the matching key run (both sides key-sorted)
+        // advance right to the matching key run (both sides key-sorted; a
+        // key with a null compares unequal to every right key, which has
+        // none)
         while (rRuns.hasNext && keyOrd.compare(rRuns.head._1, lk) < 0) rRuns.next()
         val rs: Array[InternalRow] =
           if (rRuns.hasNext && keyOrd.compare(rRuns.head._1, lk) == 0) rRuns.head._2
           else Array.empty
-        val rTimes = rs.map(rTimeF)
-        var j = 0
+        val rTimes = rs.map(_.getLong(rt))
+        var j = 0 // count of right rows with on-key <= the current left's
         ls.iterator.map { lRow =>
-          val t = lTimeF(lRow)
-          while (j < rs.length && rTimes(j) <= t) j += 1
-          val backIdx = j - 1
-          val fwdIdx = if (j < rs.length) j else -1
-          val fwdGeIdx =
-            if (backIdx >= 0 && rTimes(backIdx) == t) backIdx else fwdIdx
-          val pick: Int = strat match {
-            case AsofJoin.Backward => backIdx
-            case AsofJoin.Forward  => fwdGeIdx
-            case AsofJoin.Nearest =>
-              (backIdx, fwdIdx) match {
-                case (-1, f) => f
-                case (b, -1) => b
-                case (b, f)  => if (t - rTimes(b) <= rTimes(f) - t) b else f
-              }
+          val side = if (lRow.isNullAt(lt)) -1 else {
+            val t = lRow.getLong(lt)
+            while (j < rs.length && rTimes(j) <= t) j += 1
+            AsofJoin.choose(strat, tol, t, j > 0, if (j > 0) rTimes(j - 1) else 0L,
+              j < rs.length, if (j < rs.length) rTimes(j) else 0L)
           }
-          val ok = pick >= 0 && tol.forall(m => math.abs(t - rTimes(pick)) <= m)
-          // j is a per-run cursor: reset not needed within a run (ls sorted
-          // ascending), but must restart for the next left row scan point
-          resultProj(joined(lRow, if (ok) rs(pick) else nullRight))
+          resultProj(joined(lRow, if (side >= 0) rs(j - 1 + side) else nullRight))
         }
       }
     }
@@ -174,26 +144,4 @@ case class AsofJoinExec(
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): AsofJoinExec =
     copy(left = newLeft, right = newRight)
-}
-
-/** Public entry: as-of join through the planner-integrated operator. */
-object PlannedAsof {
-  def join(
-      left: DataFrame, right: DataFrame,
-      leftOn: String, rightOn: String,
-      leftBy: Seq[String], rightBy: Seq[String],
-      strategy: AsofJoin.Strategy = AsofJoin.Backward,
-      toleranceMicros: Option[Long] = None): DataFrame = {
-    val spark: SparkSession = left.sparkSession
-    val lPlan = Bridge.analyzedPlan(left)
-    val rPlan = Bridge.analyzedPlan(right)
-    def attr(plan: LogicalPlan, name: String): Attribute =
-      plan.output.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(s"column $name not found in ${plan.output.map(_.name)}"))
-    Bridge.ofRows(spark, AsofJoinNode(
-      lPlan, rPlan,
-      attr(lPlan, leftOn), attr(rPlan, rightOn),
-      leftBy.map(attr(lPlan, _)), rightBy.map(attr(rPlan, _)),
-      strategy, toleranceMicros))
-  }
 }

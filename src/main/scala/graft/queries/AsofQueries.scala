@@ -92,15 +92,13 @@ object AsofQueries {
       |  ON l.user_id = r.user_id AND l.ts >= r.ts
       |ORDER BY l.event_id""".stripMargin
 
-  /** As-of join through the planner-integrated operator (custom
-    * LogicalPlan + SparkStrategy + SparkPlan registered via
-    * SparkSessionExtensions — graft.plans.AsofJoinPlan): same semantics as
-    * asof_backward, but exchanges/sorts are planned by Catalyst from the
-    * operator's declared distribution, so pre-partitioned inputs skip the
-    * shuffle. */
+  /** asof_backward over clicks already hash-partitioned by `user_id`: the
+    * as-of operator declares its by-key distribution to Catalyst, so the
+    * pre-partitioned side is joined where it lies and only the purchases
+    * side is shuffled. */
   def asof_planned(s: SparkSession, dir: String): DataFrame = {
     val (clicks, purchases) = sides(s, dir)
-    graft.plans.PlannedAsof.join(clicks, purchases, "ts", "p_ts",
+    AsofJoin.join(clicks.repartition(col("user_id")), purchases, "ts", "p_ts",
         Seq("user_id"), Seq("p_user"), AsofJoin.Backward)
       .select("event_id", "user_id", "p_event_id", "p_value")
       .orderBy("event_id")
@@ -108,11 +106,11 @@ object AsofQueries {
 
   val asofPlannedSql = asofBackwardSql
 
-  /** Global (no by-keys) as-of join via the range-partitioned two-pass
-    * implementation — does not collapse to one partition. */
+  /** Global (no by-keys) as-of join: the range-partitioned two-pass,
+    * which does not collapse to one partition. */
   def asof_global(s: SparkSession, dir: String): DataFrame = {
     val (clicks, purchases) = sides(s, dir)
-    AsofJoin.joinGlobal(clicks, purchases, "ts", "p_ts", AsofJoin.Backward)
+    AsofJoin.join(clicks, purchases, "ts", "p_ts", strategy = AsofJoin.Backward)
       .select("event_id", "p_event_id")
       .orderBy("event_id")
   }

@@ -363,13 +363,14 @@ object Tpch {
       .join(broadcast(tt.region), col("n_regionkey") === col("r_regionkey"))
       .filter(col("r_name") === "EUROPE")
       .select("c_custkey"))
-    // Serial chains: concurrent submission was a wash (OPTIMIZATION_r16.md: 18.85 vs 19.77 s).
+    // The three bloom builds run in this order: part, customer, orders.
     // Chain 1 — narrow the fact rows before their shuffles (same as q9):
     // volume is computed at the scan so the partkey/orderkey exchanges
     // move one folded 8-byte column instead of extendedprice + discount.
-    def partChain(): DataFrame => DataFrame =
-      graft.ops.Prune.bloomSemiFilterFor(
-        "l_partkey", partPromo.select("p_partkey"), "p_partkey")
+    val liPromo = graft.ops.Prune.bloomSemiPrefilter(
+        tt.lineitem, "l_partkey", partPromo.select("p_partkey"), "p_partkey")
+      .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"),
+        (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("volume"))
     // Chain 2 — orders join only EUROPE customers (1/5): bloom-prune the
     // orders side of the big lineitem⋈orders shuffle too (customer-scale
     // build). r8: the EXACT custkey semi is applied HERE, on orders,
@@ -382,20 +383,12 @@ object Tpch {
     // probing oF's orderkey bloom BEFORE the first exchange shrinks BOTH
     // fact shuffles ~5x for one extra 32-byte load per surviving row. oF
     // is leased: it feeds this bloom build and the exact join below.
-    def ordChain(): (DataFrame, DataFrame => DataFrame) = {
-      val oF = graft.ops.Caches.lease(graft.ops.Prune.bloomSemiPrefilter(
-          tt.orders.select("o_orderkey", "o_custkey", "o_orderdate"),
-          "o_custkey", custEur, "c_custkey")
-        .join(custEur.hint("shuffle_merge"),
-          col("o_custkey") === col("c_custkey"), "left_semi")
-        .select("o_orderkey", "o_orderdate"))
-      (oF, graft.ops.Prune.bloomSemiFilterFor(
-        "l_orderkey", oF.select("o_orderkey"), "o_orderkey"))
-    }
-    val (applyPart, (oF, applyOrd)) = (partChain(), ordChain())
-    val liPromo = applyPart(tt.lineitem)
-      .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"),
-        (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("volume"))
+    val oF = graft.ops.Caches.lease(graft.ops.Prune.bloomSemiPrefilter(
+        tt.orders.select("o_orderkey", "o_custkey", "o_orderdate"),
+        "o_custkey", custEur, "c_custkey")
+      .join(custEur.hint("shuffle_merge"),
+        col("o_custkey") === col("c_custkey"), "left_semi")
+      .select("o_orderkey", "o_orderdate"))
     // EAGER AGGREGATION below the supplier join (r8, q3-profiled insight):
     // the final group is (o_year) and the supplier join only maps
     // l_suppkey → nation, so volume pre-aggregates by (l_suppkey, o_year)
@@ -405,7 +398,8 @@ object Tpch {
     // Join strategy (r8 A/B, same rationale as q9): SHUFFLE_HASH with the
     // slim side as build — partPromo is a key column, oF is two columns
     // post-semi (~4 MB/task builds) — skips every fact sort.
-    val li = applyOrd(liPromo)
+    val li = graft.ops.Prune.bloomSemiPrefilter(
+      liPromo, "l_orderkey", oF.select("o_orderkey"), "o_orderkey")
     val perSupp = li
       .join(partPromo.hint("shuffle_hash"), col("l_partkey") === col("p_partkey"))
       .join(oF.hint("shuffle_hash"), col("l_orderkey") === col("o_orderkey"))

@@ -474,7 +474,9 @@ object Iceberg {
   /** Commit one snapshot: a new manifest holding `added` (ADDED) and
     * `deleted` (DELETED), a manifest list of it at sequence number `seq`
     * plus `carried(snapshotId)`, then the metadata that makes the
-    * snapshot current ([[publishMetadata]]). Returns the snapshot id. */
+    * snapshot current ([[publishMetadata]]). The manifest's partition
+    * fields are `manifestPartCols` when given, else `partCols`. Returns
+    * the snapshot id. */
   private def commitSnapshot(
       tablePath: String,
       prior: Option[JsonNode],
@@ -486,10 +488,12 @@ object Iceberg {
       fieldIds: Map[String, Int],
       seq: Long,
       operation: String,
-      formatVersion: Int = 1)(carried: Long => Seq[(String, Long, Long)]): Long = {
+      formatVersion: Int = 1,
+      manifestPartCols: Option[Seq[String]] = None)(carried: Long => Seq[(String, Long, Long)]): Long = {
     val snapshotId = math.abs(UUID.randomUUID().getMostSignificantBits)
     val manifest = metadataDir(tablePath).resolve(s"manifest-$snapshotId.avro")
-    writeManifest(manifest, schema, partCols, schema.fields.map(f => f.name -> f.dataType).toMap,
+    writeManifest(manifest, schema, manifestPartCols.getOrElse(partCols),
+      schema.fields.map(f => f.name -> f.dataType).toMap,
       added, deleted, snapshotId, rawStats, fieldIds)
     val mlPath = metadataDir(tablePath).resolve(s"snap-$snapshotId.avro")
     writeManifestList(mlPath,
@@ -630,8 +634,9 @@ object Iceberg {
     val typed = keys.select(cols.map(c => col(c).cast(byName(c)).as(c)): _*).distinct()
     val staged = PartitionedFiles.stageAndMove(
       typed, tablePath, Nil, subDir = "data", countRows = true)
-    // empty partition tuple = global scope (this writer's only shape;
-    // the reader also honors partition-scoped deletes from other engines)
+    // global scope, on a partitioned table too: the delete files sit in a
+    // manifest without partition fields, so they carry an empty tuple
+    // (the reader also honors partition-scoped deletes from other engines)
     val nextSeq = nextSequenceNumber(Some(meta), 2)
     val delFiles = staged.filter(_.rowCount > 0).map(f =>
       DataFileRef(f.relPath, f.rowCount, f.sizeBytes, Map.empty, None,
@@ -639,20 +644,24 @@ object Iceberg {
     val keyRows = delFiles.map(_.recordCount).sum
     if (keyRows == 0) return (st.snapshotId, 0L)
     (commitDeleteSnapshot(tablePath, meta, st, delFiles.toSeq,
-      fieldIdsOf(currentSchemaNode(meta))), keyRows)
+      fieldIdsOf(currentSchemaNode(meta)), tableWide = true), keyRows)
   }
 
   /** Commit a delete-file-only snapshot: one new manifest holding
     * `delFiles` at the next sequence number + every prior manifest
-    * carried forward untouched (no data-file changes). */
+    * carried forward untouched (no data-file changes). A `tableWide`
+    * manifest has no partition fields, so its files apply to every
+    * partition. */
   private def commitDeleteSnapshot(
       tablePath: String,
       meta: JsonNode,
       st: TableState,
       delFiles: Seq[DataFileRef],
-      fieldIds: Map[String, Int] = Map.empty): Long =
+      fieldIds: Map[String, Int] = Map.empty,
+      tableWide: Boolean = false): Long =
     commitSnapshot(tablePath, Some(meta), st.schema, st.partitionFields, delFiles, Nil, Map.empty,
-      fieldIds, nextSequenceNumber(Some(meta), 2), "delete")(_ =>
+      fieldIds, nextSequenceNumber(Some(meta), 2), "delete",
+      manifestPartCols = if (tableWide) Some(Nil) else None)(_ =>
       manifestsOf(tablePath, meta, st.snapshotId))
 
   /** Copy-on-write DELETE / UPDATE: the shared recipe over the files

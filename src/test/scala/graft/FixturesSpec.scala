@@ -30,7 +30,7 @@ class FixturesSpec extends AnyFunSuite {
       handledTs.contains(dt),
       s"\nevents.ts arrived as $dt — a NEW fixture encoding." +
         "\nExtend graft.Tables.eventTimeMicros/eventTimeTs (Engine.scala) — the" +
-        "\nsingle dispatch point used by Tables.events, ops/AsofJoin.timeExpr," +
+        "\nsingle dispatch point used by Tables.events, ops/AsofJoin.onMicros," +
         "\nand streaming/Streaming — then update this spec's handled set.")
   }
 

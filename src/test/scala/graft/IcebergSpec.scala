@@ -323,6 +323,20 @@ class IcebergSpec extends AnyFunSuite {
     assert(left == Seq(3L), s"null keys must match null values, got $left")
   }
 
+  test("equality deletes on a partitioned table apply to every partition") {
+    val path = freshDir("v2_eqdel_part")
+    Iceberg.write(fixture(0, 400), path, partitionBy = Seq("bucket"), formatVersion = 2)
+    val (_, nKeys) = Iceberg.deleteEquality(spark, path, Seq(301L, 302L).toDF("id"))
+    assert(nKeys == 2)
+    // ids 301 and 302 live in buckets 1 and 2: the writer's delete is
+    // global, so it must reach both partitions
+    val after = Iceberg.read(spark, path)
+    assert(after.count() == 398, "400 rows - 2 deleted ids")
+    assert(after.filter(col("id").isin(301, 302)).count() == 0)
+    assert(Iceberg.state(path).deleteFiles.forall(_.partition.isEmpty),
+      "a global equality delete carries no partition tuple")
+  }
+
   test("CoW update on a table with equality deletes does not resurrect dead rows") {
     val path = freshDir("v2_eqdel_dml")
     Iceberg.write(fixture(0, 50).repartitionByRange(2, col("id")), path,

@@ -202,10 +202,20 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("as-of join shuffles each side once on the by-keys") {
+    // EnsureRequirements plans the by-key exchanges under the as-of
+    // operator: one per side, and none on a side the query already
+    // hash-partitioned by user_id (asof_planned's clicks)
+    def exchanges(plan: String, kind: String) =
+      plan.linesIterator.count(l => l.contains("Exchange hashpartitioning") && l.contains(kind))
     val plan = executedPlan(queries.AsofQueries.asof_backward(spark, dir))
     assert(!plan.contains("CartesianProduct"))
-    // cogroup compiles to two hash-partitioned exchanges feeding CoGroup
-    assert(plan.contains("CoGroup"), s"expected CoGroup:\n$plan")
+    assert(plan.contains("AsofJoin"), s"expected the AsofJoin operator:\n$plan")
+    assert(exchanges(plan, "ENSURE_REQUIREMENTS") == 2, s"one exchange per side:\n$plan")
+    val planned = executedPlan(queries.AsofQueries.asof_planned(spark, dir))
+    assert(planned.contains("AsofJoin"), s"expected the AsofJoin operator:\n$planned")
+    assert(exchanges(planned, "REPARTITION_BY_COL") == 1, planned)
+    assert(exchanges(planned, "ENSURE_REQUIREMENTS") == 1,
+      s"only the purchases side is shuffled:\n$planned")
   }
 
   test("brute-force similarity broadcasts the query side") {
