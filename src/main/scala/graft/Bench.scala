@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -390,6 +391,15 @@ object Bench {
       val md = java.security.MessageDigest.getInstance("MD5")
       md.digest(norm.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
     }
+    /** Join strategies of the final (post-AQE) plan, so that an A/B of
+      * two builds shows which queries changed strategy at runtime. */
+    def joinsJson(): String = {
+      val nodes = if (last == null) Nil else graft.ops.ExecMetrics.allNodes(last)
+      Seq("BroadcastHashJoin" -> nodes.count(_.isInstanceOf[BroadcastHashJoinExec]),
+        "ShuffledHashJoin" -> nodes.count(_.isInstanceOf[ShuffledHashJoinExec]),
+        "SortMergeJoin" -> nodes.count(_.isInstanceOf[SortMergeJoinExec]))
+        .map { case (k, n) => s""""$k":$n""" }.mkString("{", ",", "}")
+    }
     /** Materialized scans per table, over every node of the final plan. */
     def scansJson(): String = {
       val tables = if (last == null) Nil else graft.ops.ExecMetrics.allNodes(last).collect {
@@ -593,7 +603,7 @@ object Bench {
       val bw = bwGbps()
       Thread.sleep(500) // let the listener bus drain task-end events
       val (steal1, iow1) = hostStat()
-      stageLog.write(f"""{"q":"$name","tier":"${tierLabel(k)}","dir":"$dir","sec":$sec%.2f,"ok":$ok,"fp":"${planCap.fingerprint()}","jit_ms":${jitMs() - jit0},"gc_ms":${gcMs() - gc0},"cpu_ms":${processCpuMs() - cpu0},"steal_ms":${steal1 - steal0},"iowait_ms":${iow1 - iow0},"calib_sec":$calib%.3f,"bw_gbps":$bw%.1f,"scans":${planCap.scansJson()},${metrics.json(8)}}""" + "\n")
+      stageLog.write(f"""{"q":"$name","tier":"${tierLabel(k)}","dir":"$dir","sec":$sec%.2f,"ok":$ok,"fp":"${planCap.fingerprint()}","jit_ms":${jitMs() - jit0},"gc_ms":${gcMs() - gc0},"cpu_ms":${processCpuMs() - cpu0},"steal_ms":${steal1 - steal0},"iowait_ms":${iow1 - iow0},"calib_sec":$calib%.3f,"bw_gbps":$bw%.1f,"scans":${planCap.scansJson()},"joins":${planCap.joinsJson()},${metrics.json(8)}}""" + "\n")
       stageLog.flush()
       // outside the timer: a full GC makes ContextCleaner release the
       // rep's now-unreferenced shuffle files immediately (its own

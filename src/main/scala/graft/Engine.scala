@@ -62,6 +62,20 @@ object Engine {
     * of `SPARK_GRAFT_CPUS`. */
   private[graft] def defaultCores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
+  /** The one broadcast cap for a join side AQE has MEASURED, whatever
+    * table it reads (`spark.sql.adaptive.autoBroadcastJoinThreshold`; the
+    * 64 MB static threshold still governs estimates). Derived from q14,
+    * the one measured fact broadcast that went wrong (SURVEY.md, round-8
+    * postscript 2): at the 13 GB tier building the broadcast of a month
+    * sliver AQE had measured under 64 MB took ~15 s, and the
+    * SHUFFLE_HASH plan that replaced it ran the whole query in 3.3 s. So
+    * the build costs at least 15 s / 64 MB ≈ 0.23 s per MB, and a side
+    * whose build must stay under that 3.3 s may measure at most
+    * 3.3 / 0.23 ≈ 14 MB; the cap is the largest power of two below it.
+    * (The sliver measures 2.28 MB at k=10 and 22.8 MB at k=100 of
+    * `graft.Bench`'s sf0.1-based tiers.) */
+  private[graft] val measuredBroadcastCap: Long = 8L << 20
+
   /** Build a tuned local session. On a cluster the same config block applies
     * minus `master`. */
   def session(cores: String = defaultCores): SparkSession = {
@@ -83,6 +97,10 @@ object Engine {
         // never broadcast a fact-scaled side, and bloom-prefilter the
         // probe side of selective equi-joins (plans/GraftOptimizerRules)
         ext.injectOptimizerRule(_ => graft.plans.FactBroadcastGuard)
+        // ...and its runtime half: a fact-scaled side AQE has measured at
+        // or under spark.sql.adaptive.autoBroadcastJoinThreshold (below)
+        // loses the guard's mark and may broadcast
+        ext.injectRuntimeOptimizerRule(_ => graft.plans.MeasuredBroadcastRule)
         // eager aggregation first: the bloom rule then sees the settled
         // join shape (a pushed aggregate is no longer a probe-able scan
         // chain, and the creation side is unchanged)
@@ -160,6 +178,7 @@ object Engine {
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (32L << 20).toString)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
+      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", measuredBroadcastCap.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

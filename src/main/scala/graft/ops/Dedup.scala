@@ -538,9 +538,12 @@ object Dedup {
     * each round so lineage stays O(1) instead of growing per iteration.
     *
     * Output: (member, cluster) where cluster = min id in the component;
-    * every node appearing in any pair is assigned. */
+    * every node appearing in any pair is assigned. A graph whose labels
+    * still change in round `maxIter` throws instead: those labels are not
+    * components yet. */
   def clusters(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame = {
+    require(maxIter > 0, s"Dedup.clusters: maxIter must be positive, got $maxIter")
     val edges = pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
     // undirected: propagate along both directions
@@ -570,6 +573,11 @@ object Dedup {
         .count()
       labels = next
       iter += 1
+    }
+    if (changed > 0) {
+      adj.unpersist()
+      throw new IllegalStateException(s"Dedup.clusters did not converge: $changed labels " +
+        s"still changed in the last of maxIter = $maxIter rounds")
     }
     // superseded per-iteration checkpoints are reclaimed by Spark's
     // ContextCleaner once their DataFrames go out of scope; materialize

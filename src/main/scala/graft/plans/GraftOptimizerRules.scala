@@ -5,7 +5,10 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.expressions.{BlockBloomAggregate, BlockBloomMightContainBytes, BlockBloomMightContainExpr}
 import graft.ops.SplitBlockBloom
@@ -25,11 +28,33 @@ import graft.ops.SplitBlockBloom
   * aggregate) between scan and join input. On a real deployment the conf
   * is the user's declaration of which tables grow with the data — the
   * same role annotation a warehouse's semantic layer carries.
+  *
+  * Two halves, one decision each:
+  *   - statically (this rule) a fact-scaled side NEVER broadcasts: the
+  *     plan before execution only has size ESTIMATES, and an estimate
+  *     cannot tell a few-KB sliver from a 100 TB-scaled one. The rule marks
+  *     each such side NO_BROADCAST_HASH and records the marks in the
+  *     [[Marked]] tag of the join;
+  *   - at runtime ([[MeasuredBroadcastRule]]) AQE has MEASURED the side,
+  *     and a side measured at or under `spark.sql.adaptive.
+  *     autoBroadcastJoinThreshold` loses the mark, so AQE's ordinary join
+  *     selection may broadcast it — whatever table it reads. The cap is one
+  *     value for every measured side, set in `graft.Engine.session`.
   */
 object FactBroadcastGuard extends Rule[LogicalPlan] {
 
-  private def enabled: Boolean =
+  private[plans] def enabled: Boolean =
     conf.getConfString("spark.graft.optimizer.factBroadcastGuard.enabled", "true").toBoolean
+
+  /** (left, right): which sides of a join carry the guard's own mark. A
+    * NO_BROADCAST_HASH that AQE's DynamicJoinSelection adds at runtime
+    * reads the same as the guard's, so the runtime half lifts only the
+    * sides recorded here. */
+  private[plans] val Marked: TreeNodeTag[(Boolean, Boolean)] =
+    TreeNodeTag[(Boolean, Boolean)]("graft.factBroadcastGuard.marked")
+
+  private[plans] def isMark(h: Option[HintInfo]): Boolean =
+    h.exists(_.strategy.contains(NO_BROADCAST_HASH))
 
   private[plans] def factNames: Set[String] =
     conf.getConfString("spark.graft.optimizer.factTables",
@@ -90,6 +115,24 @@ object FactBroadcastGuard extends Rule[LogicalPlan] {
     walk(plan)
   }
 
+  /** The one static broadcast predicate: whether the planner broadcasts
+    * join side `p`, carrying `hint`, before execution. This rule, the
+    * eager-aggregation gate and the bloom-prefilter gate all ask it.
+    *   - A broadcast hint forces it.
+    *   - The guard's mark forbids it, and so does a fact-scaled subtree
+    *     (the side the guard marks).
+    *   - Otherwise the size estimate decides against `threshold`: Spark's
+    *     `autoBroadcastJoinThreshold` by default, none (any size) when the
+    *     guard asks which sides only their fact provenance keeps out. */
+  private[plans] def broadcastsStatically(p: LogicalPlan, hint: Option[HintInfo],
+      facts: Set[String],
+      threshold: Option[BigInt] = Some(conf.autoBroadcastJoinThreshold)): Boolean =
+    hint.flatMap(_.strategy) match {
+      case Some(BROADCAST) => true
+      case Some(NO_BROADCAST_HASH) => false
+      case _ => !scalesWithFact(p, facts) && threshold.forall(p.stats.sizeInBytes <= _)
+    }
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) return plan
     val facts = factNames
@@ -99,14 +142,65 @@ object FactBroadcastGuard extends Rule[LogicalPlan] {
         // always wins — the guard only claims the undecided sides
         def guard(side: Option[HintInfo], p: LogicalPlan): Option[HintInfo] = side match {
           case Some(h) if h.strategy.isDefined => side
-          case _ if scalesWithFact(p, facts) =>
+          case _ if !broadcastsStatically(p, side, facts, threshold = None) =>
             Some(side.getOrElse(HintInfo()).copy(strategy = Some(NO_BROADCAST_HASH)))
           case _ => side
         }
         val nl = guard(hint.leftHint, l)
         val nr = guard(hint.rightHint, r)
-        if (nl == hint.leftHint && nr == hint.rightHint) j
-        else j.copy(hint = JoinHint(nl, nr))
+        val nj = if (nl == hint.leftHint && nr == hint.rightHint) j
+          else { val c = j.copy(hint = JoinHint(nl, nr)); c.copyTagsFrom(j); c }
+        // re-recorded on every pass, so a join that a later optimizer rule
+        // rebuilt without its tags is marked again: before execution only
+        // this rule writes NO_BROADCAST_HASH (Spark has no user syntax for
+        // it, and DynamicJoinSelection runs only inside AQE)
+        if (isMark(nl) || isMark(nr)) nj.setTagValue(Marked, (isMark(nl), isMark(nr)))
+        nj
+    }
+  }
+}
+
+/** The runtime half of [[FactBroadcastGuard]], injected as an AQE runtime
+  * optimizer rule. Once every leaf of a guarded join side is a materialized
+  * query stage, AQE knows the side's size instead of estimating it; a side
+  * measured at or under `spark.sql.adaptive.autoBroadcastJoinThreshold`
+  * (the cap Spark's planner applies to runtime statistics) loses the
+  * guard's mark, and AQE's ordinary join selection may then broadcast it.
+  * Only the sides in the join's [[FactBroadcastGuard.Marked]] tag are
+  * lifted, never a user's strategy hint or a NO_BROADCAST_HASH that
+  * DynamicJoinSelection added. Off with the guard
+  * (`spark.graft.optimizer.factBroadcastGuard.enabled=false`). */
+object MeasuredBroadcastRule extends Rule[LogicalPlan] {
+
+  private def measuredUnder(p: LogicalPlan, cap: Long): Boolean =
+    p.collectLeaves().forall {
+      case q: LogicalQueryStage => q.isMaterialized
+      case _ => false
+    } && p.stats.sizeInBytes <= cap
+
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    if (!FactBroadcastGuard.enabled) return plan
+    val cap = conf.getConf(SQLConf.ADAPTIVE_AUTO_BROADCASTJOIN_THRESHOLD)
+      .getOrElse(conf.autoBroadcastJoinThreshold)
+    plan.transformUp {
+      case j: Join if j.getTagValue(FactBroadcastGuard.Marked).isDefined =>
+        val (ml, mr) = j.getTagValue(FactBroadcastGuard.Marked).get
+        val liftL = ml && measuredUnder(j.left, cap)
+        val liftR = mr && measuredUnder(j.right, cap)
+        if (!liftL && !liftR) j
+        else {
+          def lift(h: Option[HintInfo], yes: Boolean) =
+            if (yes) h.map(_.copy(strategy = None)) else h
+          val nj = j.copy(hint = JoinHint(lift(j.hint.leftHint, liftL),
+            lift(j.hint.rightHint, liftR)))
+          nj.copyTagsFrom(j)
+          // a lifted side is unmarked for good: a NO_BROADCAST_HASH that
+          // DynamicJoinSelection puts there later is AQE's own decision
+          val still = (ml && !liftL, mr && !liftR)
+          if (still == ((false, false))) nj.unsetTagValue(FactBroadcastGuard.Marked)
+          else nj.setTagValue(FactBroadcastGuard.Marked, still)
+          nj
+        }
     }
   }
 }
@@ -218,10 +312,7 @@ object EagerAggregationRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private def otherSideWontBroadcast(p: LogicalPlan, hint: Option[HintInfo],
       facts: Set[String]): Boolean =
-    !steeringHint(hint) &&
-      (hint.exists(_.strategy.contains(NO_BROADCAST_HASH)) ||
-        FactBroadcastGuard.scalesWithFact(p, facts) ||
-        p.stats.sizeInBytes > conf.autoBroadcastJoinThreshold)
+    !steeringHint(hint) && !FactBroadcastGuard.broadcastsStatically(p, hint, facts)
 
   /** The fact side already grouped on exactly these keys (this rule's own
     * output, or a user pre-aggregate) — nothing left to collapse. */
@@ -305,6 +396,7 @@ object EagerAggregationRule extends Rule[LogicalPlan] with PredicateHelper {
 
     val newJoin =
       if (factIsLeft) join.copy(left = pushed) else join.copy(right = pushed)
+    newJoin.copyTagsFrom(join) // the guard's marks ride along
     val newResult = agg.aggregateExpressions.map(_.transform {
       case ae: AggregateExpression if partials.contains(ae.canonicalized) =>
         val (aliases, rebuild) = partials(ae.canonicalized)
@@ -504,6 +596,7 @@ object BloomPrefilterRule extends Rule[LogicalPlan] with PredicateHelper {
     // recovers the canonical form the counter indexed — transformUp
     // rewrites inner joins before outer probe checks run
     lazy val occ = occurrences(plan)
+    lazy val facts = FactBroadcastGuard.factNames
     def stripBloomFilters(p: LogicalPlan): LogicalPlan = p.transformUp {
       case Filter(cond, child) if cond.exists {
             case _: BlockBloomMightContainBytes => true
@@ -539,14 +632,10 @@ object BloomPrefilterRule extends Rule[LogicalPlan] with PredicateHelper {
           // broadcast threshold or is fact-scaled (the guard rule blocks
           // its broadcast).
           def creationOk(p: LogicalPlan, bytes: BigInt,
-              h: Option[HintInfo]): Boolean = {
-            val willBroadcast =
-              h.exists(_.strategy.contains(BROADCAST)) ||
-                (bytes <= conf.autoBroadcastJoinThreshold &&
-                  !FactBroadcastGuard.scalesWithFact(p, FactBroadcastGuard.factNames))
+              h: Option[HintInfo]): Boolean =
             !hasBloomProbe(p) && selectiveFilterOverScan(p) &&
-              bytes <= maxCreationBytes && !willBroadcast
-          }
+              bytes <= maxCreationBytes &&
+              !FactBroadcastGuard.broadcastsStatically(p, h, facts)
           def probeOk(p: LogicalPlan, bytes: BigInt, other: BigInt,
               h: Option[HintInfo]): Boolean =
             isProbeChain(p) && !isShared(p) && !hasBloomProbe(p) &&

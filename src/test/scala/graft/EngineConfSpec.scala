@@ -20,7 +20,9 @@ class EngineConfSpec extends AnyFunSuite {
       // Spark's own default: the session leaves it unset
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "128",
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "16",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (32L << 20).toString)
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (32L << 20).toString,
+      // the one cap for a join side AQE has measured (q14-derived, 8 MB)
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> (8L << 20).toString)
     expected.foreach { case (k, v) => assert(conf.get(k) == v, s"$k") }
   }
 

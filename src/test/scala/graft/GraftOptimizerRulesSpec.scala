@@ -71,16 +71,24 @@ class GraftOptimizerRulesSpec extends AnyFunSuite {
     }
   }
 
+  /** AQE may broadcast a fact side it has MEASURED at or under this cap
+    * (MeasuredBroadcastSpec), and every side of this small fixture
+    * measures under the session's cap; a one-byte cap makes the final plan
+    * show the guard holding above the cap. */
+  private val belowFixtureSides = "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "1"
+
   test("un-hinted q3 SQL never broadcasts a fact side (guard rule)") {
     registerViews()
-    val plan = executed(spark.sql(q3Sql))
-    val factKeys = Seq("c_custkey", "o_custkey", "o_orderkey", "l_orderkey")
-    val offending = plan.linesIterator
-      .filter(_.contains("BroadcastHashJoin"))
-      .filter(l => factKeys.exists(k => l.contains(s"[$k#")))
-      .toSeq
-    assert(offending.isEmpty,
-      s"fact-key broadcast in un-hinted SQL:\n${offending.mkString("\n")}\n$plan")
+    withConfs(belowFixtureSides) {
+      val plan = executed(spark.sql(q3Sql))
+      val factKeys = Seq("c_custkey", "o_custkey", "o_orderkey", "l_orderkey")
+      val offending = plan.linesIterator
+        .filter(_.contains("BroadcastHashJoin"))
+        .filter(l => factKeys.exists(k => l.contains(s"[$k#")))
+        .toSeq
+      assert(offending.isEmpty,
+        s"fact-key broadcast in un-hinted SQL:\n${offending.mkString("\n")}\n$plan")
+    }
   }
 
   test("dim joins still broadcast under the guard (nation is not a fact)") {
@@ -100,21 +108,23 @@ class GraftOptimizerRulesSpec extends AnyFunSuite {
     val t = Tables(spark, dir)
     val sliver = graft.ops.Caches.lease(
       t.lineitem.filter(col("l_quantity") > 45).select("l_orderkey", "l_quantity"))
-    try {
-      sliver.count() // materialize so the substituted plan is a live cache
-      val joined = t.orders.join(sliver, col("o_orderkey") === col("l_orderkey"))
-      val plan = executed(joined)
-      assert(!plan.contains("BroadcastHashJoin"),
-        s"a LEASED fact sliver must not broadcast without a hint:\n$plan")
-      // a leased DIM sliver stays broadcast-able (provenance, not cache
-      // state, is what the guard keys on)
-      val dimSliver = graft.ops.Caches.lease(
-        t.supplier.filter(col("s_nationkey") =!= 99).select("s_suppkey", "s_name"))
-      dimSliver.count()
-      val dimJoin = t.orders.join(dimSliver, col("o_custkey") === col("s_suppkey"))
-      assert(executed(dimJoin).contains("BroadcastHashJoin"),
-        "a leased non-fact sliver should still broadcast")
-    } finally graft.ops.Caches.releaseAll(blocking = true)
+    withConfs(belowFixtureSides) {
+      try {
+        sliver.count() // materialize so the substituted plan is a live cache
+        val joined = t.orders.join(sliver, col("o_orderkey") === col("l_orderkey"))
+        val plan = executed(joined)
+        assert(!plan.contains("BroadcastHashJoin"),
+          s"a LEASED fact sliver must not broadcast without a hint:\n$plan")
+        // a leased DIM sliver stays broadcast-able (provenance, not cache
+        // state, is what the guard keys on)
+        val dimSliver = graft.ops.Caches.lease(
+          t.supplier.filter(col("s_nationkey") =!= 99).select("s_suppkey", "s_name"))
+        dimSliver.count()
+        val dimJoin = t.orders.join(dimSliver, col("o_custkey") === col("s_suppkey"))
+        assert(executed(dimJoin).contains("BroadcastHashJoin"),
+          "a leased non-fact sliver should still broadcast")
+      } finally graft.ops.Caches.releaseAll(blocking = true)
+    }
   }
 
   test("explicit user broadcast hint overrides the fact guard") {

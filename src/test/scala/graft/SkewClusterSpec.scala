@@ -21,6 +21,19 @@ class SkewClusterSpec extends AnyFunSuite {
       (10L, 10L), (11L, 10L)))
   }
 
+  test("clusters fails loudly when labels still change at the round cap") {
+    // a 64-node path needs several pointer-jumping rounds; one round
+    // leaves labels moving, and two rounds do not finish it either
+    val path = (1L until 64L).map(i => (i, i + 1)).toDF("a", "b")
+    Seq(1, 2).foreach { cap =>
+      val e = intercept[IllegalStateException](Dedup.clusters(path, "a", "b", maxIter = cap))
+      assert(e.getMessage.contains(s"maxIter = $cap") && e.getMessage.contains("labels"),
+        e.getMessage)
+    }
+    val got = Dedup.clusters(path, "a", "b").select("cluster").distinct().as[Long].collect()
+    assert(got.toSeq == Seq(1L))
+  }
+
   test("dedupLines drops corpus-frequent lines, keeps order, drops all-boilerplate docs") {
     // banner in all 5 docs (df=5 ≥ 3); "promo" in 3 docs (df=3 ≥ 3);
     // unique bodies survive. Doc 4 is banner+promo only → disappears.
