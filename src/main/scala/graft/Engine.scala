@@ -93,6 +93,9 @@ object Engine {
         // stages) — same tier-(c) stack as the as-of join: Catalyst owns
         // the exchange via the node's required distribution
         ext.injectPlannerStrategy(_ => graft.plans.SinglePassStrategy)
+        // the range two-pass under global rank and the global as-of join:
+        // one range exchange below it, both passes in the action
+        ext.injectPlannerStrategy(_ => graft.plans.RangeTwoPassStrategy)
         // 100 TB plan intelligence for USER-written (un-hinted) queries:
         // never broadcast a fact-scaled side, and bloom-prefilter the
         // probe side of selective equi-joins (plans/GraftOptimizerRules)

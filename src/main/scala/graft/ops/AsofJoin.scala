@@ -1,13 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-import graft.plans.AsofJoinNode
+import graft.plans.{AsofJoinNode, RangeTwoPass, TwoPassKernels}
 
 /** As-of (nearest-key) join — the reference's largest custom join operator
   * (`src/daft-logical-plan/src/ops/asof_join.rs:74-87`,
@@ -26,8 +27,13 @@ import graft.plans.AsofJoinNode
   *    `Engine.session` injects, as [[SinglePass]] does; `Graft.session`
   *    and the test session both build on it, and a session built without
   *    it cannot plan the join.
-  *  - without by-keys it runs a range-partitioned two-pass ([[global]]),
-  *    which never collapses to one partition.
+  *  - without by-keys it plans the range two-pass
+  *    [[graft.plans.RangeTwoPassNode]] ([[global]]), the node under
+  *    [[Global.withGlobalRank]] too: one range exchange at the session's
+  *    shuffle width, both passes in the action (building or explaining
+  *    the frame runs no job), and it never collapses to one partition. It
+  *    needs the strategy `Engine.session` injects, like the by-key node.
+  *    Its output columns are all nullable.
   *
   * Both shapes order and compare the on-key as [[onMicros]] normalises it,
   * and take their match from [[choose]].
@@ -47,6 +53,8 @@ object AsofJoin {
 
   /** The normalised on-key column both sides carry into the merge. */
   private val T = "__graft_t"
+  /** The side tag of the two-pass union: 0 left, 1 right. */
+  private val Side = "__graft_side"
 
   /** The on-key as a `LongType` ordering key: epoch µs for timestamps and
     * dates, the raw value for integral types. */
@@ -133,106 +141,60 @@ object AsofJoin {
     Bridge.ofRows(left.sparkSession, Project(out, node))
   }
 
-  /** The join without by-keys, distributed over a range partitioning
-    * (SURVEY §7.3 hard-part #1). `l` and `r` end with the on-key column:
+  /** The join without by-keys, on the range two-pass
+    * [[graft.plans.RangeTwoPassNode]] (SURVEY §7.3 hard-part #1). `l` and
+    * `r` end with the on-key column t:
     *
-    *  1. Range-partition the union of both sides on the on-key, sorted
-    *     within partitions — co-locates every left row with the right rows
-    *     of its key range.
-    *  2. First pass computes per-partition right-row boundary summaries
-    *     (earliest/latest right row of each partition) — N_partitions rows
-    *     collected to the driver (tiny) and broadcast back.
-    *  3. Second pass merges each partition with the carried-in neighbor
-    *     rows, so backward matches before the partition's first right row,
-    *     forward matches after its last, and nearest across boundaries are
-    *     all exact.
+    *  1. Range-partition the union of both sides on t, sorted within
+    *     partitions by t and, at equal t, the right rows first —
+    *     co-locates every left row with the right rows of its key range.
+    *  2. Pass 1 summarizes each partition as its first and last right row
+    *     (null when it has none).
+    *  3. Pass 2 is a STREAMING two-pointer merge — never materialized. A
+    *     left row's backward candidate is the last right row before it; it
+    *     buffers only until the next right row, its forward candidate, so
+    *     peak memory is the left-row count between two consecutive right
+    *     rows — not the partition. The carry-ins (the last right row of the
+    *     partitions before, the first of those after) make backward matches
+    *     before the partition's first right row, forward matches after its
+    *     last, and nearest across boundaries all exact: range partitioning
+    *     puts equal t values in one partition, so they lie strictly outside
+    *     the local key range. Null-t left rows sort first and resolve at
+    *     once to no match.
     */
   private def global(l: DataFrame, r: DataFrame, strategy: Strategy,
       toleranceMicros: Option[Long]): DataFrame = {
-    val spark = l.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val lFields = l.schema.fields.init
-    val rFields = r.schema.fields.init
-    val nLeft = lFields.length
-    val outSchema = StructType(lFields ++ rFields.map(_.copy(nullable = true)))
-
-    // tag sides and align schemas: (t, side, leftFields..., rightFields...)
-    def nulls(fs: Seq[StructField]) = fs.map(f => lit(null).cast(f.dataType).as(f.name))
-    def cols(fs: Seq[StructField]) = fs.map(f => col(f.name))
-    val lTagged = l.select((Seq(col(T), lit(0).as("__graft_side")) ++ cols(lFields) ++ nulls(rFields)): _*)
-    val rTagged = r.select((Seq(col(T), lit(1).as("__graft_side")) ++ nulls(lFields) ++ cols(rFields)): _*)
-    val union = lTagged.unionByName(rTagged)
-      .repartitionByRange(parts, col(T))
-      .sortWithinPartitions(T, "__graft_side")
-    val unionDs = union.as(Encoders.row(union.schema))
-
-    // pass 1: per-partition first/last RIGHT rows (whole tagged rows)
-    val summaries: Array[(Int, Row, Row)] = unionDs.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        var first: Row = null
-        var last: Row = null
-        it.foreach { r =>
-          if (r.getInt(1) == 1) { if (first == null) first = r; last = r }
+    // one layout for both sides, each row null in the other side's
+    // columns: (leftFields..., t, side, rightFields...)
+    val union = l.withColumn(Side, lit(0))
+      .unionByName(r.withColumn(Side, lit(1)), allowMissingColumns = true)
+    val reads = Bridge.analyzedPlan(union).output.drop(l.schema.size - 1) // t, side, rights
+    RangeTwoPass(union, Seq(col(T)), Seq(col(T), col(Side).desc), reads, (child, ords) =>
+      new TwoPassKernels[(InternalRow, InternalRow)] {
+        private val (t, side, w) = (ords(0), ords(1), child.size)
+        val filled = ords.drop(2).toSet // the right columns, from the match
+        def summarize(rows: Iterator[InternalRow]) = rows.filter(_.getInt(side) == 1).map(_.copy())
+          .foldLeft((null: InternalRow, null: InternalRow)) { case ((first, _), r) => (Option(first).getOrElse(r), r) }
+        def emit(pid: Int, summaries: IndexedSeq[(InternalRow, InternalRow)], rows: Iterator[InternalRow]) = {
+          var back = summaries.take(pid).reverseIterator.map(_._2).find(_ != null).orNull
+          val after = summaries.drop(pid + 1).iterator.map(_._1).find(_ != null).orNull
+          val pending = scala.collection.mutable.Queue.empty[InternalRow]
+          val (joined, nullRow) = (new JoinedRow, new GenericInternalRow(w))
+          def resolve(l: InternalRow, back: InternalRow, fwd: InternalRow): InternalRow = {
+            val pick = if (l.isNullAt(t)) -1 else choose(strategy, toleranceMicros, l.getLong(t),
+              back != null, if (back != null) back.getLong(t) else 0L,
+              fwd != null, if (fwd != null) fwd.getLong(t) else 0L)
+            joined(l, if (pick == 0) back else if (pick == 1) fwd else nullRow)
+          }
+          rows.flatMap { r =>
+            if (r.getInt(side) == 1) {
+              val (lefts, prior, fwd) = (pending.removeAll(), back, r.copy())
+              back = fwd
+              lefts.iterator.map(resolve(_, prior, fwd))
+            } else if (r.isNullAt(t)) Iterator.single(joined(r, nullRow))
+            else { pending += r.copy(); Iterator.empty }
+          } ++ pending.iterator.map(resolve(_, back, after)) // by-name: once the rows run out
         }
-        if (first == null) Iterator.empty else Iterator((pid, first, last))
-      }
-      .collect()
-    val bcSummaries = spark.sparkContext.broadcast(summaries)
-    val strat = strategy
-    val tol = toleranceMicros
-
-    // STREAMING two-pointer merge: partitions arrive already sorted by
-    // (t, side) — never materialized. A left row buffers only until the
-    // first STRICTLY-later right row arrives (equal-t rights must all be
-    // seen first: backward is an inclusive bound and forward/nearest pick
-    // the last equal-t right), so peak memory is the left-row count
-    // between two consecutive right rows — not the partition (the r6
-    // `it.toArray` spike). Range partitioning puts equal t values in one
-    // partition, so carry-ins are strictly outside the local key range.
-    // Null-t left rows sort first and resolve at once to no match.
-    val merged = unionDs.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val sums = bcSummaries.value
-      val before = sums.filter(_._1 < pid).sortBy(_._1).lastOption.map(_._3)
-      val after = sums.filter(_._1 > pid).sortBy(_._1).headOption.map(_._2)
-      val nullRight = Seq.fill(rFields.length)(null)
-
-      def resolve(l: Row, back: Row, fwd: Row): Row = {
-        val side = if (l.isNullAt(0)) -1 else choose(strat, tol, l.getLong(0),
-          back != null, if (back != null) back.getLong(0) else 0L,
-          fwd != null, if (fwd != null) fwd.getLong(0) else 0L)
-        Row.fromSeq(l.toSeq.slice(2, 2 + nLeft) ++ (side match {
-          case 0 => back.toSeq.drop(2 + nLeft)
-          case 1 => fwd.toSeq.drop(2 + nLeft)
-          case _ => nullRight
-        }))
-      }
-
-      val pending = new scala.collection.mutable.ArrayDeque[Row]()
-      var lastRight: Row = before.orNull
-      val body = it.flatMap { row =>
-        if (row.getInt(1) == 1) {
-          val tR = row.getLong(0)
-          // lefts strictly older than this right are final (pending is in
-          // ascending t order — resolve the prefix); equal-t lefts wait
-          // for possible later equal-t rights
-          val back = lastRight
-          lastRight = row
-          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-          while (pending.nonEmpty && pending.head.getLong(0) < tR)
-            out += resolve(pending.removeHead(), back, row)
-          out.iterator
-        } else if (row.isNullAt(0)) Iterator.single(resolve(row, null, null))
-        else {
-          pending += row
-          Iterator.empty
-        }
-      }
-      val tail = Iterator.single(()).flatMap { _ =>
-        val fwd = after.orNull
-        pending.iterator.map(l => resolve(l, lastRight, fwd))
-      }
-      body ++ tail
-    }
-    spark.createDataFrame(merged, outSchema)
+      }).drop(T, Side)
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.metric.SQLMetrics
 
 import graft.ops.AsofJoin
 
@@ -64,6 +65,9 @@ case class AsofJoinExec(
 
   override def output: Seq[Attribute] = left.output ++ right.output.map(_.withNullability(true))
 
+  override lazy val metrics = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
   override def outputPartitioning = left.outputPartitioning
 
   // co-partition both sides on the by-keys; EnsureRequirements inserts the
@@ -91,6 +95,7 @@ case class AsofJoinExec(
     val strat = strategy
     val tol = toleranceMicros
     val outAttrs = output
+    val numOut = longMetric("numOutputRows")
 
     left.execute().zipPartitions(right.execute()) { (lIt, rIt) =>
       val lKeyProj = UnsafeProjection.create(lByBound)
@@ -135,6 +140,7 @@ case class AsofJoinExec(
             AsofJoin.choose(strat, tol, t, j > 0, if (j > 0) rTimes(j - 1) else 0L,
               j < rs.length, if (j < rs.length) rTimes(j) else 0L)
           }
+          numOut += 1
           resultProj(joined(lRow, if (side >= 0) rs(j - 1 + side) else nullRight))
         }
       }

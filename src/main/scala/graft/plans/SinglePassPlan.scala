@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expre
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, HashPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.SQLMetrics
 
 /** Planner-integrated single-pass per-partition aggregation (OPTIMIZATION
   * r15) — the plan-node form of "repartition by key, then aggregate in ONE
@@ -70,6 +71,9 @@ case class SinglePassAggExec(
 
   override def nodeName: String = s"SinglePassAgg($label)"
 
+  override lazy val metrics = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+
   override def producedAttributes: AttributeSet = AttributeSet(output)
 
   // every row of a key group must be partition-local; the exchange (when
@@ -96,11 +100,12 @@ case class SinglePassAggExec(
   protected override def doExecute(): RDD[InternalRow] = {
     val k = kernel
     val types = output.map(_.dataType).toArray
+    val numOut = longMetric("numOutputRows")
     child.execute().mapPartitions { it =>
       // operators above (exchange serializers in particular) expect
       // UnsafeRow; kernels emit GenericInternalRow for simplicity
       val proj = UnsafeProjection.create(types)
-      k(it).map(proj)
+      k(it).map { r => numOut += 1; proj(r) }
     }
   }
 

@@ -18,6 +18,11 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Block until the listener bus has delivered every posted event (a
+    * listener counting jobs reads a settled count after it). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** The analyzed logical plan backing a Dataset. */
   def analyzedPlan(df: Dataset[_]): LogicalPlan = df.queryExecution.analyzed
 

@@ -254,8 +254,8 @@ class TpcdsPlanSpec extends AnyFunSuite {
     // the reference's rank() OVER (ORDER BY ...) is the single-partition
     // WindowExec trap at item-grain cardinality — the plan must contain
     // NO window and no SinglePartition exchange; the three ranked
-    // channels arrive as Global.withGlobalRank RDD scans under a
-    // TakeOrdered final page
+    // channels arrive as Global.withGlobalRank's RangeTwoPass nodes under
+    // a TakeOrdered final page
     val p = plan("tpcds_return_rank")
     assert(!p.contains("Window"), s"global ranks must not use WindowExec:\n$p")
     assert(!p.contains("Exchange SinglePartition"),
