@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -104,7 +104,11 @@ object AsofJoin {
       strategy: Strategy = Backward,
       toleranceMicros: Option[Long] = None): DataFrame = {
     require(leftBy.size == rightBy.size, "leftBy and rightBy must align")
-    val dupNames = left.columns.toSet.intersect(right.columns.toSet) -- rightBy.toSet
+    // names compare as the session resolves them: `ID` and `id` clash
+    // unless spark.sql.caseSensitive is set
+    val caseSensitive = left.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean
+    def names(cols: Seq[String]) = cols.map(c => if (caseSensitive) c else c.toLowerCase(java.util.Locale.ROOT)).toSet
+    val dupNames = names(left.columns).intersect(names(right.columns)) -- names(rightBy)
     require(
       dupNames.isEmpty || rightBy.toSet.nonEmpty,
       s"ambiguous output columns: $dupNames — rename right-side columns first")
@@ -171,15 +175,28 @@ object AsofJoin {
     val reads = Bridge.analyzedPlan(union).output.drop(l.schema.size - 1) // t, side, rights
     RangeTwoPass(union, Seq(col(T)), Seq(col(T), col(Side).desc), reads, (child, ords) =>
       new TwoPassKernels[(InternalRow, InternalRow)] {
-        private val (t, side, w) = (ords(0), ords(1), child.size)
+        private val t = ords(0)
+        private val side = ords(1)
         val filled = ords.drop(2).toSet // the right columns, from the match
-        def summarize(rows: Iterator[InternalRow]) = rows.filter(_.getInt(side) == 1).map(_.copy())
-          .foldLeft((null: InternalRow, null: InternalRow)) { case ((first, _), r) => (Option(first).getOrElse(r), r) }
+
+        def summarize(rows: Iterator[InternalRow]) = {
+          // each right row goes into one reused buffer; only the first is copied
+          val keep = UnsafeProjection.create(child.map(_.dataType).toArray)
+          var first: InternalRow = null
+          var last: InternalRow = null
+          for (r <- rows if r.getInt(side) == 1) {
+            if (first == null) first = r.copy()
+            last = keep(r)
+          }
+          (first, last)
+        }
+
         def emit(pid: Int, summaries: IndexedSeq[(InternalRow, InternalRow)], rows: Iterator[InternalRow]) = {
           var back = summaries.take(pid).reverseIterator.map(_._2).find(_ != null).orNull
           val after = summaries.drop(pid + 1).iterator.map(_._1).find(_ != null).orNull
           val pending = scala.collection.mutable.Queue.empty[InternalRow]
-          val (joined, nullRow) = (new JoinedRow, new GenericInternalRow(w))
+          val joined = new JoinedRow
+          val nullRow = new GenericInternalRow(child.size)
           def resolve(l: InternalRow, back: InternalRow, fwd: InternalRow): InternalRow = {
             val pick = if (l.isNullAt(t)) -1 else choose(strategy, toleranceMicros, l.getLong(t),
               back != null, if (back != null) back.getLong(t) else 0L,
@@ -188,11 +205,18 @@ object AsofJoin {
           }
           rows.flatMap { r =>
             if (r.getInt(side) == 1) {
-              val (lefts, prior, fwd) = (pending.removeAll(), back, r.copy())
+              // the pending lefts lie between the last right row and this one
+              val lefts = pending.removeAll()
+              val prior = back
+              val fwd = r.copy()
               back = fwd
               lefts.iterator.map(resolve(_, prior, fwd))
-            } else if (r.isNullAt(t)) Iterator.single(joined(r, nullRow))
-            else { pending += r.copy(); Iterator.empty }
+            } else if (r.isNullAt(t)) {
+              Iterator.single(joined(r, nullRow))
+            } else {
+              pending += r.copy()
+              Iterator.empty
+            }
           } ++ pending.iterator.map(resolve(_, back, after)) // by-name: once the rows run out
         }
       }).drop(T, Side)

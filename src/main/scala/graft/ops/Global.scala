@@ -43,15 +43,30 @@ object Global {
     val reads = Bridge.analyzedPlan(withOuts.select((outs ++ runningSumOf.map(_._1)).map(col): _*)).output
     RangeTwoPass(withOuts, orderCols, orderCols, reads, (child, ords) => new TwoPassKernels[(Long, Long)] {
       val filled = ords.take(outs.size).toSet
-      private val Seq(rank, sum, in) = ords.padTo(3, -1)
+      private val rank = ords(0)
+      private val sum = if (runningSumOf.isDefined) ords(1) else -1
+      private val in = if (runningSumOf.isDefined) ords(2) else -1
       private def value(r: InternalRow) = if (in < 0 || r.isNullAt(in)) 0L else r.getLong(in)
-      def summarize(rows: Iterator[InternalRow]) =
-        rows.foldLeft((0L, 0L)) { case ((n, s), r) => (n + 1, s + value(r)) }
+
+      def summarize(rows: Iterator[InternalRow]) = {
+        var n = 0L
+        var s = 0L
+        for (r <- rows) {
+          n += 1
+          s += value(r)
+        }
+        (n, s)
+      }
+
       def emit(pid: Int, summaries: IndexedSeq[(Long, Long)], rows: Iterator[InternalRow]) = {
-        var (n, s) = (summaries.take(pid).map(_._1).sum, summaries.take(pid).map(_._2).sum)
-        val (fill, joined) = (new GenericInternalRow(child.size), new JoinedRow)
+        // the rows and the sum of the partitions before this one
+        var n = summaries.take(pid).map(_._1).sum
+        var s = summaries.take(pid).map(_._2).sum
+        val fill = new GenericInternalRow(child.size)
+        val joined = new JoinedRow
         rows.map { r =>
-          n += 1; s += value(r)
+          n += 1
+          s += value(r)
           fill.setLong(rank, n)
           if (sum >= 0) fill.setLong(sum, s)
           joined(r, fill)

@@ -18,10 +18,9 @@ import graft.ops.{AsofJoin, Curate, ExecMetrics, Global, Tokenize}
   * local[4]: 3 + 1 per rank or as-of call, 4 + 1 for the vocabulary,
   * 21 + 1 for `tpcds_return_rank`'s six ranks, 4 + 8 for
   * `tokenize_roundtrip`), so the lazy plan may move jobs into the action
-  * but not add any — with one exception: `tokenize_roundtrip` uses one
-  * vocabulary frame twice, under two broadcasts keyed differently, and
-  * each copy runs its own pass 1 (one small job more); its range shuffle
-  * must still run once, the second copy reusing the first's exchange. */
+  * but not add any. `tokenize_roundtrip` uses one vocabulary frame twice,
+  * under two broadcasts keyed differently: its range shuffle runs once,
+  * the second copy reusing the first's exchange, and so does pass 1. */
 class JobsAtBuildSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   private val dir = TestSpark.sfDir
@@ -62,7 +61,7 @@ class JobsAtBuildSpec extends AnyFunSuite {
         .select(col("event_id").as("p_event_id"), col("ts").as("p_ts")),
       "ts", "p_ts"), 4),
     ("tpcds_return_rank", () => SparkEntry.queries("tpcds_return_rank")(spark, dir), 22),
-    ("tokenize_roundtrip", () => SparkEntry.queries("tokenize_roundtrip")(spark, dir), 12 + 1))
+    ("tokenize_roundtrip", () => SparkEntry.queries("tokenize_roundtrip")(spark, dir), 12))
 
   for ((name, build, budget) <- cases)
     test(s"$name: no job at build or explain, at most $budget in the action") {

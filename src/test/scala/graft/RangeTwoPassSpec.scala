@@ -69,6 +69,29 @@ class RangeTwoPassSpec extends AnyFunSuite {
       want.as[(Long, Long)].collect().toSet)
   }
 
+  test("no constraint of a placeholder survives the node: filters and joins on the rank see the real ranks") {
+    // the fixture's order keys run 0, 1, 2, ..., so k1 is the rank by key
+    val input = orders.withColumn("k1", col("o_orderkey") + 1)
+    val byKey = Seq(col("o_orderkey").asc)
+    val ranked = Global.withGlobalRank(input, byKey, "rk", Some(("v", "run")))
+    val want = input.withColumn("rk", row_number().over(Window.orderBy(byKey: _*)).cast("long"))
+      .withColumn("run", sum(col("v")).over(Window.orderBy(byKey: _*)))
+    val ids = spark.range(1, 51).toDF("id")
+    def rows(df: DataFrame) = df.select("o_orderkey", "rk", "run").as[(Long, Long, Long)].collect().toSet
+    val queries: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "rk === k1" -> (_.filter(col("rk") === col("k1"))),
+      "run === v" -> (_.filter(col("run") === col("v"))),
+      "join on rk" -> (_.join(ids, col("rk") === col("id"))))
+    val wrong = queries.collect { case (name, q) if rows(q(ranked)) != rows(q(want)) => name }
+    assert(queries.forall { case (_, q) => rows(q(want)).nonEmpty })
+    assert(wrong.isEmpty, s"differ from the Window: $wrong")
+  }
+
+  test("a global as-of join rejects a right column that differs from a left one only in case") {
+    val clash = right.withColumnRenamed("rid", "LID")
+    intercept[IllegalArgumentException](AsofJoin.join(left, clash, "lt", "rt"))
+  }
+
   test("numOutputRows on the three custom execs") {
     val keyed = (0 until 1000).map(i => ((i % 10).toLong, i.toLong)).toDF("k", "v")
     val cases = Seq(
