@@ -2,8 +2,10 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
@@ -365,7 +367,7 @@ object Bench {
     * across reps) from host weather (same fingerprint, 2× the time), and
     * its scans count how often each table is read (r12: q15/q17 silently
     * computed their expensive subtree twice). */
-  private final class PlanCapture extends QueryExecutionListener {
+  private[graft] final class PlanCapture extends QueryExecutionListener {
     @volatile var last: SparkPlan = null
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
       last = qe.executedPlan
@@ -419,6 +421,10 @@ object Bench {
   private def gcMs(): Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime).filter(_ > 0).sum
+  /** JVM-global Janino compiles (count, ns): a rep that recompiles code a
+    * warm session should reuse shows as a nonzero delta. */
+  private def codegenCompiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  private def codegenCompileNs(): Long = CodeGenerator.compileTime
   private def processCpuMs(): Long =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
       case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime / 1000000L
@@ -586,6 +592,7 @@ object Bench {
       val dir = dirOf(k)
       metrics.stages.clear(); planCap.last = null
       val (jit0, gc0, cpu0) = (jitMs(), gcMs(), processCpuMs())
+      val (cc0, cns0) = (codegenCompiles(), codegenCompileNs())
       val (steal0, iow0) = hostStat()
       val t = System.nanoTime()
       val ok =
@@ -603,7 +610,7 @@ object Bench {
       val bw = bwGbps()
       Thread.sleep(500) // let the listener bus drain task-end events
       val (steal1, iow1) = hostStat()
-      stageLog.write(f"""{"q":"$name","tier":"${tierLabel(k)}","dir":"$dir","sec":$sec%.2f,"ok":$ok,"fp":"${planCap.fingerprint()}","jit_ms":${jitMs() - jit0},"gc_ms":${gcMs() - gc0},"cpu_ms":${processCpuMs() - cpu0},"steal_ms":${steal1 - steal0},"iowait_ms":${iow1 - iow0},"calib_sec":$calib%.3f,"bw_gbps":$bw%.1f,"scans":${planCap.scansJson()},"joins":${planCap.joinsJson()},${metrics.json(8)}}""" + "\n")
+      stageLog.write(f"""{"q":"$name","tier":"${tierLabel(k)}","dir":"$dir","sec":$sec%.2f,"ok":$ok,"fp":"${planCap.fingerprint()}","jit_ms":${jitMs() - jit0},"gc_ms":${gcMs() - gc0},"compiles":${codegenCompiles() - cc0},"compile_ms":${(codegenCompileNs() - cns0) / 1000000L},"cpu_ms":${processCpuMs() - cpu0},"steal_ms":${steal1 - steal0},"iowait_ms":${iow1 - iow0},"calib_sec":$calib%.3f,"bw_gbps":$bw%.1f,"scans":${planCap.scansJson()},"joins":${planCap.joinsJson()},${metrics.json(8)}}""" + "\n")
       stageLog.flush()
       // outside the timer: a full GC makes ContextCleaner release the
       // rep's now-unreferenced shuffle files immediately (its own

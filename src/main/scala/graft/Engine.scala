@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Session factory + table loaders for the graft engine.
   *
@@ -75,6 +76,24 @@ object Engine {
     * (The sliver measures 2.28 MB at k=10 and 22.8 MB at k=100 of
     * `graft.Bench`'s sf0.1-based tiers.) */
   private[graft] val measuredBroadcastCap: Long = 8L << 20
+
+  /** Entries of Spark's JVM-wide cache of Janino-compiled classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). Measured working
+    * set on perfbench (SF 0.1, 4 cores): a `tpch` pass compiles about 205
+    * distinct whole-stage and projection classes, an `llm_pipeline` run
+    * about 330 (15 warm-up + 283 in pass 0 + at most 16 per later pass).
+    * Under 100 entries the LRU thrashes, and every `tpch` pass recompiled
+    * all 205 classes (1.6–2.0 s per pass). The cap is the smallest power
+    * of two at least twice the largest pass, not a per-workload tuning. An
+    * entry retains about 18–23 KB of heap, so the cache holds at most about
+    * 20 MB.
+    *
+    * A static conf: `CodeGenerator` reads it once per JVM, when its object
+    * initialises, so [[session]] initialises it right after building the
+    * session. The first session of the JVM sizes the cache for every later
+    * one; code generated before any `Engine.session` (a session built
+    * elsewhere) leaves Spark's 100. */
+  private[graft] val codegenCacheEntries: Int = 1024
 
   /** Build a tuned local session. On a cluster the same config block applies
     * minus `master`. */
@@ -182,6 +201,7 @@ object Engine {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", measuredBroadcastCap.toString)
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
@@ -189,6 +209,9 @@ object Engine {
       // timestamp — read as long (ns since epoch), Tables.events converts.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
+    // sizes the codegen cache from this session's conf (active on this
+    // thread), not from whichever thread compiles first
+    CodeGenerator.compileTime
     spark.sparkContext.setLogLevel("WARN")
     registerSqlUdfs(spark)
     spark

@@ -76,6 +76,10 @@ case class SinglePassAggExec(
 
   override def producedAttributes: AttributeSet = AttributeSet(output)
 
+  // the kernel closure prints as a JVM identity that changes every run
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(keys, requiredNumPartitions, output, label, keyPreserving)
+
   // every row of a key group must be partition-local; the exchange (when
   // one is needed) is Catalyst's, so AQE sizing applies where the caller
   // didn't pin a width

@@ -22,7 +22,9 @@ class EngineConfSpec extends AnyFunSuite {
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "16",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (32L << 20).toString,
       // the one cap for a join side AQE has measured (q14-derived, 8 MB)
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> (8L << 20).toString)
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> (8L << 20).toString,
+      // the codegen cache sized to the measured compile working set
+      "spark.sql.codegen.cache.maxEntries" -> "1024")
     expected.foreach { case (k, v) => assert(conf.get(k) == v, s"$k") }
   }
 
